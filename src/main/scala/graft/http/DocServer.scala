@@ -2,9 +2,12 @@ package graft.http
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.streaming.TableState
 
 /** Thin HTTP serving layer over the §2.12 document DataFrames — the
   * reference's mongoose REST surface (`main/stream_procs_api_http.c:86-302`,
@@ -30,10 +33,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`psi_thr` 1 s refresh); here the batch relations ARE that state, so
   * one materialization per instance is the equivalent read path. Call
   * [[DocServer#refresh]] to drop the memo (the PUT/reconfigure analog).
+  *
+  * A live server ([[DocServer.startLive]]) answers program_processors
+  * from `live`, the streaming PSI register: the document is rendered
+  * once per micro-batch by the compose query, so a GET returns the
+  * latest published string and runs no Spark job.
   */
 final class DocServer private (
     s: SparkSession, d: String, val server: HttpServer,
-    live: Boolean = false) {
+    live: Option[AtomicReference[TableState.Register]] = None) {
 
   import DocServer._
 
@@ -70,18 +78,6 @@ final class DocServer private (
     }
   }
 
-  /** Live program_processors document: one JSON doc per program from
-    * the streaming PSI register, version numbers included (a version
-    * bump must be VISIBLE in the document, not just in state). */
-  private def liveProgramsDoc(): DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.streaming.TableState.programsWithVersions(s, d)
-      .orderBy("program_number")
-      .select(to_json(struct(col("program_number"),
-        col("reference_pid"), col("pat_version"), col("pcr_pid"),
-        col("n_es"), col("pmt_version"))).as("doc"))
-  }
-
   private def envelope(code: Int, status: String, message: String): String =
     graft.operators.Relational.envelopeFmt.format(code, status, message)
 
@@ -104,14 +100,18 @@ final class DocServer private (
           body(ex, 200, doc("ts10")(
             graft.operators.TsQueries.ts10InstanceDoc(s, d).select("doc")))
         case ("GET", ProgramProcs(id)) if id == instanceId || id == "0" =>
-          // live mode serves the STREAMING-maintained register (`d` is
-          // the register path): the memo is dropped by the compose
-          // query's onUpdate hook on every landed batch, so a GET one
-          // trigger after a version bump reads the new table — no
-          // manual refresh (the psi_thr 1 s convergence contract)
-          if (live) body(ex, 200, doc("live9[]")(liveProgramsDoc()))
-          else body(ex, 200, doc("ts9[]")(
-            graft.operators.TsQueries.ts9ProgramProcDoc(s, d).select("doc")))
+          // live mode serves the document the compose query published
+          // with the landed batch, so a GET one trigger after a version
+          // bump reads the new table (the psi_thr 1 s convergence
+          // contract); nothing is published before the first table
+          live match {
+            case Some(reg) => Option(reg.get) match {
+              case Some(r) => body(ex, 200, r.programsDoc)
+              case None => body(ex, 404, envelope(404, "Not Found", "error"))
+            }
+            case None => body(ex, 200, doc("ts9[]")(
+              graft.operators.TsQueries.ts9ProgramProcDoc(s, d).select("doc")))
+          }
         case ("GET", EsProcs(id)) if id == instanceId || id == "0" =>
           body(ex, 200, doc("ts11[]")(
             graft.operators.TsQueries.ts11EsProcDoc(s, d).select("doc")))
@@ -183,34 +183,41 @@ object DocServer {
     case _ => Unknown
   }
 
-  /** Bind and start on `port` (0 = ephemeral, for tests). */
-  def start(s: SparkSession, d: String, port: Int = 0): DocServer = {
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    val srv = new DocServer(s, d, http)
-    http.createContext("/", (ex: HttpExchange) => srv.handle(ex))
-    http.setExecutor(null) // serve on the dispatcher thread
-    http.start()
+  /** A loopback JDK server on `port` (0 = ephemeral, for tests) with
+    * Nagle's algorithm off. The JDK server writes the headers and the
+    * body of a response as separate segments; with Nagle on, the body
+    * waits for the client's delayed ACK, about 40 ms per response. The
+    * JDK reads the property once, when its first server is created. */
+  private[http] def bind(port: Int): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
+
+  private def serve(srv: DocServer): DocServer = {
+    srv.server.createContext("/", (ex: HttpExchange) => srv.handle(ex))
+    srv.server.setExecutor(null) // serve on the dispatcher thread
+    srv.server.start()
     srv
   }
 
+  /** Bind and start on `port` (0 = ephemeral, for tests). */
+  def start(s: SparkSession, d: String, port: Int = 0): DocServer =
+    serve(new DocServer(s, d, bind(port)))
+
   /** Live mode: serve against STREAMING state. The completed-table
-    * stream composes into `registerPath` (R4/R5), and every landed
-    * batch drops the server's document memo via the compose hook — so
-    * a GET issued one trigger after a PAT/PMT version bump returns the
-    * rebuilt document without any manual `refresh()` call. Returns the
-    * server and the running compose query (caller stops both). */
+    * stream composes into an in-memory register (R4/R5,
+    * [[TableState.composeToRegister]]) that publishes the programs
+    * document with every landed batch, so a GET issued one trigger
+    * after a PAT/PMT version bump returns the new document without any
+    * manual `refresh()` call. The other routes read `d`, as in
+    * [[start]]; nothing is written under it. Returns the server and the
+    * running compose query (caller stops both). */
   def startLive(s: SparkSession,
-      tables: org.apache.spark.sql.Dataset[
-        graft.streaming.TableState.CompleteTable],
-      registerPath: String, port: Int = 0)
+      tables: org.apache.spark.sql.Dataset[TableState.CompleteTable],
+      d: String, port: Int = 0)
       : (DocServer, org.apache.spark.sql.streaming.StreamingQuery) = {
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    val srv = new DocServer(s, registerPath, http, live = true)
-    http.createContext("/", (ex: HttpExchange) => srv.handle(ex))
-    http.setExecutor(null)
-    http.start()
-    val q = graft.streaming.TableState.composeToRegister(
-      tables, registerPath, onUpdate = () => srv.refresh())
-    (srv, q)
+    val register = new AtomicReference[TableState.Register]()
+    val srv = serve(new DocServer(s, d, bind(port), Some(register)))
+    (srv, TableState.composeToRegister(tables, register))
   }
 }

@@ -1,6 +1,5 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.DriverManager
 
@@ -173,8 +172,7 @@ object DocStoreServer {
   /** Bind and start on `port` (0 = ephemeral, for tests). */
   def start(s: SparkSession, jdbcUrl: String, port: Int = 0)
       : DocStoreServer = {
-    val http =
-      HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val http = DocServer.bind(port)
     val srv = new DocStoreServer(s, jdbcUrl, http)
     http.createContext("/", (ex: HttpExchange) => srv.handle(ex))
     http.setExecutor(null)

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.ts.PsiSection
+import graft.ts.{PsiCodec, PsiSection}
 
 /** R3+R4 as a streaming operator (`psi_table_dec.c:59-205`,
   * `psi_proc.c:329-397`): per (pid, tableId, extension), collect sections
@@ -11,7 +13,9 @@ import graft.ts.PsiSection
   * *different* version discards the in-flight collection ("parsing new
   * version", `psi_table_dec.c:164`); `current_next=0` sections are
   * skipped (`psi_dec.c:180-185`); a complete table is emitted once per
-  * distinct version. */
+  * distinct version. R5 keeps the latest complete table per key in an
+  * in-memory register ([[composeToRegister]]), from which the live
+  * programs document is rendered once per micro-batch. */
 object TableState {
 
   case class TableKey(pid: Int, tableId: Int, tableIdExtension: Int)
@@ -44,91 +48,86 @@ object TableState {
     } else (Some(b1), None)
   }
 
+  /** One published snapshot of the live register: the latest complete
+    * table per key, and the programs document rendered from exactly
+    * those tables. */
+  final case class Register(tables: Map[TableKey, CompleteTable],
+      programsDoc: String)
+
+  /** One program of the live document: a PAT entry joined with the PMT
+    * that carries its program number, with the version each table
+    * currently serves (a version bump must be visible in the document,
+    * not just in the state key). PMT fields are empty until that PMT
+    * has completed. */
+  final case class Program(programNumber: Int, referencePid: Int,
+      patVersion: Int, pcrPid: Option[Int], nEs: Option[Long],
+      pmtVersion: Option[Int])
+
   /** R5 streaming — the reference's 1 Hz `compose_pat_and_pmt`
-    * (`mpeg2_sp.c:1484-1558`) as a snapshot composer: each micro-batch of
-    * newly-completed tables updates a keyed register (foreachBatch +
-    * idempotent upsert), and the programs-summary join runs over the
-    * register — state composition OUTSIDE the stream, exactly like the
-    * psi_thr register swap. Returns the query; read summaries from
-    * `registerPath` with `summarizeRegister`. `onUpdate` fires after
-    * every non-empty batch lands — the hook a serving layer uses to
-    * drop its document memo, so a GET one trigger after a version
-    * bump reads the new table (the reference's `psi_thr` ~1 s
-    * convergence contract, `mpeg2_sp.c:78-81`). */
+    * (`mpeg2_sp.c:1484-1558`) as a snapshot composer: the register lives
+    * in driver memory, like the `psi_thr` register swap. Each micro-batch
+    * runs its plan once, as one `collect()` of the newly completed
+    * tables; they fold in arrival order into the previous snapshot's map
+    * (so a 31→0 version wrap inside one batch serves 0), the programs
+    * document is rendered once, and map and document are published
+    * together through `register`. The stream thread is the only writer,
+    * so a reader always sees a whole snapshot; `register` stays null
+    * until the first table lands. */
   def composeToRegister(tables: Dataset[CompleteTable],
-      registerPath: String, onUpdate: () => Unit = () => ())
+      register: AtomicReference[Register])
       : org.apache.spark.sql.streaming.StreamingQuery =
     tables.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[CompleteTable], _: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          // replace-by-key: one row per (pid, tableId, ext) — the latest
-          // version wins inside the batch; cross-batch wins by overwrite
-          val latest = batch.toDF()
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy("pid", "tableId", "tableIdExtension")
-                .orderBy(col("versionNumber").desc)))
-            .filter(col("rn") === 1).drop("rn")
-            .withColumn("table_key",
-              concat_ws("_", col("pid"), col("tableId"),
-                col("tableIdExtension")))
-          graft.sinks.Sinks.upsertByKey(latest, "table_key", registerPath)
-          onUpdate()
+        val landed = batch.collect()
+        if (landed.nonEmpty) {
+          val prev = Option(register.get).fold(
+            Map.empty[TableKey, CompleteTable])(_.tables)
+          val next = landed.foldLeft(prev) { (m, t) =>
+            m.updated(TableKey(t.pid, t.tableId, t.tableIdExtension), t)
+          }
+          register.set(Register(next, programsDoc(programs(next))))
         }
         ()
       }
       .start()
 
-  /** Programs-summary join over the register written by
-    * `composeToRegister` (PAT rows ⋈ PMT ES counts). */
-  def summarizeRegister(spark: org.apache.spark.sql.SparkSession,
-      registerPath: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val reg = spark.read.parquet(registerPath)
-      .select(col("pid"), col("tableId"), col("tableIdExtension"),
-        col("versionNumber"), col("sectionBytes"))
-      .as[(Int, Int, Int, Int, Seq[Array[Byte]])]
-    val pats = reg.filter(_._2 == 0).flatMap { case (pid, _, _, _, secs) =>
-      secs.flatMap(b => graft.ts.PsiCodec.decodeSection(pid, 0, b).toSeq
-        .flatMap(graft.ts.PsiCodec.decodePat))
-    }.toDF("program_number", "reference_pid")
-    val pmts = reg.filter(_._2 == 2).flatMap { case (pid, _, _, _, secs) =>
-      secs.flatMap(b => graft.ts.PsiCodec.decodeSection(pid, 0, b).toSeq
-        .flatMap(s => graft.ts.PsiCodec.decodePmt(s).toSeq))
-        .map(p => (p.programNumber, p.pcrPid, p.es.length.toLong))
-    }.toDF("program_number", "pcr_pid", "n_es")
-    pats.filter(col("program_number") =!= 0)
-      .join(pmts, Seq("program_number"), "left")
+  /** PAT entries ⋈ PMT programs over a register's tables, by program
+    * number (left join: a program whose PMT has not completed keeps its
+    * PAT fields only), ordered by program number. */
+  def programs(tables: Map[TableKey, CompleteTable]): Seq[Program] = {
+    def sections(tableId: Int): Seq[(Int, PsiSection)] = for {
+      t <- tables.values.toSeq
+        .sortBy(t => (t.pid, t.tableId, t.tableIdExtension))
+      if t.tableId == tableId
+      b <- t.sectionBytes
+      s <- PsiCodec.decodeSection(t.pid, 0, b)
+    } yield (t.versionNumber, s)
+    val pmts = (for {
+      (v, s) <- sections(0x02)
+      p <- PsiCodec.decodePmt(s)
+    } yield p.programNumber -> (p.pcrPid, p.es.length.toLong, v))
+      .groupMap(_._1)(_._2)
+    (for {
+      (v, s) <- sections(0x00)
+      r <- PsiCodec.decodePat(s) if r.programNumber != 0
+      pmt <- pmts.get(r.programNumber)
+        .fold(Seq(Option.empty[(Int, Long, Int)]))(_.map(Some(_)))
+    } yield Program(r.programNumber, r.referencePid, v, pmt.map(_._1),
+      pmt.map(_._2), pmt.map(_._3))).sortBy(_.programNumber)
   }
 
-  /** [[summarizeRegister]] plus the PMT VERSION each program currently
-    * serves — the live-serving document shape: a version bump in the
-    * stream must be visible in the next GET, so the version is part of
-    * the document, not just the state key. */
-  def programsWithVersions(spark: org.apache.spark.sql.SparkSession,
-      registerPath: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val reg = spark.read.parquet(registerPath)
-      .select(col("pid"), col("tableId"), col("tableIdExtension"),
-        col("versionNumber"), col("sectionBytes"))
-      .as[(Int, Int, Int, Int, Seq[Array[Byte]])]
-    val pats = reg.filter(_._2 == 0).flatMap { case (pid, _, _, v, secs) =>
-      secs.flatMap(b => graft.ts.PsiCodec.decodeSection(pid, 0, b).toSeq
-        .flatMap(graft.ts.PsiCodec.decodePat))
-        .map(p => (p.programNumber, p.referencePid, v))
-    }.toDF("program_number", "reference_pid", "pat_version")
-    val pmts = reg.filter(_._2 == 2).flatMap { case (pid, _, _, v, secs) =>
-      secs.flatMap(b => graft.ts.PsiCodec.decodeSection(pid, 0, b).toSeq
-        .flatMap(s => graft.ts.PsiCodec.decodePmt(s).toSeq))
-        .map(p => (p.programNumber, p.pcrPid, p.es.length.toLong, v))
-    }.toDF("program_number", "pcr_pid", "n_es", "pmt_version")
-    pats.filter(col("program_number") =!= 0)
-      .join(pmts, Seq("program_number"), "left")
-  }
+  /** The live program_processors document: one JSON object per program,
+    * fields in a fixed order, empty fields omitted. */
+  def programsDoc(ps: Seq[Program]): String =
+    ps.map { p =>
+      Seq("program_number" -> Some(p.programNumber),
+        "reference_pid" -> Some(p.referencePid),
+        "pat_version" -> Some(p.patVersion), "pcr_pid" -> p.pcrPid,
+        "n_es" -> p.nEs, "pmt_version" -> p.pmtVersion)
+        .collect { case (k, Some(v)) => s""""$k":$v""" }
+        .mkString("{", ",", "}")
+    }.mkString("[", ",", "]")
 
   def latestTablesStream(secs: Dataset[PsiSection])
       : Dataset[CompleteTable] = {

@@ -62,8 +62,8 @@ class LiveDocServerSpec extends SparkSuite {
       assert(sec1.crcOk && sec1.versionNumber == v1)
       mem.addData(Seq(sec1))
       q.processAllAvailable()
-      // no srv.refresh() here — the compose hook must have dropped the
-      // memo; the next GET rebuilds from the updated register
+      // no srv.refresh() here — the landed batch must have published
+      // the new document from the updated register
       val r1 = get(srv.port,
         "/api/1.0/stream_procs/mpeg2_sp-0/program_processors")
       assert(r1.statusCode() == 200)

@@ -19,8 +19,9 @@ import graft.ts.{EsEntry, PsiCodec, PsiSection}
   * p50/p99 land on stderr and in COVERAGE.md. The streaming query
   * runs its own micro-batch loop (no processAllAvailable on the
   * measured path), so the number includes trigger scheduling, the
-  * state update, the register upsert and the document rebuild —
-  * the full serving path a deployment's SLO covers. */
+  * state update and the in-memory register publish (fold and document
+  * render, once per landed batch) — the full serving path a
+  * deployment's SLO covers. */
 class LiveLatencySpec extends SparkSuite {
 
   private lazy val client = HttpClient.newHttpClient()
@@ -78,10 +79,12 @@ class LiveLatencySpec extends SparkSuite {
         f"[z33] trigger-to-visible over ${lat.size} bumps: " +
           f"p50=$p50%.0f ms p99=$p99%.0f ms " +
           f"(min=${sorted.head}%.0f, mean=${lat.sum / lat.size}%.0f)")
-      // the reference's contract is 1 s convergence — measured p50 on
-      // an idle box is ~0.7 s (micro-batch scheduling dominates). The
-      // gate is deliberately looser (2.5 s) so a CPU-contended test
-      // host reports, not flakes; the measured number is the record.
+      // the reference's contract is 1 s convergence. A landed batch is
+      // one collect and a GET runs no Spark job, so the trigger itself
+      // dominates the number: planning plus the state-store commits of
+      // the two stateful operators. The gate is deliberately looser
+      // (2.5 s) so a CPU-contended test host reports, not flakes; the
+      // measured number is the record.
       assert(p50 < 2500.0, f"p50 $p50%.0f ms far outside the PSI SLO")
     } finally { q.stop(); srv.stop() }
   }
