@@ -122,6 +122,9 @@ object Graph {
     pageRankOfAdj(pin(adjOf(edges)), k)
 
   private[graft] def pageRankOfAdj(adj: DataFrame, k: Int): DataFrame = {
+    // the fused loop seeds round 1 unconditionally, so there is no
+    // zero-round (uniform base vector) result to return
+    require(k >= 1, s"k=$k: PageRank needs at least one round")
     val n = adj.count() // the only driver-side value: |V|, a scalar
     val base = Scale / n
     val teleport = (15L * base) / 100L

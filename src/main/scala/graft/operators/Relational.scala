@@ -689,7 +689,7 @@ object Relational {
     * user from 30-min inactivity gaps, then aggregate per session. Two
     * ordered windows + one groupBy, all partitioned by user_id: one shuffle
     * on the user key, bounded per-key state, no global ordering anywhere.
-    * Batch analog of the timer-driven sessionization in streaming.TwsOps
+    * Batch analog of the streaming `StreamingOps.sessionize`
     * (reference: inter-packet-arrival session split, `ts_dec.c:98-172`). */
   def w8SessionAgg(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))

@@ -571,6 +571,11 @@ object Similarity {
       codesOpt: Option[DataFrame] = None)
       : DataFrame = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
+    // codes come from pqCodesRel, whose memo key does not carry the
+    // (m, ks, dim) it was encoded with: only its own parameters fit
+    require(codesOpt.isEmpty || (m, ks, dim) == (8, 16, 64),
+      s"precomputed PQ codes are (m, ks, dim) = (8, 16, 64), " +
+        s"not ($m, $ks, $dim)")
     val sub = dim / m
     val centroids = centroidsOf(emb, k)
     val assigned =

@@ -7,11 +7,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
 
 /** Structured Streaming operators (SURVEY §2.5/§2.13): the same pure
-  * per-key state machines as the batch path, hosted in
-  * `flatMapGroupsWithState`. The reference's thread/FIFO topology
-  * (`mpeg2_sp.c:1303-1482`) collapses into these keyed stateful maps —
-  * Spark owns scheduling, backpressure and state storage (RocksDB/HDFS
-  * state store at cluster scale).
+  * per-key state machines as the batch path. The reference's thread/FIFO
+  * topology (`mpeg2_sp.c:1303-1482`) collapses into these keyed stateful
+  * maps — Spark owns scheduling, backpressure and state storage.
+  *
+  * This is the one streaming host of section assembly (R2), CC audit
+  * (R1) and sessionization (R6), as [[TableState.latestTablesStream]] is
+  * of table versioning (R3+R4): `flatMapGroupsWithState`, which runs on
+  * the session's default state store (HDFS-backed locally, RocksDB at
+  * cluster scale if configured), so the live chain needs no provider
+  * switch. The replay-only machines of the parity rows live in
+  * [[TwsOps]] on `transformWithState`, the only place that switches the
+  * session to the RocksDB store.
   */
 object StreamingOps {
 

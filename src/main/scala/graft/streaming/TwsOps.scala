@@ -1,190 +1,111 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming._
 
-import graft.ts.{PsiSection, SectionAssembler, TsPacket}
-
-/** R2 hosted on `transformWithState` (Spark 4's successor to
-  * `flatMapGroupsWithState`): the identical pure state machine, with
-  * state in a typed `ValueState` — this is the API the engine migrates
-  * to as `flatMapGroupsWithState` ages out, and it requires the RocksDB
-  * state store (`spark.sql.streaming.stateStore.providerClass`). */
+/** The replay-only keyed state machines, hosted on `transformWithState`
+  * (Spark 4's typed-state successor to `flatMapGroupsWithState`), and
+  * the one harness that replays a lake through them for the
+  * stream ≡ batch parity rows.
+  *
+  * Which host serves which machine: the live TS chain's machines —
+  * section assembly (R2), CC audit (R1), table versioning (R3+R4) — and
+  * event-time sessionization (R6) have exactly one host,
+  * `flatMapGroupsWithState` in [[StreamingOps]] and [[TableState]]. That
+  * host runs on the session's default state store, so the live chain
+  * needs no provider switch. The machines here (near-dup buckets, packing, funnel,
+  * retention, interpolation, CDC, SCD2, attribution, intervals, EWMA,
+  * Page–Hinkley, median, CAS and chunk-store ingest) have no second
+  * host; they use `transformWithState`'s typed `ValueState`/`MapState`/
+  * `ListState`, which requires the RocksDB state store — [[replay]]
+  * switches it on for the life of one replay query. */
 object TwsOps {
 
-  class SectionProcessor
-      extends StatefulProcessor[Int, TsPacket, PsiSection] {
-    @transient private var state: ValueState[SectionAssembler.State] = _
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SectionAssembler.State](
-        "asm", Encoders.product[SectionAssembler.State],
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[TsPacket],
-        timerValues: TimerValues): Iterator[PsiSection] = {
-      var st = Option(state.get()).getOrElse(SectionAssembler.initialState)
-      val out = Vector.newBuilder[PsiSection]
-      rows.toArray.sortBy(_.seq).foreach { p =>
-        val (next, emitted) = SectionAssembler.step(st, p)
-        st = next
-        out ++= emitted
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
-  def sectionsTws(pkts: Dataset[TsPacket]): Dataset[PsiSection] = {
-    import pkts.sparkSession.implicits._
-    pkts
-      .groupByKey(_.pid)
-      .transformWithState(new SectionProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** R1 on transformWithState: per-PID continuity audit, last CC in a
-    * typed ValueState (`ts_dec.c:98-172` policy: log-and-continue). */
-  class CcProcessor
-      extends StatefulProcessor[Int, TsPacket, StreamingOps.CcError] {
-    @transient private var state: ValueState[StreamingOps.CcState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[StreamingOps.CcState](
-        "cc", Encoders.product[StreamingOps.CcState], TTLConfig.NONE)
-
-    override def handleInputRows(pid: Int, rows: Iterator[TsPacket],
-        timerValues: TimerValues): Iterator[StreamingOps.CcError] = {
-      var last = Option(state.get()).map(_.lastCc).getOrElse(-1)
-      val out = Vector.newBuilder[StreamingOps.CcError]
-      rows.toArray.sortBy(_.seq).foreach { p =>
-        val disc = p.af.exists(_.discontinuity)
-        if (last >= 0 && !disc && ((last + 1) % 16) != p.cc)
-          out += StreamingOps.CcError(pid, p.seq, (last + 1) % 16, p.cc)
-        last = p.cc
-      }
-      state.update(StreamingOps.CcState(last))
-      out.result().iterator
-    }
-  }
-
-  def ccAuditTws(pkts: Dataset[TsPacket])
-      : Dataset[StreamingOps.CcError] = {
-    import pkts.sparkSession.implicits._
-    pkts
-      .filter(p => p.hasPayload && p.pid != graft.ts.TsCodec.NullPid)
-      .groupByKey(_.pid)
-      .transformWithState(new CcProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** R3+R4 on transformWithState: per-(pid, tableId, extension) version
-    * collection with new-version supersession — the same pure
-    * `TableState.step` fold as the flatMapGroupsWithState host. The state
-    * encoder rejects MapType, so the section map is flattened to parallel
-    * sequences for storage. */
-  case class FlatBuf(version: Int, last: Int,
-      nums: Seq[Int], blobs: Seq[Array[Byte]])
-
-  private def toFlat(b: TableState.Buf): FlatBuf = {
-    val (nums, blobs) = b.sections.toSeq.unzip
-    FlatBuf(b.version, b.last, nums, blobs)
-  }
-  private def fromFlat(f: FlatBuf): TableState.Buf =
-    TableState.Buf(f.version, f.last, f.nums.zip(f.blobs).toMap)
-
-  class TableProcessor extends StatefulProcessor[
-      TableState.TableKey, PsiSection, TableState.CompleteTable] {
-    @transient private var state: ValueState[FlatBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FlatBuf](
-        "buf", Encoders.product[FlatBuf], TTLConfig.NONE)
-
-    override def handleInputRows(key: TableState.TableKey,
-        rows: Iterator[PsiSection], timerValues: TimerValues)
-        : Iterator[TableState.CompleteTable] = {
-      var buf = Option(state.get()).map(fromFlat)
-      var emittedVersions = Set.empty[Int]
-      val out = Vector.newBuilder[TableState.CompleteTable]
-      rows.toArray.sortBy(_.firstSeq).foreach { sec =>
-        val wasComplete = buf.exists(b =>
-          b.version == sec.versionNumber && b.sections.size == b.last + 1)
-        val (next, emitted) = TableState.step(buf, sec)
-        buf = next
-        emitted.foreach { t =>
-          if (!wasComplete && !emittedVersions.contains(t.versionNumber)) {
-            out += t
-            emittedVersions += t.versionNumber
-          }
+  /** The one MemoryStream replay behind every parity row: `rows`, already
+    * in replay order, go through `op` as `batches` equal micro-batches
+    * (the last one may be short), then `tail` as one more micro-batch
+    * (interp's EOF flush); returns every row the memory sink received.
+    *
+    * For the life of the query the session runs the RocksDB state store
+    * and `max(1, min(prior, rows/64))` shuffle partitions. Every
+    * micro-batch runs one stateful task per shuffle partition, each
+    * opening its own state store, so a 60-chunk replay at 32 partitions
+    * paid 32 store opens per micro-batch (m13b at sf0.1: ~8.7 s → ~2 s
+    * once sized to the data). Emissions are per key, so partitioning
+    * changes where rows are emitted, never which.
+    *
+    * Plan construction and `start()` sit inside the `try`: on every exit
+    * path the query stops, its sink view is dropped, and both confs go
+    * back to what they were, set or unset — a failed start never leaves
+    * the replay's provider or partitioning in the session.
+    *
+    * MemoryStream is driver-fed by design, so the input collect is
+    * replay plumbing bounded to the Verify SF; the operator under test
+    * (keyed state inside the stream) stays distributed. */
+  private[streaming] def replay[I: Encoder, O: Encoder](s: SparkSession,
+      rows: Seq[I], batches: Int, tail: Seq[I] = Seq.empty)(
+      op: Dataset[I] => Dataset[O]): Seq[O] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val mem = MemoryStream[I]
+    val name = s"replay_${java.util.UUID.randomUUID()
+      .toString.replace("-", "")}"
+    val explicitConfs = s.conf.getAll
+    val parts = math.max(1L,
+      math.min(s.conf.get(PartitionsKey).toLong, rows.length / 64L))
+    var q: StreamingQuery = null
+    try {
+      s.conf.set(ProviderKey, "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")
+      s.conf.set(PartitionsKey, parts)
+      q = op(mem.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      (rows.grouped(math.max(1, rows.length / batches)) ++
+          Iterator(tail).filter(_.nonEmpty))
+        .foreach { g => mem.addData(g: _*); q.processAllAvailable() }
+      s.table(name).as[O].collect().toSeq
+    } finally {
+      if (q != null) q.stop()
+      s.catalog.dropTempView(name)
+      Seq(ProviderKey, PartitionsKey).foreach { k =>
+        explicitConfs.get(k) match {
+          case Some(v) => s.conf.set(k, v)
+          case None => s.conf.unset(k)
         }
       }
-      buf.map(toFlat).foreach(state.update)
-      out.result().iterator
     }
   }
 
-  def latestTablesTws(secs: Dataset[PsiSection])
-      : Dataset[TableState.CompleteTable] = {
-    import secs.sparkSession.implicits._
-    secs
-      .groupByKey(s =>
-        TableState.TableKey(s.pid, s.tableId, s.tableIdExtension))
-      .transformWithState(new TableProcessor,
-        TimeMode.None(), OutputMode.Append())
+  /** A documents dir as doc_id-ordered (doc_id, text). */
+  private def docsOf(s: SparkSession, d: String): Seq[(Long, String)] = {
+    import s.implicits._
+    graft.Tables.documents(s, d).select("doc_id", "text")
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
   }
 
-  /** R6 on transformWithState with EVENT-TIME TIMERS — the reference's
-    * disassociated-processor purge (`mpeg2_sp.c:125-131,872-875`) as true
-    * timer-driven state expiry: each key keeps one timer at
-    * lastSeen + gap; new data moves the timer (delete + re-register);
-    * when the watermark passes it, `handleExpiredTimer` closes the
-    * session and clears the key — the state store never accumulates dead
-    * keys, which is the property that matters at 8192-PID / million-key
-    * scale. */
-  case class TimedSession(startMicros: Long, lastMicros: Long, n: Int,
-      expiryMs: Long)
+  /** [[docsOf]] with each doc stamped at a fixed epoch + doc_id ms, the
+    * event time the watermarked document streams need. */
+  private def stampedDocsOf(s: SparkSession, d: String)
+      : Seq[(Long, String, java.sql.Timestamp)] =
+    docsOf(s, d).map { case (id, t) =>
+      (id, t, new java.sql.Timestamp(1704067200000L + id)) }
 
-  class SessionProcessor(gapMs: Long) extends StatefulProcessor[
-      Long, (Long, java.sql.Timestamp), StreamingOps.ClosedSession] {
-    @transient private var state: ValueState[TimedSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TimedSession](
-        "sess", Encoders.product[TimedSession], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long,
-        rows: Iterator[(Long, java.sql.Timestamp)],
-        timerValues: TimerValues)
-        : Iterator[StreamingOps.ClosedSession] = {
-      val times = rows.map(_._2.getTime * 1000L).toArray.sorted
-      if (times.isEmpty) return Iterator.empty
-      val prev = Option(state.get())
-      val st = prev match {
-        case Some(s) => TimedSession(s.startMicros,
-          math.max(s.lastMicros, times.last), s.n + times.length,
-          s.expiryMs)
-        case None =>
-          TimedSession(times.head, times.last, times.length, 0L)
-      }
-      val expiry = st.lastMicros / 1000L + gapMs
-      prev.filter(_.expiryMs > 0).foreach { s =>
-        if (s.expiryMs != expiry) getHandle.deleteTimer(s.expiryMs)
-      }
-      getHandle.registerTimer(expiry)
-      state.update(st.copy(expiryMs = expiry))
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(userId: Long,
-        timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo)
-        : Iterator[StreamingOps.ClosedSession] = {
-      val out = Option(state.get()).map { s =>
-        StreamingOps.ClosedSession(userId, s.startMicros, s.lastMicros, s.n)
-      }
-      state.clear()
-      out.iterator
-    }
+  /** The events dir's per-(event_type, day) revenue in cents, day-ordered
+    * — the input of the EWMA and Page–Hinkley replays. */
+  private def dailyRevenueOf(s: SparkSession, d: String)
+      : Seq[(String, Long, Long)] = {
+    import s.implicits._
+    graft.Tables.events(s, d)
+      .selectExpr("event_type", "unix_micros(ts) div 86400000000 as day",
+        "cast(floor(value * 100 + 0.5) as bigint) as cents")
+      .groupBy("event_type", "day")
+      .agg(org.apache.spark.sql.functions.sum("cents").as("x"))
+      .as[(String, Long, Long)]
+      .collect().sortBy(e => (e._2, e._1)).toSeq
   }
 
   /** Streaming NEAR-dup (the continuous-ingest analog of t7): each
@@ -236,7 +157,7 @@ object TwsOps {
     }
   }
 
-  def nearDupDocsStream(docsWithTs: org.apache.spark.sql.DataFrame)
+  def nearDupDocsStream(docsWithTs: DataFrame)
       : Dataset[(Long, Long, java.sql.Timestamp)] = {
     import docsWithTs.sparkSession.implicits._
     import org.apache.spark.sql.functions._
@@ -286,49 +207,14 @@ object TwsOps {
   /** Deterministic multi-batch replay of a documents dir through
     * [[nearDupDocsStream]], returning the emitted DISTINCT pair set —
     * the Verify-time producer behind the t25 parity row (OpLake dumps
-    * it; the batch `lshCandidatesOf` relation must hash-match it).
-    * MemoryStream is driver-fed by design, so the corpus collect here
-    * is replay PLUMBING bounded to the Verify SF — the operator under
-    * test (bucket state inside transformWithState) stays distributed. */
-  def nearDupReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 4): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    * it; the batch `lshCandidatesOf` relation must hash-match it). */
+  def nearDupReplay(s: SparkSession, d: String,
+      batches: Int = 4): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val docs = graft.Tables.documents(s, d)
-      .select("doc_id", "text").as[(Long, String)]
-      .collect().sortBy(_._1)
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val name = s"neardup_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    // transformWithState requires the RocksDB provider; the conf is
-    // captured at query start, so scope it to this replay and restore
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = nearDupDocsStream(mem.toDS().toDF("doc_id", "text", "ts"))
-      .toDF("doc_a", "doc_b", "ts")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val pairs =
-      try {
-        val base = 1704067200000L
-        docs.grouped(math.max(1, docs.length / batches)).foreach { g =>
-          mem.addData(g.toSeq.map { case (id, t) =>
-            (id, t, new java.sql.Timestamp(base + id)) }: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).select("doc_a", "doc_b").distinct()
-          .as[(Long, Long)].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    pairs.toDF("doc_a", "doc_b")
+    replay(s, stampedDocsOf(s, d), batches)(m =>
+        nearDupDocsStream(m.toDF("doc_id", "text", "ts"))
+          .map(p => (p._1, p._2)))
+      .distinct.toDF("doc_a", "doc_b")
   }
 
   /** Deterministic multi-batch replay of a documents dir through
@@ -340,35 +226,14 @@ object TwsOps {
     * encountered), so the parity contract is the deterministic part of
     * the semantics: the emitted text_hash multiset must equal the batch
     * corpus's distinct content set — exactly one emission per content,
-    * none lost, none duplicated across batches. Same plumbing bounds as
-    * [[nearDupReplay]]. */
-  def dedupReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 4): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    * none lost, none duplicated across batches. */
+  def dedupReplay(s: SparkSession, d: String,
+      batches: Int = 4): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val docs = graft.Tables.documents(s, d)
-      .select("doc_id", "text").as[(Long, String)]
-      .collect().sortBy(_._1)
-    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val name = s"dedup_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val q = graft.streaming.StreamingOps
-      .dedupDocsStream(mem.toDS().toDF("doc_id", "text", "ts"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val winners =
-      try {
-        val base = 1704067200000L
-        docs.grouped(math.max(1, docs.length / batches)).foreach { g =>
-          mem.addData(g.toSeq.map { case (id, t) =>
-            (id, t, new java.sql.Timestamp(base + id)) }: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).select("text_hash", "doc_id")
-          .as[(String, Long)].collect().toSeq
-      } finally q.stop()
-    winners.toDF("text_hash", "doc_id")
+    replay(s, stampedDocsOf(s, d), batches)(m =>
+        StreamingOps.dedupDocsStream(m.toDF("doc_id", "text", "ts"))
+          .select("text_hash", "doc_id").as[(String, Long)])
+      .toDF("text_hash", "doc_id")
   }
 
   // ---- streaming sequence packing (t29 = streaming t26) -------------
@@ -408,7 +273,7 @@ object TwsOps {
     }
   }
 
-  def packStreamTws(docs: org.apache.spark.sql.DataFrame,
+  def packStreamTws(docs: DataFrame,
       budget: Long = 2048L, nShards: Int = 8): Dataset[PackOut] = {
     import docs.sparkSession.implicits._
     docs
@@ -424,40 +289,12 @@ object TwsOps {
     * [[packStreamTws]] — the Verify-time producer behind the t29 parity
     * row: OpLake dumps the emitted rows, and the batch `t26Pack` result
     * must hash-match them (cross-batch offset state ≡ the batch prefix
-    * sum). Same plumbing bounds as [[nearDupReplay]]. */
-  def packReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    * sum). */
+  def packReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val docs = graft.Tables.documents(s, d)
-      .select("doc_id", "text").as[(Long, String)]
-      .collect().sortBy(_._1)
-    val mem = MemoryStream[(Long, String)]
-    val name = s"pack_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = packStreamTws(mem.toDS().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val rows =
-      try {
-        docs.grouped(math.max(1, docs.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[PackOut].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    rows.toDF()
+    replay(s, docsOf(s, d), batches)(m =>
+      packStreamTws(m.toDF("doc_id", "text"))).toDF()
   }
 
   // ---- streaming funnel (w13 = streaming w12) -----------------------
@@ -506,7 +343,7 @@ object TwsOps {
     }
   }
 
-  def funnelStreamTws(events: org.apache.spark.sql.DataFrame)
+  def funnelStreamTws(events: DataFrame)
       : Dataset[FunnelHit] = {
     import events.sparkSession.implicits._
     events.selectExpr("user_id", "event_type", "tsus")
@@ -520,44 +357,19 @@ object TwsOps {
     * through [[funnelStreamTws]] — the producer behind the w13 parity
     * row: OpLake dumps the completed-funnel rows (micros re-widened to
     * the same timestamps `Tables.events` serves), and batch
-    * `w12Funnel` must hash-match them. */
-  def funnelReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    * `w12Funnel` must hash-match them. Every events replay reads through
+    * `Tables.events`, which owns the parquet-ts-physical-type dispatch
+    * (nanos-long vs timestamp[us]); never read the file raw. */
+  def funnelReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // Tables.events owns the parquet-ts-physical-type dispatch
-    // (nanos-long vs timestamp[us]); never read the file raw here.
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "event_type", "unix_micros(ts) as tsus")
       .as[(Long, String, Long)]
-      .collect().sortBy(e => (e._3, e._1, e._2))
-    val mem = MemoryStream[(Long, String, Long)]
-    val name = s"funnel_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = funnelStreamTws(
-        mem.toDS().toDF("user_id", "event_type", "tsus"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val hits =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[FunnelHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    hits.toDF()
+      .collect().sortBy(e => (e._3, e._1, e._2)).toSeq
+    replay(s, ev, batches)(m =>
+        funnelStreamTws(m.toDF("user_id", "event_type", "tsus")))
+      .toDF()
       .selectExpr("user_id", "timestamp_micros(view_us) as t_view",
         "timestamp_micros(click_us) as t_click",
         "timestamp_micros(purchase_us) as t_purchase")
@@ -610,7 +422,7 @@ object TwsOps {
     }
   }
 
-  def retentionStreamTws(events: org.apache.spark.sql.DataFrame)
+  def retentionStreamTws(events: DataFrame)
       : Dataset[RetHit] = {
     import events.sparkSession.implicits._
     events.selectExpr("user_id", "tsus")
@@ -625,42 +437,15 @@ object TwsOps {
     * parity row: OpLake dumps the per-(user, day) emissions, and the
     * oracle aggregates them into the retention matrix that batch
     * `w15Retention` must hash-match. */
-  def retentionReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def retentionReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // Tables.events owns the parquet-ts-physical-type dispatch
-    // (nanos-long vs timestamp[us]); never read the file raw here.
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "unix_micros(ts) as tsus")
       .as[(Long, Long)]
-      .collect().sortBy(e => (e._2, e._1))
-    val mem = MemoryStream[(Long, Long)]
-    val name = s"retention_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = retentionStreamTws(mem.toDS().toDF("user_id", "tsus"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val hits =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[RetHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    hits.toDF()
+      .collect().sortBy(e => (e._2, e._1)).toSeq
+    replay(s, ev, batches)(m =>
+      retentionStreamTws(m.toDF("user_id", "tsus"))).toDF()
   }
 
   // ---- streaming interpolation (w43 = streaming w42) ----------------
@@ -743,7 +528,7 @@ object TwsOps {
     }
   }
 
-  def interpStreamTws(events: org.apache.spark.sql.DataFrame)
+  def interpStreamTws(events: DataFrame)
       : Dataset[InterpOut] = {
     import events.sparkSession.implicits._
     events.selectExpr("user_id", "tsus", "event_id", "cents")
@@ -760,46 +545,18 @@ object TwsOps {
     * stream≡batch interpolation parity (gaps spanning micro-batch
     * seams included). A final flush batch (event_id = -1 per user)
     * closes each user's last open day — the replay's EOF signal. */
-  def interpReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def interpReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "unix_micros(ts) as tsus", "event_id",
         "cast(cast(value as decimal(18,2)) * 100 as long) as cents")
       .as[(Long, Long, Long, Long)]
-      .collect().sortBy(e => (e._2, e._3))
-    val mem = MemoryStream[(Long, Long, Long, Long)]
-    val name = s"interp_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = interpStreamTws(
-      mem.toDS().toDF("user_id", "tsus", "event_id", "cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val outRows =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        val flush = ev.map(_._1).distinct
-          .map(u => (u, Long.MaxValue, -1L, 0L))
-        mem.addData(flush.toSeq: _*)
-        q.processAllAvailable()
-        s.table(name).as[InterpOut].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    outRows.toDF()
+      .collect().sortBy(e => (e._2, e._3)).toSeq
+    val flush = ev.map(_._1).distinct.map(u => (u, Long.MaxValue, -1L, 0L))
+    replay(s, ev, batches, flush)(m =>
+        interpStreamTws(m.toDF("user_id", "tsus", "event_id", "cents")))
+      .toDF()
   }
 
   // ---- streaming CDC merge (j12 = streaming j11) --------------------
@@ -850,7 +607,7 @@ object TwsOps {
     }
   }
 
-  def cdcStreamTws(events: org.apache.spark.sql.DataFrame)
+  def cdcStreamTws(events: DataFrame)
       : Dataset[CdcOut] = {
     import events.sparkSession.implicits._
     events
@@ -867,43 +624,18 @@ object TwsOps {
     * OpLake dump keeps every per-batch snapshot emission; the oracle
     * takes each user's latest `seq` and drops final-op-D keys, which
     * must hash-match batch `j11CdcMerge`. */
-  def cdcReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def cdcReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "unix_micros(ts) as tsus", "event_id",
         "event_type",
         "CAST(floor(value * 100 + 0.5) AS BIGINT) as value_cents")
       .as[(Long, Long, Long, String, Long)]
-      .collect().sortBy(e => (e._2, e._1, e._3))
-    val mem = MemoryStream[(Long, Long, Long, String, Long)]
-    val name = s"cdc_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = cdcStreamTws(mem.toDS()
-        .toDF("user_id", "tsus", "event_id", "event_type", "value_cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[CdcOut].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(e => (e._2, e._1, e._3)).toSeq
+    replay(s, ev, batches)(m => cdcStreamTws(m
+        .toDF("user_id", "tsus", "event_id", "event_type", "value_cents")))
+      .toDF()
   }
 
   // ---- streaming SCD2 (j13 = streaming j10, closed intervals) -------
@@ -950,7 +682,7 @@ object TwsOps {
     }
   }
 
-  def scd2StreamTws(events: org.apache.spark.sql.DataFrame)
+  def scd2StreamTws(events: DataFrame)
       : Dataset[ScdClosed] = {
     import events.sparkSession.implicits._
     events
@@ -965,42 +697,16 @@ object TwsOps {
     * [[scd2StreamTws]] — the producer behind the j13 parity row: the
     * dump holds every closed dimension row; batch j10's non-current
     * rows must hash-match it. */
-  def scd2Replay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def scd2Replay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "unix_micros(ts) as tsus", "event_id",
         "event_type")
       .as[(Long, Long, Long, String)]
-      .collect().sortBy(e => (e._2, e._1, e._3))
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val name = s"scd2_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = scd2StreamTws(mem.toDS()
-        .toDF("user_id", "tsus", "event_id", "event_type"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[ScdClosed].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(e => (e._2, e._1, e._3)).toSeq
+    replay(s, ev, batches)(m => scd2StreamTws(
+      m.toDF("user_id", "tsus", "event_id", "event_type"))).toDF()
   }
 
   // ---- streaming last-touch attribution (w23 = streaming w22) -------
@@ -1053,7 +759,7 @@ object TwsOps {
     }
   }
 
-  def attributionStreamTws(events: org.apache.spark.sql.DataFrame)
+  def attributionStreamTws(events: DataFrame)
       : Dataset[AttrHit] = {
     import events.sparkSession.implicits._
     events.selectExpr("user_id", "event_type", "tsus", "event_id", "cents")
@@ -1068,42 +774,17 @@ object TwsOps {
     * row: OpLake dumps the per-conversion attributions and batch
     * `w23AttributionDetail` (the window-max derivation) must
     * hash-match them. */
-  def attributionReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def attributionReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "event_type", "unix_micros(ts) as tsus",
         "event_id", "cast(floor(value * 100 + 0.5) as bigint) as cents")
       .as[(Long, String, Long, Long, Long)]
-      .collect().sortBy(e => (e._3, e._4))
-    val mem = MemoryStream[(Long, String, Long, Long, Long)]
-    val name = s"attr_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = attributionStreamTws(mem.toDS()
-        .toDF("user_id", "event_type", "tsus", "event_id", "cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[AttrHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(e => (e._3, e._4)).toSeq
+    replay(s, ev, batches)(m => attributionStreamTws(
+        m.toDF("user_id", "event_type", "tsus", "event_id", "cents")))
+      .toDF()
   }
 
   // ---- streaming interval islands (j17 = streaming j16) -------------
@@ -1151,7 +832,7 @@ object TwsOps {
     }
   }
 
-  def intervalStreamTws(events: org.apache.spark.sql.DataFrame,
+  def intervalStreamTws(events: DataFrame,
       intervalUs: Long = 1800L * 1000000L): Dataset[IntHit] = {
     import events.sparkSession.implicits._
     events.selectExpr("user_id", "tsus")
@@ -1166,40 +847,15 @@ object TwsOps {
     * parity row: OpLake dumps the per-event island assignments, the
     * oracle aggregates them into the per-user coverage census, and
     * batch `j16IntervalCoverage` must hash-match it. */
-  def intervalReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def intervalReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = graft.Tables.events(s, d)
       .selectExpr("user_id", "unix_micros(ts) as tsus")
       .as[(Long, Long)]
-      .collect().sortBy(e => (e._2, e._1))
-    val mem = MemoryStream[(Long, Long)]
-    val name = s"interval_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = intervalStreamTws(mem.toDS().toDF("user_id", "tsus"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        ev.grouped(math.max(1, ev.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[IntHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(e => (e._2, e._1)).toSeq
+    replay(s, ev, batches)(m =>
+      intervalStreamTws(m.toDF("user_id", "tsus"))).toDF()
   }
 
   // ---- streaming EWMA (a35 = streaming a34) -------------------------
@@ -1241,7 +897,7 @@ object TwsOps {
     }
   }
 
-  def ewmaStreamTws(daily: org.apache.spark.sql.DataFrame)
+  def ewmaStreamTws(daily: DataFrame)
       : Dataset[EwmaHit] = {
     import daily.sparkSession.implicits._
     daily.selectExpr("event_type", "day", "x")
@@ -1256,43 +912,11 @@ object TwsOps {
     * behind the a35 parity row: OpLake dumps the per-day smoothed
     * values, the oracle reads them verbatim, and batch `a34Ewma` must
     * hash-match — stream ≡ batch EWMA with state spanning seams. */
-  def ewmaReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def ewmaReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val daily = graft.Tables.events(s, d)
-      .selectExpr("event_type", "unix_micros(ts) div 86400000000 as day",
-        "cast(floor(value * 100 + 0.5) as bigint) as cents")
-      .groupBy("event_type", "day")
-      .agg(org.apache.spark.sql.functions.sum("cents").as("x"))
-      .as[(String, Long, Long)]
-      .collect().sortBy(e => (e._2, e._1))
-    val mem = MemoryStream[(String, Long, Long)]
-    val name = s"ewma_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = ewmaStreamTws(mem.toDS().toDF("event_type", "day", "x"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        daily.grouped(math.max(1, daily.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[EwmaHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+    replay(s, dailyRevenueOf(s, d), batches)(m =>
+      ewmaStreamTws(m.toDF("event_type", "day", "x"))).toDF()
   }
 
   // ---- streaming Page–Hinkley (a53 = streaming a53PhSeries) ---------
@@ -1334,7 +958,7 @@ object TwsOps {
     }
   }
 
-  def phStreamTws(daily: org.apache.spark.sql.DataFrame)
+  def phStreamTws(daily: DataFrame)
       : Dataset[PhHit] = {
     import daily.sparkSession.implicits._
     daily.selectExpr("event_type", "day", "x")
@@ -1350,43 +974,11 @@ object TwsOps {
     * emissions, the oracle reads them verbatim, and batch
     * `a53PhSeries` must hash-match — stream ≡ batch Page–Hinkley with
     * state spanning seams. */
-  def phReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def phReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val daily = graft.Tables.events(s, d)
-      .selectExpr("event_type", "unix_micros(ts) div 86400000000 as day",
-        "cast(floor(value * 100 + 0.5) as bigint) as cents")
-      .groupBy("event_type", "day")
-      .agg(org.apache.spark.sql.functions.sum("cents").as("x"))
-      .as[(String, Long, Long)]
-      .collect().sortBy(e => (e._2, e._1))
-    val mem = MemoryStream[(String, Long, Long)]
-    val name = s"ph_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = phStreamTws(mem.toDS().toDF("event_type", "day", "x"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        daily.grouped(math.max(1, daily.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[PhHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+    replay(s, dailyRevenueOf(s, d), batches)(m =>
+      phStreamTws(m.toDF("event_type", "day", "x"))).toDF()
   }
 
   // ---- streaming sliding median (w33 = streaming w25) ---------------
@@ -1426,7 +1018,7 @@ object TwsOps {
     }
   }
 
-  def medianStreamTws(rows: org.apache.spark.sql.DataFrame)
+  def medianStreamTws(rows: DataFrame)
       : Dataset[MedHit] = {
     import rows.sparkSession.implicits._
     rows.selectExpr("user_id", "tsus", "event_id", "cents")
@@ -1440,56 +1032,18 @@ object TwsOps {
     * through [[medianStreamTws]] — the producer behind the w33 parity
     * row: OpLake dumps the emissions, the oracle reads them verbatim,
     * batch `w25SlidingMedian` must hash-match. */
-  def medianReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def medianReplay(s: SparkSession, d: String,
+      batches: Int = 5): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val feed = graft.Tables.events(s, d)
       .filter(org.apache.spark.sql.functions.col("event_type") ===
         "purchase")
       .selectExpr("user_id", "unix_micros(ts) as tsus", "event_id",
         "cast(floor(value * 100 + 0.5) as bigint) as cents")
       .as[(Long, Long, Long, Long)]
-      .collect().sortBy(e => (e._2, e._3))
-    val mem = MemoryStream[(Long, Long, Long, Long)]
-    val name = s"median_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = medianStreamTws(
-        mem.toDS().toDF("user_id", "tsus", "event_id", "cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        feed.grouped(math.max(1, feed.length / batches)).foreach { g =>
-          mem.addData(g.toSeq: _*)
-          q.processAllAvailable()
-        }
-        s.table(name).as[MedHit].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
-  }
-
-  def sessionizeTws(events: org.apache.spark.sql.DataFrame, gapMs: Long)
-      : Dataset[StreamingOps.ClosedSession] = {
-    import events.sparkSession.implicits._
-    events
-      .selectExpr("user_id", "ts")
-      .withWatermark("ts", "10 minutes")
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .transformWithState(new SessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
+      .collect().sortBy(e => (e._2, e._3)).toSeq
+    replay(s, feed, batches)(m => medianStreamTws(
+      m.toDF("user_id", "tsus", "event_id", "cents"))).toDF()
   }
 
   // ---- streaming CAS ingest (m11 = streaming m10) --------------------
@@ -1528,7 +1082,7 @@ object TwsOps {
     }
   }
 
-  def casStream(assets: org.apache.spark.sql.DataFrame)
+  def casStream(assets: DataFrame)
       : Dataset[CasOut] = {
     import assets.sparkSession.implicits._
     assets.selectExpr("h", "doc_id", "format", "n_bytes", "seq")
@@ -1544,41 +1098,16 @@ object TwsOps {
     * reads them verbatim, and batch `m11StreamCas` (min-doc-per-hash)
     * must hash-match, proving the cross-batch CAS state replays the
     * batch accounting exactly. */
-  def casReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 4): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  def casReplay(s: SparkSession, d: String,
+      batches: Int = 4): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val assets = graft.operators.Multimodal.media(s, d)
       .selectExpr("md5(media) as h", "doc_id", "format",
         "cast(n_bytes as bigint) as n_bytes", "doc_id as seq")
       .as[(String, Long, String, Long, Long)]
-      .collect().sortBy(_._2)
-    val mem = MemoryStream[(String, Long, String, Long, Long)]
-    val name = s"cas_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val q = casStream(
-        mem.toDS().toDF("h", "doc_id", "format", "n_bytes", "seq"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val out =
-      try {
-        assets.grouped(math.max(1, assets.length / batches)).foreach {
-          g => mem.addData(g.toSeq: _*); q.processAllAvailable()
-        }
-        s.table(name).as[CasOut].collect().toSeq
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(_._2).toSeq
+    replay(s, assets, batches)(m => casStream(
+      m.toDF("h", "doc_id", "format", "n_bytes", "seq"))).toDF()
   }
 
   // ---- streaming chunk-store ingest (m13 = streaming m12) ------------
@@ -1627,7 +1156,7 @@ object TwsOps {
     }
   }
 
-  def chunkStream(chunks: org.apache.spark.sql.DataFrame)
+  def chunkStream(chunks: DataFrame)
       : Dataset[ChunkOut] = {
     import chunks.sparkSession.implicits._
     chunks.selectExpr("h", "doc_id", "format", "len", "off", "seq")
@@ -1641,8 +1170,8 @@ object TwsOps {
     * chunk relation through [[chunkStream]] — the producer behind the
     * m13 parity row (OpLake dumps the emissions; the oracle reads them
     * verbatim; batch `m13StreamChunkIngest` must hash-match). */
-  def chunkReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 4): org.apache.spark.sql.DataFrame =
+  def chunkReplay(s: SparkSession, d: String,
+      batches: Int = 4): DataFrame =
     chunkReplayOf(s, graft.operators.Multimodal.m12Chunks(s, d), batches)
 
   /** The m13b leg: the SAME replay over the m12b 20-doc first-KiB
@@ -1650,66 +1179,21 @@ object TwsOps {
     * against a from-raw-bytes SQL re-derivation of the split (the
     * recursion is depth-bounded by the KiB cap, which is why the
     * audit runs the prefix rather than full payloads). */
-  def chunkPrefixReplay(s: org.apache.spark.sql.SparkSession, d: String,
-      batches: Int = 4): org.apache.spark.sql.DataFrame =
+  def chunkPrefixReplay(s: SparkSession, d: String,
+      batches: Int = 4): DataFrame =
     chunkReplayOf(s, graft.operators.Multimodal.m13bPrefixChunks(s, d),
       batches)
 
-  private def chunkReplayOf(s: org.apache.spark.sql.SparkSession,
-      chunkRel: org.apache.spark.sql.DataFrame,
-      batches: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  private def chunkReplayOf(s: SparkSession, chunkRel: DataFrame,
+      batches: Int): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val chunks = chunkRel
       .selectExpr("hash as h", "doc_id", "format",
         "cast(len as bigint) as len", "cast(off as bigint) as off",
         "doc_id as seq")
       .as[(Long, Long, String, Long, Long, Long)]
-      .collect().sortBy(r => (r._2, r._5))
-    val mem = MemoryStream[(Long, Long, String, Long, Long, Long)]
-    val name = s"chunk_replay_${java.util.UUID.randomUUID()
-      .toString.replace("-", "")}"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = s.conf.getOption(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    // size the stateful stage from the (bounded, just-collected) replay
-    // input instead of the session default: every microbatch runs one
-    // stateful task — each opening its own RocksDB store — per shuffle
-    // partition, so a 60-chunk replay at the bench's 32 partitions paid
-    // 32 store opens × (batches+1) microbatches of pure overhead
-    // (measured: ~8.7 s → ~2 s for m13b at sf0.1). Restored afterwards;
-    // a replay big enough to want the session default gets it back via
-    // the min() — emissions are per-key, so partitioning never changes
-    // WHAT is emitted, only where.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val priorParts = s.conf.get(partsKey)
-    // plan construction and start() sit INSIDE the try: if either
-    // throws, the finally still restores the session confs — otherwise
-    // every later query in the session would silently plan with the
-    // replay's downsized shuffle partitioning (round-9 advice).
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    val out =
-      try {
-        s.conf.set(partsKey, math.max(1L, math.min(priorParts.toLong,
-          chunks.length / 64L)).toString)
-        q = chunkStream(
-            mem.toDS().toDF("h", "doc_id", "format", "len", "off", "seq"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        chunks.grouped(math.max(1, chunks.length / batches)).foreach {
-          g => mem.addData(g.toSeq: _*); q.processAllAvailable()
-        }
-        s.table(name).as[ChunkOut].collect().toSeq
-      } finally {
-        if (q != null) q.stop()
-        s.conf.set(partsKey, priorParts)
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    out.toDF()
+      .collect().sortBy(r => (r._2, r._5)).toSeq
+    replay(s, chunks, batches)(m => chunkStream(
+      m.toDF("h", "doc_id", "format", "len", "off", "seq"))).toDF()
   }
 }

@@ -44,4 +44,10 @@ class GraphSpec extends SparkSuite {
     val top = Graph.g1PageRank(spark, sf).collect()
     assert(top.count(_.getAs[String]("node_type") == "supplier") > 0)
   }
+
+  test("pageRankOfAdj rejects k = 0 (the fused loop always runs round 1)") {
+    intercept[IllegalArgumentException] {
+      Graph.pageRankOfAdj(Graph.adjBySrc(spark, sf), 0)
+    }
+  }
 }

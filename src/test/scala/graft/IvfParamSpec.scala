@@ -41,6 +41,13 @@ class IvfParamSpec extends SparkSuite {
     }
   }
 
+  test("ivfPqOf rejects memoized PQ codes at non-default m") {
+    intercept[IllegalArgumentException] {
+      Similarity.ivfPqOf(embeddings(spark, sf), m = 4,
+        codesOpt = Some(Similarity.pqCodesRel(spark, sf)))
+    }
+  }
+
   test("semDedupOf is fanout-invariant (salted pair-gen, same result)") {
     val assigned = Similarity.e9Assigned(spark, sf)
     val plain = Similarity.semDedupOf(assigned, fanout = 1)

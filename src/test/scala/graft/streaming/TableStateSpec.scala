@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSuite
-import graft.ts.{PatRow, PsiCodec, PsiSection}
+import graft.ts.{PatRow, PsiCodec, PsiSection, TsPacket, TsPipeline}
 
 class TableStateSpec extends SparkSuite {
 
@@ -51,6 +51,30 @@ class TableStateSpec extends SparkSuite {
         .as[TableState.CompleteTable].collect()
       assert(all.length == 2)
       assert(all.map(_.versionNumber).sorted.toSeq == Seq(1, 2))
+    } finally q.stop()
+  }
+
+  test("table assembly == batch latest tables on the capture") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val pkts = TsPipeline.packets(spark)
+      .filter((p: TsPacket) => p.pid == 0 || p.pid == 66)
+      .collect().sortBy(_.seq)
+    val secs = TsPipeline.psiSections(spark,
+      spark.createDataset(pkts.toIndexedSeq)).collect().sortBy(_.firstSeq)
+    val mem = MemoryStream[PsiSection]
+    val q = TableState.latestTablesStream(mem.toDS())
+      .writeStream.format("memory").queryName("capture_tables")
+      .outputMode("append").start()
+    try {
+      secs.grouped(secs.length / 3 + 1)
+        .foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
+      val got = spark.table("capture_tables")
+        .as[TableState.CompleteTable].collect()
+      // the capture carries PAT v14 on PID 0 and PMT v27 on PID 66 —
+      // one completed table per distinct (key, version)
+      assert(got.map(t => (t.pid, t.tableId, t.versionNumber)).toSet ==
+        Set((0, 0, 14), (66, 2, 27)))
     } finally q.stop()
   }
 

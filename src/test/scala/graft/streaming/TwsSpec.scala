@@ -1,13 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.ts.{TsPacket, TsPipeline}
-
-/** transformWithState hosts produce the same results as the
-  * flatMapGroupsWithState hosts (and batch). Needs RocksDB state store,
-  * so they run on a dedicated session. */
+/** The transformWithState host: its near-dup bucket machine, and the
+  * one replay harness every parity row runs through. Needs the RocksDB
+  * state store, so the tests run on a dedicated session. */
 class TwsSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def withRocksSession(f: SparkSession => Unit): Unit = {
@@ -31,126 +29,60 @@ class TwsSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("tws CC audit flags an injected discontinuity across batches") {
-    withRocksSession { spark =>
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      def pkt(seq: Long, cc: Int) = TsPacket(seq, 100, tei = false,
-        pusi = false, priority = false, scrambling = 0, hasAf = false,
-        hasPayload = true, cc = cc, af = None, payload = Array[Byte](1))
-      val mem = MemoryStream[TsPacket]
-      val q = TwsOps.ccAuditTws(mem.toDS())
-        .writeStream.format("memory").queryName("tws_ccerrs")
-        .outputMode("append").start()
-      try {
-        mem.addData(pkt(0, 0), pkt(1, 1))
-        q.processAllAvailable()
-        mem.addData(pkt(2, 5), pkt(3, 6))
-        q.processAllAvailable()
-        val errs = spark.table("tws_ccerrs")
-          .as[StreamingOps.CcError].collect()
-        assert(errs.length == 1)
-        assert(errs.head.expected == 2 && errs.head.got == 5)
-      } finally q.stop()
-    }
-  }
+  private val replayConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.shuffle.partitions")
 
-  test("tws table assembly == batch latest tables on the capture") {
-    withRocksSession { spark =>
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val pkts = TsPipeline.packets(spark)
-        .filter((p: TsPacket) => p.pid == 0 || p.pid == 66)
-        .collect().sortBy(_.seq)
-      val secs = TsPipeline.psiSections(spark,
-        spark.createDataset(pkts.toIndexedSeq)).collect().sortBy(_.firstSeq)
-      val mem = MemoryStream[graft.ts.PsiSection]
-      val q = TwsOps.latestTablesTws(mem.toDS())
-        .writeStream.format("memory").queryName("tws_tables")
-        .outputMode("append").start()
-      try {
-        secs.grouped(secs.length / 3 + 1)
-          .foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-        val got = spark.table("tws_tables")
-          .as[TableState.CompleteTable].collect()
-        // the capture carries PAT v14 on PID 0 and PMT v27 on PID 66 —
-        // one completed table per distinct (key, version)
-        assert(got.map(t => (t.pid, t.tableId, t.versionNumber)).toSet ==
-          Set((0, 0, 14), (66, 2, 27)))
-      } finally q.stop()
-    }
-  }
+  /** The replay confs a session holds explicitly (unset ones are absent;
+    * `conf.getOption` would report their defaults instead). */
+  private def explicitReplayConfs(s: SparkSession): Map[String, String] =
+    s.conf.getAll.filter { case (k, _) => replayConfs.contains(k) }
 
-  test("tws event-time timers close sessions when the watermark passes") {
+  /** Runs `f` once with both replay confs set to non-replay values and
+    * once with both unset, on a fresh session, passing the state set. */
+  private def forEachPriorConf(f: (SparkSession, Map[String, String]) =>
+      Unit): Unit =
     withRocksSession { spark =>
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[(Long, java.sql.Timestamp)]
-      val df = mem.toDS().toDF("user_id", "ts")
-      val q = TwsOps.sessionizeTws(df, gapMs = 30 * 60 * 1000L)
-        .writeStream.format("memory").queryName("tws_sessions")
-        .outputMode("append").start()
-      try {
-        val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-        mem.addData((8L, new java.sql.Timestamp(t0)),
-          (8L, new java.sql.Timestamp(t0 + 5 * 60 * 1000)))
-        q.processAllAvailable()
-        assert(spark.table("tws_sessions").count() == 0) // still open
-        mem.addData((9L, new java.sql.Timestamp(t0 + 3 * 60 * 60 * 1000)))
-        q.processAllAvailable()
-        mem.addData((9L, new java.sql.Timestamp(t0 + 4 * 60 * 60 * 1000)))
-        q.processAllAvailable()
-        val closed = spark.table("tws_sessions")
-          .as[StreamingOps.ClosedSession].collect()
-        assert(closed.length == 1)
-        assert(closed.head.userId == 8L)
-        assert(closed.head.nEvents == 2)
-        assert(closed.head.endMicros - closed.head.startMicros ==
-          5L * 60 * 1000 * 1000)
-      } finally q.stop()
-    }
-  }
-
-  test("transformWithState section assembly == batch on the capture") {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
-    try {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val pkts = TsPipeline.packets(spark)
-        .filter((p: TsPacket) => p.pid == 0 || p.pid == 66)
-        .collect().sortBy(_.seq)
-      val batchSecs = TsPipeline.psiSections(spark,
-        spark.createDataset(pkts.toIndexedSeq)).collect()
-      val mem = MemoryStream[TsPacket]
-      val q = TwsOps.sectionsTws(mem.toDS())
-        .writeStream.format("memory").queryName("tws_secs")
-        .outputMode("append").start()
-      try {
-        pkts.grouped(pkts.length / 4 + 1)
-          .foreach { c => mem.addData(c.toSeq); q.processAllAvailable() }
-        val streamed = spark.table("tws_secs")
-          .as[graft.ts.PsiSection].collect()
-        assert(streamed.length == batchSecs.length)
-        assert(streamed.map(s => (s.pid, s.versionNumber, s.sectionNumber,
-            s.bytes.toSeq)).sortBy(_.toString).toSeq ==
-          batchSecs.map(s => (s.pid, s.versionNumber, s.sectionNumber,
-            s.bytes.toSeq)).sortBy(_.toString).toSeq)
-      } finally q.stop()
-    } finally {
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
+      val s = spark.newSession()
+      Seq(
+        Map(replayConfs(0) -> ("org.apache.spark.sql.execution.streaming." +
+            "state.HDFSBackedStateStoreProvider"),
+          replayConfs(1) -> "7"),
+        Map.empty[String, String]
+      ).foreach { prior =>
+        replayConfs.foreach(s.conf.unset)
+        prior.foreach { case (k, v) => s.conf.set(k, v) }
+        f(s, prior)
       }
+    }
+
+  test("replay restores the provider and partitions confs when start() " +
+    "throws") {
+    forEachPriorConf { (s, prior) =>
+      import s.implicits._
+      // a streaming aggregation in append mode without a watermark builds
+      // a plan, then fails analysis inside start()
+      val e = intercept[AnalysisException] {
+        TwsOps.replay(s, (1L to 200L), 2)(m =>
+          m.groupByKey(identity).count())
+      }
+      assert(e.getMessage.contains(
+        "STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION"), e.getMessage)
+      assert(explicitReplayConfs(s) == prior)
+      assert(s.streams.active.isEmpty)
+    }
+  }
+
+  test("a successful replay feeds every row and leaves the confs as found") {
+    forEachPriorConf { (s, prior) =>
+      import s.implicits._
+      val out = TwsOps.replay(s, (1L to 200L), 3, tail = Seq(1000L))(m =>
+        m.map(_ * 2))
+      assert(out.sorted == ((1L to 200L) :+ 1000L).map(_ * 2))
+      assert(explicitReplayConfs(s) == prior)
+      assert(s.streams.active.isEmpty)
+      assert(!s.catalog.listTables().collect()
+        .exists(_.name.startsWith("replay_")))
     }
   }
 
