@@ -1,47 +1,46 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.operators.{Bucketing, Settings, Similarity, TextOps, TsQueries}
+
 object Bench {
+  private[graft] val osBean = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** Pre-builds what a timed sweep would otherwise bill to whichever
+    * query touches it first: JVM/codegen/footer caches, every bench table
+    * and the shared session state. A failed step is named on stderr and
+    * the later steps still run, so the skew it leaves is attributable. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    def step(name: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[warm-up] $name failed: $e")
+      }
+    step("entry")(SparkEntry.entry(spark).count())
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings")
+      .foreach(t => step(t)(Tables.load(spark, sfDir, t).count()))
+    step("events")(Tables.events(spark, sfDir).count())
+    // the shared TS lake (capture decode + PSI assembly) of ts-queries
+    step("TsLake.sections")(graft.ts.TsLake.sections(spark).count())
+    // the PSI dimension tables + PCR spans: the reference daemon
+    // maintains these continuously (psi_thr 1 s refresh,
+    // mpeg2_sp.c:78-81) — a GET reads current state, never assembles it
+    step("warmPsiState")(TsQueries.warmPsiState(spark))
+    step("warmMptsState")(TsQueries.warmMptsState(spark))
+    step("warmRegistry")(Settings.warmRegistry(spark, sfDir))
+    // index BUILD is a batch job; e10/t50b measure index SERVE
+    step("ivfIndexPath")(Similarity.ivfIndexPath(spark, sfDir))
+    step("bm25IndexPath")(TextOps.bm25IndexPath(spark, sfDir))
+    // bucketed LAYOUT is a batch job; l5 measures the co-located join
+    step("bucketedTables")(Bucketing.bucketedTables(spark, sfDir))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session (JVM/codegen/parquet-footer caches) so the first
-    // timed query isn't charged ~3s of one-off startup; touch every bench
-    // table so footer/IO warm-up isn't billed to whichever query reads a
-    // table first
-    try {
-      SparkEntry.entry(spark).count()
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings")
-        .foreach(t => Tables.load(spark, sfDir, t).count())
-      Tables.events(spark, sfDir).count()
-      // the shared TS lake (capture decode + PSI assembly) is session
-      // infrastructure every ts-query reads — build it once here so the
-      // sweep doesn't bill it to whichever ts-query runs first
-      graft.ts.TsLake.sections(spark).count()
-      // same for the PSI dimension tables + PCR spans: the reference
-      // daemon maintains these continuously (psi_thr 1 s refresh,
-      // mpeg2_sp.c:78-81) — a GET reads current state, never assembles it
-      graft.operators.TsQueries.warmPsiState(spark)
-      graft.operators.TsQueries.warmMptsState(spark)
-      graft.operators.Settings.warmRegistry(spark, sfDir)
-      // index BUILD is a batch job; e10/t50b measure index SERVE
-      graft.operators.Similarity.ivfIndexPath(spark, sfDir)
-      graft.operators.TextOps.bm25IndexPath(spark, sfDir)
-      // bucketed LAYOUT is a batch job; l5 measures the co-located join
-      graft.operators.Bucketing.bucketedTables(spark, sfDir)
-    } catch { case e: Throwable =>
-      // visible, not fatal: a failed warm-up means whatever it was
-      // meant to pre-build gets (re)built inside a timed query — the
-      // sweep still runs, but the skew must be attributable from logs
-      System.err.println(s"[bench] warm-up failed: $e")
-    }
+    val spark = LocalSession()
+    warmUp(spark, sfDir)
     // an errored query must be VISIBLE, not a silent timing row: it
     // still contributes its wall time, but its name lands in `errors`
     // (and on stderr) so a red bench is diagnosable from the JSON alone
@@ -50,9 +49,6 @@ object Bench {
     // inflates while cpu doesn't — a row with cpu/wall far below the
     // query's parallelism is self-labelling as CPU starvation, not a
     // plan regression (the round-7 driver-vs-idle 2.9x ambiguity)
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         // stderr marker so log warnings (cache, WindowExec, ...) are

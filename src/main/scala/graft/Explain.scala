@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan diagnostics: prints the formatted physical plan for the named
   * queries (all, if none given) so pushdown/broadcast/codegen health can
   * be reviewed per round. Usage: runMain graft.Explain <sfDir> [names...]
@@ -9,17 +7,10 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val catalog = SparkEntry.queries ++ graft.operators.TextOps.diag ++
-      graft.operators.Similarity.diag
+    val catalog = SparkEntry.queries ++ SparkEntry.diag
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     names.foreach { n =>
       println(s"\n===== $n =====")
       catalog(n)(spark, sfDir).explain("formatted")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
+import scala.util.Try
 
 /** Physical-plan shape signatures for every declared query: the
   * regression net that catches a broadcast silently flipping to a
@@ -11,8 +12,9 @@ import org.apache.spark.sql.execution.SparkPlan
   *
   * A signature is the multiset of physical node names of the
   * PRE-ADAPTIVE plan (`queryExecution.sparkPlan`) at sf0.001 under the
-  * test-session conf — deterministic for a fixed Spark version and
-  * fixed test data. `runMain graft.PlanSig` regenerates
+  * signature conf (`LocalSession.signature`, which the test session
+  * shares) — deterministic for a fixed Spark version and fixed test
+  * data. `runMain graft.PlanSig` regenerates
   * `PLAN_SIGS.json` after an INTENTIONAL plan change;
   * `PlanSigSpec` diffs current plans against the committed file. */
 object PlanSig {
@@ -30,13 +32,21 @@ object PlanSig {
     counts.map { case (k, v) => s"$k:$v" }.mkString("|")
   }
 
-  /** Current signatures for every query, sorted by name. Queries whose
-    * builders are iterative (driver-side fixpoint loops) still yield a
-    * deterministic FINAL plan, which is what gets signed. */
-  def all(spark: SparkSession): Seq[(String, String)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> signature(fn(spark, SfDir))
-    }
+  /** The loop of every whole-catalog check: `f` over each declared query
+    * at `sfDir`, in name order, attempting all even when one throws. The
+    * values of the queries that ran, and a `name: error` line per throw. */
+  def everyQuery[A](spark: SparkSession, sfDir: String)(
+      f: (String, DataFrame) => A): (Seq[(String, A)], Seq[String]) =
+    SparkEntry.queries.toSeq.sortBy(_._1).partitionMap { case (name, fn) =>
+      Try(f(name, fn(spark, sfDir))).toEither.map(name -> _)
+        .left.map(e => s"$name: ${e.toString.linesIterator.next()}")
+    }.swap
+
+  /** Signatures of every query that can be planned, sorted by name (an
+    * iterative builder's deterministic FINAL plan is what gets signed),
+    * and a `name: error` line per query that cannot. */
+  def all(spark: SparkSession): (Seq[(String, String)], Seq[String]) =
+    everyQuery(spark, SfDir)((_, df) => signature(df))
 
   def render(sigs: Seq[(String, String)]): String =
     sigs.map { case (k, v) => s"""  "$k": "$v"""" }
@@ -48,17 +58,16 @@ object PlanSig {
       .map(m => m.group(1) -> m.group(2)).toMap
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = render(all(spark))
+    val spark = LocalSession.signature()
+    val (sigs, failed) = try all(spark) finally spark.stop()
+    // a partial file would silently drop the failed queries' pins
+    if (failed.nonEmpty) {
+      System.err.println(s"[plansig] ${failed.size} queries could not " +
+        s"be planned; $SigFile left untouched:\n${failed.mkString("\n")}")
+      sys.exit(1)
+    }
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(SigFile), out.getBytes("UTF-8"))
-    println(s"wrote ${SparkEntry.queries.size} signatures to $SigFile")
-    spark.stop()
+      java.nio.file.Paths.get(SigFile), render(sigs).getBytes("UTF-8"))
+    println(s"wrote ${sigs.size} signatures to $SigFile")
   }
 }

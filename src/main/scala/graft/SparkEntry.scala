@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Changelog, Graph, Layout, Multimodal, Relational, Settings, Similarity, TextOps, TsQueries, Validation}
+import graft.operators.{Changelog, Graph, Layout, Multimodal, Relational, Settings, Similarity, Skew, TextOps, TsQueries, Validation}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -24,6 +24,12 @@ object SparkEntry {
     Relational.all ++ TextOps.all ++ Similarity.all ++ TsQueries.all ++
       Settings.all ++ Multimodal.all ++ Graph.all ++ Changelog.all ++
       Layout.all ++ Validation.all
+
+  /** Diagnostic probes (z-family stresses, sub-plan probes): not part of
+    * the driver surface; TimeOne and Explain resolve `queries ++ diag`. */
+  def diag: Map[String, (SparkSession, String) => DataFrame] =
+    TextOps.diag ++ Similarity.diag ++ Graph.diag ++ Relational.diag ++
+      Skew.diag ++ Multimodal.diag
 
   // ---- TS-family oracle plumbing -----------------------------------
   // Verify materializes the decoded TS layers (TsLake.ensureDumped) to a

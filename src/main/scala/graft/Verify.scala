@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -40,18 +39,11 @@ object Verify {
     // a FILE_NOT_EXIST failure (observed in the round-8 concurrent
     // probe before this line existed)
     IndexDir.base = s"$artDir/index"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-run warehouse: l5's bucketed tables (saveAsTable) land here,
-      // so two concurrent Verify runs can't race each other's buckets
-      // (the documented spark-warehouse/li_bkt hazard)
-      .config("spark.sql.warehouse.dir", s"$artDir/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-run warehouse: l5's bucketed tables (saveAsTable) land here,
+    // so two concurrent Verify runs can't race each other's buckets
+    // (the documented spark-warehouse/li_bkt hazard)
+    val spark = LocalSession(
+      extraConf = Seq("spark.sql.warehouse.dir" -> s"$artDir/warehouse"))
     new java.io.File(outDir).mkdirs()
     // a clean run must not inherit a previous run's failure marker
     Files.deleteIfExists(Paths.get(s"$outDir/_FAILED.txt"))

@@ -1,7 +1,5 @@
 package graft.http
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone serving entry point: `runMain graft.http.DocServe
   * [sfDir] [port]` — brings the §2.12 REST surface up over a live
   * SparkSession, the deployment shape of the reference daemon
@@ -11,14 +9,7 @@ object DocServe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = if (args.length > 1) args(1).toInt else 8080
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val srv = DocServer.start(spark, sfDir, port)
     println(s"[docserve] serving $sfDir on " +
       s"http://127.0.0.1:${srv.port}/api/1.0/stream_procs.json")

@@ -579,7 +579,7 @@ object Graph {
     "g9_local_clustering" -> g9LocalClustering _,
     "g5_bfs_hops" -> ((s: SparkSession, d: String) => g5BfsHops(s, d)))
 
-  /** Scale-stress probes (Profile-only, the z-family convention):
+  /** Scale-stress probes (diag-only, the z-family convention):
     * the graph at `stressReps`× — every replica is a disjoint copy of
     * the base bipartite graph, so |V| and |E| scale linearly while
     * the per-iteration shape (one rank-vector exchange against the
@@ -588,7 +588,7 @@ object Graph {
     // disjoint replicas of the strong co-supplier graph: each replica
     // peels independently, so the stress 3-core must be exactly
     // stressReps copies of the base core (closed-form check in the
-    // Profile log: rows = reps × base rows) while per-round work
+    // TimeOne log: rows = reps × base rows) while per-round work
     // scales linearly
     "z24_g7_20x" -> ((s: SparkSession, d: String) => {
       val base = coPairs(s, d).filter(col("n_shared") >= 2)

@@ -497,7 +497,7 @@ object Multimodal {
           .otherwise(0L).as("bytes_written"))
   }
 
-  /** Scale-stress probe (Profile-only, the z-family convention):
+  /** Scale-stress probe (diag-only, the z-family convention):
     * z28 runs the CDC dedup at `stressReps`× where every replica gets
     * a DISTINCT i-dependent prefix prepended — all whole-asset hashes
     * differ (CAS reclaims nothing across replicas), yet every payload

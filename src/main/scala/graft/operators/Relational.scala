@@ -3972,7 +3972,7 @@ object Relational {
         col("price_cents"))
   }
 
-  /** Scale-stress probes (Profile-only, the z-family convention). */
+  /** Scale-stress probes (diag-only, the z-family convention). */
   def diag: Map[String, (SparkSession, String) => DataFrame] = Map(
     // a50's permutation fan at 10× the rep count: R independent
     // (type, rep)-partitioned sorts — wall time must scale ~linearly

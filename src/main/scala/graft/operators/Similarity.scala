@@ -654,8 +654,8 @@ object Similarity {
       .select("query_id", "cand_id", "rnk")
   }
 
-  /** Sub-plan probes for hotspot/scale profiling (wired into
-    * `graft.Profile` only — not part of the driver-visible surface). */
+  /** Sub-plan probes for hotspot/scale profiling (in `SparkEntry.diag`,
+    * run with `graft.TimeOne` — not part of the driver-visible surface). */
   def diag: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ANN scale stress: the sf embedding corpus replicated 20× (every
     // vector gains 19 exact clones) through the LSH bucket path — clone

@@ -61,7 +61,7 @@ object Skew {
     (fact, dim)
   }
 
-  /** Profile-only skew probes (z26): per-task load of the hot-key join
+  /** Diag-only skew probes (z26): per-task load of the hot-key join
     * unsalted vs through [[saltedJoin]], and of the e9 pair stage with
     * one hot inverted list at fanout 1 vs 8. The salted/fanned rows
     * must show skew_pct_of_uniform collapsing toward ~100 (uniform)

@@ -605,8 +605,8 @@ object TextOps {
   private[graft] def stressReps: Int =
     sys.env.getOrElse("GRAFT_STRESS_REPS", "20").toInt
 
-  /** Sub-plan probes for hotspot profiling (wired into `graft.Profile`
-    * only — not part of the driver-visible query surface). */
+  /** Sub-plan probes for hotspot profiling (in `SparkEntry.diag`, run
+    * with `graft.TimeOne` — not part of the driver-visible surface). */
   def diag: Map[String, (SparkSession, String) => DataFrame] = Map(
     // t68 at 20× doc replication (distinct ids, identical text): the
     // checkpoint grid stays ≤128 rows by the ceiling-width rule, the

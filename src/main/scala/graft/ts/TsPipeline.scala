@@ -1,5 +1,6 @@
 package graft.ts
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,15 +28,26 @@ object TsPipeline {
   val DefaultCapture =
     "/root/reference/mpeg2ts/utests/assets/san_diego_200kbps.ts"
 
+  /** The capture's 188-byte records with their seq. A path nothing
+    * matches (a glob or a directory may) fails here in one line naming
+    * it, not as the input format's error from the first job. */
+  private def records(spark: SparkSession, path: String)
+      : RDD[(Array[Byte], Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val hits = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(p)
+    if (hits == null || hits.isEmpty)
+      throw new java.io.FileNotFoundException(s"TS capture not found: $path")
+    spark.sparkContext.binaryRecords(path, TsCodec.PacketSize).zipWithIndex()
+  }
+
   /** S2: fixed-width 188-byte record scan with a stable per-record seq.
     * zipWithIndex runs one lightweight count job per partition — the
     * records themselves stay distributed. */
   def packets(spark: SparkSession, path: String = DefaultCapture)
       : Dataset[TsPacket] = {
     import spark.implicits._
-    spark.sparkContext
-      .binaryRecords(path, TsCodec.PacketSize)
-      .zipWithIndex()
+    records(spark, path)
       .flatMap { case (buf, seq) => TsCodec.decode(buf, seq) }
       .toDS()
   }
@@ -52,10 +64,7 @@ object TsPipeline {
       path: String = DefaultCapture)
       : (Dataset[TsPacket], Dataset[Reject]) = {
     import spark.implicits._
-    val raw = spark.sparkContext
-      .binaryRecords(path, TsCodec.PacketSize)
-      .zipWithIndex()
-    val decoded = raw.map { case (buf, seq) =>
+    val decoded = records(spark, path).map { case (buf, seq) =>
       TsCodec.decode(buf, seq) match {
         case Some(p) => Right(p): Either[Reject, TsPacket]
         case None =>

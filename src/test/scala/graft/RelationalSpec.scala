@@ -7,11 +7,14 @@ import graft.operators.Relational
 class RelationalSpec extends SparkSuite {
 
   test("every declared query runs and returns a stable schema") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no columns")
+    val (ran, threw) = PlanSig.everyQuery(spark, sf) { (_, df) =>
       df.count() // force execution
+      df.columns.nonEmpty
     }
+    val noColumns = ran.collect { case (name, false) => name }
+    if (threw.nonEmpty || noColumns.nonEmpty) fail(
+      s"threw (${threw.size}):\n${threw.mkString("\n")}\n" +
+        s"no columns: ${noColumns.mkString(", ")}")
   }
 
   test("entry flagship returns rows") {

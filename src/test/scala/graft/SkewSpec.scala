@@ -42,7 +42,7 @@ class SkewSpec extends SparkSuite {
   }
 
   test("z26 task-load census: totals conserved, variants labelled") {
-    // the probes themselves run under Profile with AQE off (COVERAGE
+    // the probes themselves run under TimeOne with AQE off (COVERAGE
     // row); here we pin their accounting invariant — the census must
     // partition the measured relation's rows exactly
     val (fact, dim) = Skew.hotFixture(spark, sf)
