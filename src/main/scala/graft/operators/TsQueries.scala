@@ -93,8 +93,7 @@ object TsQueries {
     * cross-checked by the oracle against the typed-decode dump. */
   def ts8PeekPidStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val raw = s.sparkContext
-      .binaryRecords(TsPipeline.DefaultCapture, 188)
+    val raw = TsPipeline.rawRecords(s, TsPipeline.DefaultCapture)
       .map(Tuple1(_)).toDF("bytes")
     raw
       .select(graft.plans.TsColumns.ts_peek(col("bytes"), "pid").as("pid"),
@@ -343,16 +342,16 @@ object TsQueries {
   private[graft] def mptsPackets(s: SparkSession): DataFrame =
     memoized(s, "mpts_pk") { graft.ts.Fixtures.mptsWithPcr(s).toDF() }
   /** The MPTS fixture's PSI sections, assembled ONCE per session and
-    * shared by the PAT/PMT/SDT builders below — three separate
-    * psiSections calls each re-cached an identical packet plan (the
-    * bench log's duplicate-cache warnings traced here). */
+    * pinned here, shared by the PAT/PMT/SDT builders below (one
+    * assembly, not one per builder). The fixture's packets are a local
+    * relation, so the two passes of `psiSections` read no scan. */
   private val secMemo =
     new graft.SessionMemo[org.apache.spark.sql.Dataset[
       graft.ts.PsiSection]](_.unpersist(blocking = false))
   private def mptsSections(s: SparkSession)
       : org.apache.spark.sql.Dataset[graft.ts.PsiSection] =
     secMemo(s, "mpts_secs")(TsPipeline.psiSections(s,
-      graft.ts.Fixtures.mptsWithPcr(s), pin = false).cache())
+      graft.ts.Fixtures.mptsWithPcr(s)).cache())
 
   private[graft] def mptsPmt(s: SparkSession): DataFrame =
     memoized(s, "mpts_pmt") {

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.ts.{PsiCodec, PsiSection}
+import graft.ts.{PsiCodec, PsiSection, TsPipeline}
 
 /** R3+R4 as a streaming operator (`psi_table_dec.c:59-205`,
   * `psi_proc.c:329-397`): per (pid, tableId, extension), collect sections
@@ -93,8 +93,9 @@ object TableState {
       .start()
 
   /** PAT entries ⋈ PMT programs over a register's tables, by program
-    * number (left join: a program whose PMT has not completed keeps its
-    * PAT fields only), ordered by program number. */
+    * number ([[graft.ts.TsPipeline.programsJoin]], a left join: a
+    * program whose PMT has not completed keeps its PAT fields only),
+    * ordered by program number. */
   def programs(tables: Map[TableKey, CompleteTable]): Seq[Program] = {
     def sections(tableId: Int): Seq[(Int, PsiSection)] = for {
       t <- tables.values.toSeq
@@ -103,18 +104,16 @@ object TableState {
       b <- t.sectionBytes
       s <- PsiCodec.decodeSection(t.pid, 0, b)
     } yield (t.versionNumber, s)
-    val pmts = (for {
-      (v, s) <- sections(0x02)
-      p <- PsiCodec.decodePmt(s)
-    } yield p.programNumber -> (p.pcrPid, p.es.length.toLong, v))
-      .groupMap(_._1)(_._2)
-    (for {
-      (v, s) <- sections(0x00)
-      r <- PsiCodec.decodePat(s) if r.programNumber != 0
-      pmt <- pmts.get(r.programNumber)
-        .fold(Seq(Option.empty[(Int, Long, Int)]))(_.map(Some(_)))
-    } yield Program(r.programNumber, r.referencePid, v, pmt.map(_._1),
-      pmt.map(_._2), pmt.map(_._3))).sortBy(_.programNumber)
+    TsPipeline.programsJoin(
+      for ((v, s) <- sections(0x00); r <- PsiCodec.decodePat(s))
+        yield (r, v),
+      for ((v, s) <- sections(0x02); p <- PsiCodec.decodePmt(s))
+        yield (p, v)
+    ).flatMap { case (r, v, pmts) =>
+      val pmt = if (pmts.isEmpty) Seq(None) else pmts.map(Some(_))
+      pmt.map(m => Program(r.programNumber, r.referencePid, v,
+        m.map(_._1.pcrPid), m.map(_._1.es.length.toLong), m.map(_._2)))
+    }
   }
 
   /** The live program_processors document: one JSON object per program,

@@ -83,6 +83,24 @@ object Fixtures {
     out.toSeq
   }
 
+  /** A DVB-SDT actual section (table 0x42): original_network_id 1, then
+    * per service a loop with one 0x48 descriptor (provider "GraftNet",
+    * the given name), running status 4. */
+  def sdtSection(tsId: Int, version: Int, services: Seq[(Int, String)])
+      : Array[Byte] = {
+    val loops = services.map { case (id, name) =>
+      val desc = PsiCodec.encodeDescriptors(Seq(Descriptor(0x48,
+        Array.emptyByteArray, Some(1), Some("GraftNet"), Some(name), None)))
+      Array[Byte](
+        ((id >> 8) & 0xFF).toByte, (id & 0xFF).toByte,
+        0xFC.toByte, // reserved(6) + EIT flags 0
+        ((4 << 5) | (desc.length >> 8 & 0x0F)).toByte, // running=4
+        (desc.length & 0xFF).toByte) ++ desc
+    }
+    PsiCodec.encodeSection(0x42, tsId, version, currentNext = true, 0, 0,
+      Array[Byte](0x00, 0x01, 0xFF.toByte) ++ loops.flatten)
+  }
+
   /** A 3-program MPTS: PAT + 3 PMTs + DVB-SDT with service names —
     * the multi-program shape the real capture lacks. */
   def mpts(spark: org.apache.spark.sql.SparkSession)
@@ -103,22 +121,8 @@ object Fixtures {
         PmtProgram(num, pcrPid, Nil,
           es.map(e => EsEntry(e._1, e._2, Nil))), version = 2)
     }
-    // SDT: original_network_id + per-service loops with 0x48 descriptors
-    val sdtBody = {
-      val services = programs.map { case (num, _, _, _) =>
-        val desc = PsiCodec.encodeDescriptors(Seq(Descriptor(0x48,
-          Array.emptyByteArray, Some(1), Some("GraftNet"),
-          Some(s"Service $num"), None)))
-        Array[Byte](
-          ((num >> 8) & 0xFF).toByte, (num & 0xFF).toByte,
-          0xFC.toByte, // reserved(6) + EIT flags 0
-          ((4 << 5) | (desc.length >> 8 & 0x0F)).toByte, // running=4
-          (desc.length & 0xFF).toByte) ++ desc
-      }
-      Array[Byte](0x00, 0x01, 0xFF.toByte) ++ services.flatten
-    }
-    val sdt = PsiCodec.encodeSection(0x42, 7, 3, currentNext = true, 0, 0,
-      sdtBody)
+    val sdt = sdtSection(tsId = 7, version = 3,
+      programs.map { case (num, _, _, _) => num -> s"Service $num" })
     var seq = 0L
     val pkts = ArrayBuffer.empty[TsPacket]
     // interleave: PAT, SDT, PMTs, repeated twice (state must converge)

@@ -33,10 +33,10 @@ object TsLake {
 
   private def rel(s: SparkSession) =
     cache(s, "lake") {
+      // psiSections reads pk twice (PAT discovery, then assembly) and
+      // caches nothing itself: pk is pinned here, once
       val pk = TsPipeline.packets(s).cache()
-      // pk is pinned on the line above — pin = false stops psiSections
-      // re-caching the identical plan (a no-op plus a warning)
-      val secs = TsPipeline.psiSections(s, pk, pin = false).cache()
+      val secs = TsPipeline.psiSections(s, pk).cache()
       (pk, secs)
     }
 

@@ -1,9 +1,10 @@
 package graft.ts
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Batch TS pipeline (SURVEY §3.1 re-expressed Spark-first): fixed-width
   * binary source → typed parse → per-PID stateful reassembly → versioned
@@ -17,9 +18,11 @@ import org.apache.spark.sql.functions._
   *  - reassembly shuffles once on PID (8192-way key space) and runs the
   *    same pure state machine per key — at cluster scale this is
   *    `flatMapGroupsWithState`; in batch a seq-sorted `flatMapGroups`;
-  *  - PSI tables (PAT/PMT/SDT) are tiny dimensions → broadcast joins for
-  *    the programs summary, exactly like the reference's in-memory
-  *    register reads (`mpeg2_sp.c:1120-1235`).
+  *  - PSI tables (PAT/PMT/SDT) are tiny dimensions: the programs summary
+  *    collects the winner-version sections once (bounded by the table
+  *    count, not the capture length) and joins them on the driver,
+  *    exactly like the reference's in-memory register reads
+  *    (`mpeg2_sp.c:1120-1235`).
   */
 object TsPipeline {
 
@@ -28,18 +31,29 @@ object TsPipeline {
   val DefaultCapture =
     "/root/reference/mpeg2ts/utests/assets/san_diego_200kbps.ts"
 
-  /** The capture's 188-byte records with their seq. A path nothing
-    * matches (a glob or a directory may) fails here in one line naming
-    * it, not as the input format's error from the first job. */
-  private def records(spark: SparkSession, path: String)
-      : RDD[(Array[Byte], Long)] = {
+  /** Fails in one line naming `path` when nothing matches it (a glob or
+    * a directory may), before any reader plans a job over it; returns
+    * `path`. Every capture reader goes through this check. */
+  def requireCapture(path: String,
+      conf: org.apache.hadoop.conf.Configuration =
+        new org.apache.hadoop.conf.Configuration()): String = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val hits = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .globStatus(p)
+    val hits = p.getFileSystem(conf).globStatus(p)
     if (hits == null || hits.isEmpty)
       throw new java.io.FileNotFoundException(s"TS capture not found: $path")
-    spark.sparkContext.binaryRecords(path, TsCodec.PacketSize).zipWithIndex()
+    path
   }
+
+  /** The capture's raw 188-byte records, after [[requireCapture]]. */
+  def rawRecords(spark: SparkSession, path: String): RDD[Array[Byte]] =
+    spark.sparkContext.binaryRecords(
+      requireCapture(path, spark.sparkContext.hadoopConfiguration),
+      TsCodec.PacketSize)
+
+  /** The capture's 188-byte records with their seq. */
+  private def records(spark: SparkSession, path: String)
+      : RDD[(Array[Byte], Long)] =
+    rawRecords(spark, path).zipWithIndex()
 
   /** S2: fixed-width 188-byte record scan with a stable per-record seq.
     * zipWithIndex runs one lightweight count job per partition — the
@@ -92,7 +106,7 @@ object TsPipeline {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val p = Paths.get(CorruptedCapture)
     if (!Files.exists(p)) {
-      val bytes = Files.readAllBytes(Paths.get(DefaultCapture))
+      val bytes = Files.readAllBytes(Paths.get(requireCapture(DefaultCapture)))
       val n = bytes.length / TsCodec.PacketSize
       var i = 0
       while (i < n) {
@@ -207,16 +221,14 @@ object TsPipeline {
     * first, read the PAT's referenced PIDs (a tiny dimension — the one
     * legitimate driver-side collect), then assemble {PAT, SDT, PMT PIDs}.
     * This replaces the reference's launch-processor-on-new-PID machinery
-    * (`mpeg2_sp.c:1560-1603`) with a second distributed pass. */
-  def psiSections(spark: SparkSession, pkts0: Dataset[TsPacket],
-      pin: Boolean = true): Dataset[PsiSection] = {
+    * (`mpeg2_sp.c:1560-1603`) with a second distributed pass.
+    *
+    * Both passes read `pkts`, and nothing is cached here: a caller whose
+    * packets are costly to recompute pins them itself (`TsLake` caches
+    * the decoded scan; `packetsWithRejects` caches its decoded RDD). */
+  def psiSections(spark: SparkSession, pkts: Dataset[TsPacket])
+      : Dataset[PsiSection] = {
     import spark.implicits._
-    // two passes (PAT discovery, then full PSI assembly) read the same
-    // scan — cache it (PSI-scale data; for a 100 TB capture the PAT pass
-    // reads a pushed-down pid=0 slice instead). `pin = false` is for
-    // callers whose input is ALREADY session-pinned (re-caching an
-    // identical plan is a no-op plus a CacheManager warning).
-    val pkts = if (pin) pkts0.cache() else pkts0
     val patSecs = sections(pkts.filter(_.pid == 0))
     val pmtPids = patSecs
       .flatMap(PsiCodec.decodePat _)
@@ -346,20 +358,62 @@ object TsPipeline {
     * PAT programs (program 0 = network PID excluded, F9) left-joined to
     * SDT service names (missing → ""), ES count from PMT. */
   def programsSummary(spark: SparkSession, pkts: Dataset[TsPacket])
-      : DataFrame = {
-    val secs = psiSections(spark, pkts).cache()
-    try programsSummaryFrom(spark, secs) finally secs.unpersist()
-  }
+      : DataFrame =
+    programsSummaryFrom(spark, psiSections(spark, pkts))
 
-  /** Same projection over an already-assembled (typically shared/cached)
-    * sections relation. */
+  /** The summary's columns, in [[programsSummaryFromTables]]' order,
+    * names, types and nullability. */
+  val ProgramsSummarySchema: StructType = StructType(Seq(
+    StructField("program_number", IntegerType, nullable = false),
+    StructField("reference_pid", IntegerType, nullable = false),
+    StructField("service_name", StringType, nullable = false),
+    StructField("pcr_pid", IntegerType, nullable = true),
+    StructField("n_es", LongType, nullable = false)))
+
+  /** Same projection over an already-assembled sections relation, run
+    * at call time: [[latestTables]] runs once, as one `collect()` of the
+    * winner-version sections (a few per table, however long the
+    * capture); PAT, PMT and SDT are decoded on the driver and joined by
+    * [[programsJoin]]. Returns a local DataFrame with the same rows and
+    * schema as [[programsSummaryFromTables]], ordered by program number;
+    * sections are read in (pid, tableId, extension, section) order, so a
+    * program's PCR PID is picked deterministically. */
   def programsSummaryFrom(spark: SparkSession, secs: Dataset[PsiSection])
       : DataFrame = {
+    import scala.jdk.CollectionConverters._
     val latest = latestTables(secs)
-    programsSummaryFromTables(
-      patFromLatest(spark, latest),
-      pmtFromLatest(spark, latest),
-      sdtFromLatest(spark, latest))
+      .as[PsiSection](Encoders.product[PsiSection]).collect().toSeq
+      .sortBy(s => (s.pid, s.tableId, s.tableIdExtension, s.sectionNumber))
+    val names = latest.filter(_.tableId == 0x42).flatMap(PsiCodec.decodeSdt)
+      .groupMap(_.serviceId)(_.serviceName).withDefaultValue(Seq(None))
+    val rows = programsJoin(
+      latest.flatMap(s => PsiCodec.decodePat(s).map(_ -> ())),
+      latest.flatMap(s => PsiCodec.decodePmt(s).map(_ -> ()))
+    ).flatMap { case (r, _, pmts) =>
+      // the DataFrame join groups PMT *ES rows*: a PMT with no ES
+      // contributes neither a PCR PID nor a count
+      val withEs = pmts.map(_._1).filter(_.es.nonEmpty)
+      val pcr = withEs.headOption.map(p => Int.box(p.pcrPid)).orNull
+      val nEs = withEs.map(_.es.length.toLong).sum
+      names(r.programNumber).map(n =>
+        Row(r.programNumber, r.referencePid, n.getOrElse(""), pcr, nEs))
+    }
+    spark.createDataFrame(rows.asJava, ProgramsSummarySchema)
+  }
+
+  /** PAT ⋈ PMT by program number, the one join behind the batch
+    * programs summary and the live programs document
+    * (`TableState.programs`): every PAT entry but the network PID (F9),
+    * with the PMTs carrying its program number in input order (empty
+    * when none has completed), ordered by program number. Each side
+    * carries a caller's tag, such as the version of its table. */
+  def programsJoin[A, B](pat: Seq[(PatRow, A)], pmts: Seq[(PmtProgram, B)])
+      : Seq[(PatRow, A, Seq[(PmtProgram, B)])] = {
+    val byProgram = pmts.groupBy(_._1.programNumber)
+    pat.filter(_._1.programNumber != 0).sortBy(_._1.programNumber)
+      .map { case (r, a) =>
+        (r, a, byProgram.getOrElse(r.programNumber, Nil))
+      }
   }
 
   /** The summary join itself, over precomputed (typically

@@ -23,6 +23,12 @@ Every run is kept: the working tree's run records stay in its own
 before the temporary checkout is removed, and every pair's result lines
 go to .bench_build/ab/<workload>-seed<seed>.json. Nothing under
 perfbench/ is changed.
+
+After the end-to-end table it prints, per named operation of the
+workload (batch_sweep's 14 calls), each side's median wall and CPU over
+the measured passes (pass >= warmup_passes) of its finished runs, read
+from those run records; that shows which call moved. A workload whose
+records carry no timed named operations prints no such table.
 """
 import argparse
 import json
@@ -132,6 +138,57 @@ def report(metrics, pairs):
               f"{sum(r['attempted'] for r in ok)} operations failed")
 
 
+def record(side, workload, seed):
+    """A finished run's record, as perfbench/run.py wrote it."""
+    runs = (os.path.join(OUT, "base-runs") if side == "base" else
+            os.path.join(ROOT, ".bench_build", "runs"))
+    with open(os.path.join(runs, f"{workload}-seed{seed}-trace0.json")) as f:
+        return json.load(f)["run"]
+
+
+def report_calls(workload, pairs):
+    """Per named operation, each side's median wall and CPU seconds over
+    the measured passes of its finished runs."""
+    calls = {}  # name -> side -> ([wall_s], [cpu_s])
+    for p in pairs:
+        for side in ("base", "change"):
+            if not p[side]:
+                continue
+            run = record(side, workload, p["seed"])
+            for o in run["ops"]:
+                if ("name" not in o or "wall_s" not in o
+                        or o["pass"] < run["warmup_passes"]):
+                    continue
+                w, c = calls.setdefault(o["name"], {}).setdefault(
+                    side, ([], []))
+                w.append(o["wall_s"])
+                c.append(o["cpu_s"])
+    if not calls:
+        return
+
+    def med(name, side, i):
+        xs = calls[name].get(side, ([], []))[i]
+        return statistics.median(xs) if xs else None
+
+    def fmt(x):
+        return "-" if x is None else f"{x:.3f}"
+
+    def change(b, c):
+        return f"{(c - b) / b:+.1%}" if b and c is not None else "-"
+
+    rows = [("call", "base wall_s", "change wall_s", "change",
+             "base cpu_s", "change cpu_s", "change")]
+    for name in calls:
+        bw, cw = med(name, "base", 0), med(name, "change", 0)
+        bc, cc = med(name, "base", 1), med(name, "change", 1)
+        rows.append((name, fmt(bw), fmt(cw), change(bw, cw), fmt(bc),
+                     fmt(cc), change(bc, cc)))
+    widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
+    print("per call, medians over the measured passes:")
+    for r in rows:
+        print("  ".join(s.ljust(w) for s, w in zip(r, widths)).rstrip())
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
@@ -171,6 +228,7 @@ def main():
     print(f"{a.workload}: HEAD {head} (base) vs working tree (change), "
           f"{a.pairs} interleaved pairs, seeds {a.seed}-{a.seed + a.pairs - 1}")
     report(metrics, pairs)
+    report_calls(a.workload, pairs)
     return 0
 
 
