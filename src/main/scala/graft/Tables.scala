@@ -78,13 +78,10 @@ object Tables {
     * optimization. Cache size is bounded by the spread trigger itself:
     * it only fires for inputs under parallelism × maxPartitionBytes,
     * and the pin additionally requires ≤ 256 MB on disk. */
-  private val spreadMemo = SessionMemo.forCachedDataFrames()
   def spreadCached(s: SparkSession, dir: String, name: String,
-      key: org.apache.spark.sql.Column): DataFrame =
-    spreadCachedBy(s, load(s, dir, name), s"$dir/$name.parquet", key)
-
-  def spreadCachedBy(s: SparkSession, df: DataFrame, path: String,
       key: org.apache.spark.sql.Column): DataFrame = {
+    val df = load(s, dir, name)
+    val path = s"$dir/$name.parquet"
     val target = s.sparkContext.defaultParallelism.toLong
     val maxSplit =
       math.max(1L, s.sessionState.conf.filesMaxPartitionBytes)
@@ -94,7 +91,8 @@ object Tables {
     // spreading the same table on different keys must not silently
     // share the first caller's layout (round-9 advice)
     if (splits >= target || bytes > 256L * 1024 * 1024) df
-    else spreadMemo(s, s"$path#spread#$key")(df.repartition(key))
+    else SessionMemo.cached(s, "Tables.spread", dir, name, key)(
+      df.repartition(key))
   }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")

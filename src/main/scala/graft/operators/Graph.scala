@@ -39,9 +39,8 @@ object Graph {
     * operation (the pair self-joins, g6's part-degree groupBy+join)
     * exchange-free. At cluster scale this relation IS the graph's
     * storage layout — a bucketed edge table. */
-  private val memo = graft.SessionMemo.forCachedDataFrames()
   private[graft] def psRel(s: SparkSession, d: String): DataFrame =
-    memo(s, d + "#ps")(graft.Tables.lineitem(s, d)
+    graft.SessionMemo.cached(s, "Graph.ps", d)(graft.Tables.lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sup"))
       // ONE exchange, not two: hash(p) satisfies the distinct's
       // ClusteredDistribution(p, sup), so repartitioning FIRST makes
@@ -58,7 +57,7 @@ object Graph {
     * Exchange-free on both sides: psRel is already partitioned on the
     * join key. */
   private[graft] def coPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d + "#copairs") {
+    graft.SessionMemo.cached(s, "Graph.copairs", d) {
       val ps = psRel(s, d)
       ps.as("a")
         .join(ps.as("b"),
@@ -100,7 +99,7 @@ object Graph {
     * this relation IS the graph's storage layout — a node-keyed
     * adjacency table, the standard Pregel representation. */
   private[graft] def adjBySrc(s: SparkSession, d: String): DataFrame =
-    memo(s, d + "#adj_src")(adjOf(edgesOf(s, d)))
+    graft.SessionMemo.cached(s, "Graph.adj_src", d)(adjOf(edgesOf(s, d)))
 
   /** Flat distinct (src, dst) edges → (node, dsts, deg) adjacency.
     * Neighbor-array ORDER is free (every consumer aggregates over the
@@ -276,7 +275,7 @@ object Graph {
     * queries per session, so it rides the session memo like psRel /
     * coPairs. ≤ 2000 rows by construction — always cheap to pin. */
   private[graft] def backboneEdges(s: SparkSession, d: String): DataFrame =
-    memo(s, d + "#bb_edges")(coPairs(s, d)
+    graft.SessionMemo.cached(s, "Graph.bb_edges", d)(coPairs(s, d)
       .orderBy(col("n_shared").desc, col("s_a"), col("s_b"))
       .limit(2000)
       .select("s_a", "s_b"))
@@ -289,7 +288,7 @@ object Graph {
     * sides + the closure probe) by g4 AND g9 → session memo. */
   private[graft] def backboneOriented(s: SparkSession, d: String)
       : DataFrame =
-    memo(s, d + "#bb_oriented") {
+    graft.SessionMemo.cached(s, "Graph.bb_oriented", d) {
       val edges = backboneEdges(s, d)
       val deg = edges
         .select(explode(array(col("s_a"), col("s_b"))).as("node"))
@@ -503,7 +502,8 @@ object Graph {
     // session-memoized pin: g8 runs twice per Verify (the OpLake g8_msf
     // dump + the query itself) — a per-call .cache() double-registered
     // the identical plan (the last "already cached" warning standing)
-    val edges = memo(s, d + "#g8_edges")(g8Backbone(s, d))
+    val edges =
+      graft.SessionMemo.cached(s, "Graph.g8_edges", d)(g8Backbone(s, d))
     var labels = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node"))).distinct()
       .select(col("node"), col("node").as("comp"))

@@ -225,7 +225,7 @@ object Multimodal {
     // memoized per (session, dir): the banded self-join is the
     // expensive stage and BOTH consumers read it — m6's own report and
     // m8's closure — so the sweep pays pair-gen once, not twice
-    pairMemo(s, d + "#m6")(
+    graft.SessionMemo.cached(s, "Multimodal.m6pairs", d)(
       TextOps.bandedHammingPairs(m6Sigs(s, d)))
 
   /** m7 — SHARED-SEGMENT media near-dup (scene-level): two assets are
@@ -266,12 +266,6 @@ object Multimodal {
     * re-derives the closure with an independent algorithm
     * (recursive-SQL reachability over the same signature dump), the
     * t17/g2 cross-check discipline. */
-  /** m6's pair relation pinned once per (session, dir) via
-    * [[graft.SessionMemo]] — same lifecycle as Graph's psRel/coPairs,
-    * so warm-up + timed runs share one cache entry instead of
-    * re-caching an already-cached plan. */
-  private val pairMemo = graft.SessionMemo.forCachedDataFrames()
-
   def m8AssetClusters(s: SparkSession, d: String): DataFrame = {
     // the m6 pair-gen is the expensive part (signature scan + banded
     // self-join) and arrives session-pinned from m6MediaNearDup; the
@@ -435,15 +429,13 @@ object Multimodal {
     * OR a split drift now goes red independently of m13. Memoized per
     * (session, sf): the replay collects the ~60-chunk sample once. */
   def m13bStreamSplitAudit(s: SparkSession, d: String): DataFrame =
-    replayMemo(s, d + "#m13b")(
+    graft.SessionMemo.cached(s, "Multimodal.m13b", d)(
       graft.streaming.TwsOps.chunkPrefixReplay(s, d)
         .select(col("doc_id"), col("format"),
           col("off").cast("long").as("off"),
           col("len").cast("long").as("len"),
           col("hash"), col("stored"),
           col("bytes_written").cast("long").as("bytes_written")))
-
-  private val replayMemo = graft.SessionMemo.forCachedDataFrames()
 
   /** m13 — the STREAM≡BATCH parity row for the CHUNK store (the
     * twelfth parity row; the m-family's second): batch recompute of

@@ -2284,6 +2284,26 @@ object Relational {
       .select(col("p_partkey"), col("p_size"), col("price_cents"))
   }
 
+  /** The (t, delta, d, hb) sweep-delta grid a36 and w35 share: each
+    * w8 session EXPLODES into its two sweep deltas (a union would
+    * re-derive the w8 session subtree per side), grouped to one row per
+    * (instant, sign) and tagged with its hour bucket. Each query reads
+    * it twice (the sweep chain and an hour-level relation), so it is a
+    * checkpointed session entry: measured, the two 0.24 s window stages
+    * of w8 ran twice per query without it. O(session boundaries). */
+  private def sweepDeltas(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.checkpointed(s, "Relational.sweepDeltas", d)(
+      w8SessionAgg(s, d)
+        .select(explode(array(
+          struct(expr("unix_micros(session_start)").as("t"),
+            lit(1L).as("delta")),
+          struct(expr("unix_micros(session_end)").as("t"),
+            lit(-1L).as("delta")))).as("e"))
+        .select(col("e.t").as("t"), col("e.delta").as("delta"))
+        .groupBy("t", "delta")
+        .agg((sum(col("delta"))).as("d"))
+        .withColumn("hb", expr("t div 3600000000")))
+
   /** a36 — PEAK CONCURRENCY (sweep line): the maximum number of
     * simultaneously-open sessions and the first instant it is reached
     * — the capacity-planning number behind "how many concurrent users
@@ -2300,23 +2320,7 @@ object Relational {
     * discipline, so no window ever holds the row-scale sweep in one
     * task; the final peak is a struct-argmax aggregate. */
   def a36PeakConcurrency(s: SparkSession, d: String): DataFrame = {
-    // one session pass: each session EXPLODES into its two sweep
-    // deltas (a union would re-derive the w8 session subtree per
-    // side, and a separate count a third time); the grouped boundary
-    // relation is then localCheckpoint'ed ONCE for its two consumers
-    // (sweep chain + hour-offset relation) — the w35 / t35
-    // materialize-once discipline, O(session boundaries)
-    val deltas = w8SessionAgg(s, d)
-      .select(explode(array(
-        struct(expr("unix_micros(session_start)").as("t"),
-          lit(1L).as("delta")),
-        struct(expr("unix_micros(session_end)").as("t"),
-          lit(-1L).as("delta")))).as("e"))
-      .select(col("e.t").as("t"), col("e.delta").as("delta"))
-      .groupBy("t", "delta")
-      .agg((sum(col("delta"))).as("d"))
-      .withColumn("hb", expr("t div 3600000000"))
-      .localCheckpoint()
+    val deltas = sweepDeltas(s, d)
     val wloc = Window.partitionBy("hb").orderBy("t", "delta")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val woff = Window.orderBy("hb")
@@ -2395,24 +2399,7 @@ object Relational {
   }
 
   def w35ConcurrencyPctile(s: SparkSession, d: String): DataFrame = {
-    // the grouped boundary relation (2 rows per session before the
-    // groupBy, one per distinct instant after) feeds BOTH the hour
-    // grid and the running-sum chain — localCheckpoint it once (the
-    // t35 materialize-once discipline, guide §1.2) instead of
-    // re-running the whole w8 sessionization subtree per consumer
-    // (measured: the two 0.24 s window stages ran twice in the warm
-    // profile). O(session boundaries), lineage-cut.
-    val deltas = w8SessionAgg(s, d)
-      .select(explode(array(
-        struct(expr("unix_micros(session_start)").as("t"),
-          lit(1L).as("delta")),
-        struct(expr("unix_micros(session_end)").as("t"),
-          lit(-1L).as("delta")))).as("e"))
-      .select(col("e.t").as("t"), col("e.delta").as("delta"))
-      .groupBy("t", "delta")
-      .agg((sum(col("delta"))).as("d"))
-      .withColumn("hb", expr("t div 3600000000"))
-      .localCheckpoint()
+    val deltas = sweepDeltas(s, d)
     val wloc = Window.partitionBy("hb").orderBy("t", "delta")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val woff = Window.orderBy("hb")
@@ -2576,17 +2563,18 @@ object Relational {
     // (no separate cohort aggregate + join re-scanning the facts),
     // and the cohort SIZE is the triangle's own age-0 buyer count —
     // every cohort member's first purchase is at age 0 by definition.
-    // The calendar²-bounded triangle is cached for its two consumers.
-    val tri = events(s, d).filter(col("event_type") === "purchase")
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 604800000000").as("week"),
-        expr("cast(floor(value * 100 + 0.5) as bigint)").as("cents"))
-      .withColumn("cw",
-        min(col("week")).over(Window.partitionBy("user_id")))
-      .groupBy(col("cw"), (col("week") - col("cw")).as("age"))
-      .agg(countDistinct(col("user_id")).as("n_buyers"),
-        sum(col("cents")).as("cents"))
-      .cache()
+    // The calendar²-bounded triangle is a cached session entry for its
+    // two consumers.
+    val tri = graft.SessionMemo.cached(s, "Relational.w30triangle", d)(
+      events(s, d).filter(col("event_type") === "purchase")
+        .select(col("user_id"),
+          expr("unix_micros(ts) div 604800000000").as("week"),
+          expr("cast(floor(value * 100 + 0.5) as bigint)").as("cents"))
+        .withColumn("cw",
+          min(col("week")).over(Window.partitionBy("user_id")))
+        .groupBy(col("cw"), (col("week") - col("cw")).as("age"))
+        .agg(countDistinct(col("user_id")).as("n_buyers"),
+          sum(col("cents")).as("cents")))
     val sized = tri.filter(col("age") === 0)
       .select(col("cw"), col("n_buyers").as("n_users"))
     val w = Window.partitionBy("cw").orderBy("age")
@@ -2609,16 +2597,9 @@ object Relational {
     * E⌊ — the classic mistake of dropping empty cells is structurally
     * impossible. */
   def a38Chi2(s: SparkSession, d: String): DataFrame = {
-    // the cell grid is |types|·7 rows — localCheckpoint it so its
-    // FOUR consumers (row/column marginals, the total, the grid join)
-    // share one event scan (cheaper to re-read than the columnar
-    // cache, measured round 10); broadcast pinned so statistics can't
-    // flip the outer-join strategy (the t13 lesson)
-    val cells = events(s, d)
-      .select(col("event_type"),
-        expr("(unix_micros(ts) div 86400000000) % 7").as("dow"))
-      .groupBy("event_type", "dow").agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+    // broadcast pinned so statistics can't flip the outer-join
+    // strategy (the t13 lesson)
+    val cells = contingencyCells(s, d)
     val rt = cells.groupBy("event_type").agg(sum(col("o")).as("r"))
     val ct = cells.groupBy("dow").agg(sum(col("o")).as("c"))
     val n = cells.agg(sum(col("o")).as("n"))
@@ -2633,6 +2614,18 @@ object Relational {
           "* 1000000 div greatest(e_floor, 1)"))
   }
 
+  /** The event_type × day-of-week contingency cells (|types|·7 rows)
+    * a38 and a44 share. Each reads it four times (row/column marginals,
+    * the total, the grid join), so both read ONE event scan per
+    * session. Checkpointed, not cached: cheaper to re-read than the
+    * columnar cache (a38, measured round 10). */
+  private def contingencyCells(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.checkpointed(s, "Relational.contingencyCells", d)(
+      events(s, d)
+        .select(col("event_type"),
+          expr("(unix_micros(ts) div 86400000000) % 7").as("dow"))
+        .groupBy("event_type", "dow").agg(count(lit(1)).as("o")))
+
   /** a44 — CRAMÉR'S V effect size over a38's contingency grid (the
     * association STRENGTH a chi-square p-value alone doesn't give —
     * the standard report line of every feature-vs-feature dependence
@@ -2646,10 +2639,7 @@ object Relational {
     * counts (the 100 TB bound is ~10¹² rows → 10³⁰·10⁶ at the edge;
     * beyond that, drop the ppm scale before the square). */
   def a44CramersV(s: SparkSession, d: String): DataFrame = {
-    val cells = events(s, d)
-      .select(col("event_type"),
-        expr("(unix_micros(ts) div 86400000000) % 7").as("dow"))
-      .groupBy("event_type", "dow").agg(count(lit(1)).as("o"))
+    val cells = contingencyCells(s, d)
     val rt = cells.groupBy("event_type").agg(sum(col("o")).as("r"))
     val ct = cells.groupBy("dow").agg(sum(col("o")).as("c"))
     val n = cells.agg(sum(col("o")).as("n"))

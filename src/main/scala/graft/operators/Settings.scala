@@ -177,8 +177,7 @@ object Settings {
   /** The parsed-and-allocated registry relation, memoized per
     * (session, dir) — k5 (create responses) and k6 (list projection)
     * both read it; it is tiny (one row per user), so the cache is a few
-    * KB. Evicted via [[graft.SessionMemo]]. */
-  private val registryMemo = graft.SessionMemo.forCachedDataFrames()
+    * KB. */
 
   /** Warm the memoized registry (the daemon's in-memory instance array,
     * `stream_procs.c:53` — a GET/POST reads it, never re-parses request
@@ -187,7 +186,7 @@ object Settings {
     registry(s, d).count()
 
   private def registry(s: SparkSession, d: String): DataFrame =
-    registryMemo(s, d) {
+    graft.SessionMemo.cached(s, "Settings.registry", d) {
       val m = expr("str_to_map(qs, '&', '=')")
       val parsed = createRequests(s, d).select(
         col("event_id"),

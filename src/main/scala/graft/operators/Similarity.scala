@@ -203,10 +203,9 @@ object Similarity {
     * single plan: once for cell radii, once for the scan side). At
     * cluster scale this relation IS the index build — computed once,
     * persisted (e10), served many times. */
-  private val assignMemo = graft.SessionMemo.forCachedDataFrames()
   private[graft] def assignedRel(s: SparkSession, d: String,
       k: Int = 16): DataFrame =
-    assignMemo(s, s"$d#assigned-k$k")(
+    graft.SessionMemo.cached(s, "Similarity.assigned", d, k)(
       assignToCentroids(embeddings(s, d),
         centroidsOf(embeddings(s, d), k)))
 
@@ -451,10 +450,10 @@ object Similarity {
   /** The trained e6 centroid table (16 × dim floats), memoized per
     * (session, dir): e6 and the Verify-time dump ([[graft.OpLake]]) must
     * see the SAME model, and Lloyd's iterations shouldn't re-run per
-    * consumer. Float32 — identical to what the assignment join sees. */
-  private val kmMemo = graft.SessionMemo.forDataFrames()
+    * consumer. Float32 — identical to what the assignment join sees.
+    * The model is collected to the driver, so the entry pins nothing. */
   private[graft] def trainedCentroids(s: SparkSession, d: String)
-      : DataFrame = kmMemo(s, d) {
+      : DataFrame = graft.SessionMemo.local(s, "Similarity.kmeans", d) {
     import s.implicits._
     kmeansCentroids(s, d, k = 16, iters = 3).zipWithIndex
       .map { case (v, i) => (i, v.map(_.toFloat)) }.toSeq
@@ -520,10 +519,11 @@ object Similarity {
     * the PQ index build: computed once, persisted, served many times.
     * Non-standard callers (the z9 20× probe, parameter sweeps) still
     * encode inline via `codesOpt = None`. */
-  private val pqCodesMemo = graft.SessionMemo.forCachedDataFrames()
-  private[graft] def pqCodesRel(s: SparkSession, d: String): DataFrame =
-    pqCodesMemo(s, s"$d#pqcodes")(pqCodesOf(assignedRel(s, d),
-      pqCodebooksOf(embeddings(s, d), 8, 16, 64), 8, 64))
+  private[graft] def pqCodesRel(s: SparkSession, d: String, m: Int = 8,
+      ks: Int = 16, dim: Int = 64): DataFrame =
+    graft.SessionMemo.cached(s, "Similarity.pqcodes", d, m, ks, dim)(
+      pqCodesOf(assignedRel(s, d), pqCodebooksOf(embeddings(s, d), m, ks,
+        dim), m, dim))
 
   /** The per-subspace codebook table (code, j, cb, n2cb). Self-dots
     * are precomputed per side (n2 columns) so the per-pair encode work
@@ -571,8 +571,8 @@ object Similarity {
       codesOpt: Option[DataFrame] = None)
       : DataFrame = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
-    // codes come from pqCodesRel, whose memo key does not carry the
-    // (m, ks, dim) it was encoded with: only its own parameters fit
+    // a precomputed code table carries no record of the (m, ks, dim)
+    // it was encoded with; its callers pass pqCodesRel's defaults
     require(codesOpt.isEmpty || (m, ks, dim) == (8, 16, 64),
       s"precomputed PQ codes are (m, ks, dim) = (8, 16, 64), " +
         s"not ($m, $ks, $dim)")
@@ -915,10 +915,9 @@ object Similarity {
     * sweep (guide §1.2). Results are queries×k rows (≤ 50), so the
     * pin is O(1); the standalone e1/e5/e8/e14 bench rows keep their
     * own bare plans (and plan sigs) untouched. */
-  private val evalServeMemo = graft.SessionMemo.forCachedDataFrames()
   private def servedTop(s: SparkSession, d: String, which: String)
       : DataFrame =
-    evalServeMemo(s, s"$d#serve_$which")(which match {
+    graft.SessionMemo.cached(s, "Similarity.served", d, which)(which match {
       case "e1" => e1CosineTopK(s, d)
       case "e5" => e5IvfAnn(s, d)
       case "e8" => e8IvfPqAnn(s, d)
@@ -1408,12 +1407,6 @@ object Similarity {
     * UNROLLED (the g1 fixed-iteration discipline), so Catalyst sees
     * one static DAG — no driver-side loop over collected rows. Ties
     * break to the lowest cand_id; ids-only output. */
-  /** e31's per-round pick relations: queries×round rows, lineage
-    * truncated by eager localCheckpoint (see e31Mmr body) — a plain
-    * DataFrame memo, NOT the caching memo (the checkpoint already
-    * owns the materialization; onEvict unpersists the backing RDD). */
-  private val pickMemo = graft.SessionMemo.forDataFrames()
-
   def e31Mmr(s: SparkSession, d: String, k: Int = 5,
       nCand: Int = 20): DataFrame = {
     val emb = embeddings(s, d)
@@ -1426,7 +1419,8 @@ object Similarity {
     // the corpus scan, the round-5 "composition × union" plan
     // explosion (402 parquet scans at k=5). Bounded + many-consumer =
     // exactly the pin the house rule allows.
-    val cands = assignMemo(s, d + s"#e31cands$nCand") {
+    val cands = graft.SessionMemo.cached(s, "Similarity.e31cands", d,
+        nCand) {
       emb
         .select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
         .join(broadcast(q), col("query_id") =!= col("cand_id"))
@@ -1442,7 +1436,8 @@ object Similarity {
         // near-empty tasks
         .coalesce(1)
     }
-    val pairSim = assignMemo(s, d + s"#e31ps$nCand") {
+    val pairSim = graft.SessionMemo.cached(s, "Similarity.e31pairsim", d,
+        nCand) {
       cands
         .select(col("query_id"), col("cand_id").as("a"),
           col("cv").as("av"))
@@ -1463,15 +1458,16 @@ object Similarity {
     // constant-size jobs over the two pinned relations and the plan
     // the next round sees is always depth-1. Memoized per (session,
     // dir) like the relations themselves.
-    var picks = pickMemo(s, d + s"#e31pick1_$nCand")(
+    var picks = graft.SessionMemo.checkpointed(s, "Similarity.e31pick", d,
+        nCand, 1)(
       base.groupBy("query_id")
         .agg(max_by(col("cand_id"),
           struct(col("simq"), (-col("cand_id")).as("t"))).as("sel_id"))
-        .select(col("query_id"), col("sel_id"), lit(1).as("pick"))
-        .localCheckpoint())
+        .select(col("query_id"), col("sel_id"), lit(1).as("pick")))
     for (t <- 2 to k) {
       val prev = picks
-      val next = pickMemo(s, d + s"#e31pick${t}_$nCand") {
+      val next = graft.SessionMemo.checkpointed(s, "Similarity.e31pick", d,
+          nCand, t) {
         val maxSel = pairSim
           .join(prev.select(col("query_id"), col("sel_id").as("b")),
             Seq("query_id", "b"))
@@ -1493,7 +1489,6 @@ object Similarity {
             .as("sel_id"))
           .withColumn("pick", lit(t))
           .unionByName(prev)
-          .localCheckpoint()
       }
       picks = next
     }

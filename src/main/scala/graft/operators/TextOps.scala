@@ -245,37 +245,34 @@ object TextOps {
     * the static planner mis-sizes (the pre-materialization cache
     * estimate) into a corpus-scaled broadcast. The only consumer of
     * counts is t6, which derives them itself behind a real Exchange. */
-  // localCheckpoint, not .cache(): seven consumers re-scan this
-  // relation and the RDD re-read beat the in-memory columnar cache on
-  // interleaved minima (t13 0.50 vs 0.78 s, t33 cpu 9 vs 14 s warm —
-  // round 10); the materialized stats also make build-side sizes real
+  /** The stress probes' shingle relation over a replicated corpus,
+    * lineage-cut for the one call that reads it (like [[shRelation]]). */
   private[operators] def shRelationOf(docs: DataFrame): DataFrame =
     shingleExplodedOf(docs).localCheckpoint()
 
   // memoized per (session, dir): seven queries (t7/t8/t13/t25/t32/
-  // t33 + the lsh pair build) read the same shingle relation — one
-  // cache entry, not one re-cache warning per consumer
+  // t33 + the lsh pair build) read the same shingle relation.
+  // Checkpointed, not cached: the RDD re-read beat the in-memory
+  // columnar cache on interleaved minima (t13 0.50 vs 0.78 s, t33 cpu
+  // 9 vs 14 s warm — round 10); the materialized stats also make
+  // build-side sizes real
   private def shRelation(s: SparkSession, d: String): DataFrame =
-    lshMemo(s, d + "#sh")(shRelationOf(documents(s, d)))
+    graft.SessionMemo.checkpointed(s, "TextOps.shingles", d)(
+      shingleExploded(s, d))
 
   /** Verified LSH near-dup pair set, memoized per (session, dir): t7,
     * t10 and t11 all consume the same pairs — one banded join + verify
-    * per session instead of three. Evicted via [[graft.SessionMemo]].
-    * `lshCached` entries are PINNED by the memo itself (single cache
-    * owner — builders hand back bare plans); `lshMemo` entries reuse
-    * the plan without pinning (the shingle relation is scan-shaped and
-    * cheap to recompute). */
-  private val lshMemo = graft.SessionMemo.forDataFrames()
-  private val lshCached = graft.SessionMemo.forCachedDataFrames()
+    * per session instead of three. */
   private[graft] def lshPairs(s: SparkSession, d: String): DataFrame =
-    lshCached(s, d)(minHashLshOf(shRelation(s, d)))
+    graft.SessionMemo.cached(s, "TextOps.lshPairs", d)(
+      minHashLshOf(shRelation(s, d)))
 
   /** Exact (t6) near-dup pair set, memoized per (session, dir) like
     * [[lshPairs]]: t6 and the t13 recall contract both consume it, and
     * t13's two aggregates would otherwise re-run the quadratic self-join
     * twice more per bench sweep. */
   private[graft] def exactPairs(s: SparkSession, d: String): DataFrame =
-    lshCached(s, d + "#exact")(exactPairsOf(s, d))
+    graft.SessionMemo.cached(s, "TextOps.exactPairs", d)(exactPairsOf(s, d))
 
   def t6NgramJaccard(s: SparkSession, d: String): DataFrame =
     exactPairs(s, d)
@@ -943,7 +940,7 @@ object TextOps {
     // memoized: t57's survivorship census re-reads the same closure,
     // and componentsOf pins its edge relation internally — one
     // closure run + one cache lineage per (session, dir)
-    lshCached(s, d + "#t17c")(
+    graft.SessionMemo.cached(s, "TextOps.t17components", d)(
       componentsOf(documents(s, d).select(col("doc_id")),
         lshPairs(s, d).select(col("doc_a"), col("doc_b"))))
 
@@ -1856,7 +1853,8 @@ object TextOps {
     // the hashed-feature relation feeds three consumers (raw counts,
     // target counts, the per-doc scoring join) — cache it once per
     // session instead of re-tokenizing the corpus three times
-    dsirScoreOf(lshCached(s, d + "#dsir")(dsirFeatsOf(s, d)))
+    dsirScoreOf(graft.SessionMemo.cached(s, "TextOps.dsirFeats", d)(
+      dsirFeatsOf(s, d)))
   }
 
   /** The DSIR hashed-feature relation (doc_id, source, f): md5-hashed
@@ -2437,13 +2435,11 @@ object TextOps {
     * auto-broadcast, where an unmaterialized cache's unknown stats
     * demoted it to a sort-merge join (observed in the round-10 plan
     * diff). */
-  private val t51UniMemo = graft.SessionMemo.forDataFrames()
   private def t51TrainUnigrams(s: SparkSession, d: String): DataFrame =
-    t51UniMemo(s, s"$d#t51uni")(
+    graft.SessionMemo.checkpointed(s, "TextOps.t51unigrams", d)(
       t51Toks(s, d).filter(col("is_train"))
         .select(explode(col("t")).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+        .groupBy("term").agg(count(lit(1)).as("cnt")))
 
   /** Seen-bigram branch of Stupid Backoff (Brants et al. 2007):
     * S(w₂|w₁) = c(w₁w₂)/c(w₁), carried as ln quantized to
@@ -2458,9 +2454,8 @@ object TextOps {
     * (Zipf-bounded) size keeps the scoring join's auto-broadcast
     * where the post-checkpoint join's inflated size ESTIMATE demoted
     * it to a sort-merge join. */
-  private val t51BgMemo = graft.SessionMemo.forDataFrames()
   def t51BigramModel(s: SparkSession, d: String): DataFrame =
-    t51BgMemo(s, s"$d#t51bg") {
+    graft.SessionMemo.checkpointed(s, "TextOps.t51bigrams", d) {
       val uni = t51TrainUnigrams(s, d)
       t51PairsOf(t51Toks(s, d).filter(col("is_train")))
         .groupBy(col("bigram"), col("w1")).agg(count(lit(1)).as("cbg"))
@@ -2469,7 +2464,6 @@ object TextOps {
         .select(col("bigram"),
           log(col("cbg").cast("double") / col("c1").cast("double"))
             .cast("decimal(18,9)").as("logp"))
-        .localCheckpoint()
     }
 
   /** Backoff branch: α·c(w₂)/N with α = 0.4, same quantization. */
@@ -2547,12 +2541,12 @@ object TextOps {
     * selection with ONE direct window, proving two-level ≡ direct. */
   def t53TokenBudget(s: SparkSession, d: String): DataFrame = {
     // 3 longs per doc, consumed 3× (budget, bucket subtotals, main) —
-    // cache instead of re-tokenizing the corpus three times; at lake
-    // scale this is the persisted score table (t41b discipline)
-    val scored = t21UnigramLogprob(s, d)
-      .select(col("doc_id"), col("n_tokens"),
-        expr("cast(floor(mean_logp * 1000000) as bigint)").as("score"))
-      .cache()
+    // a session entry instead of re-tokenizing the corpus three times;
+    // at lake scale this is the persisted score table (t41b discipline)
+    val scored = graft.SessionMemo.cached(s, "TextOps.t53scored", d)(
+      t21UnigramLogprob(s, d)
+        .select(col("doc_id"), col("n_tokens"),
+          expr("cast(floor(mean_logp * 1000000) as bigint)").as("score")))
     val tot = scored.agg(expr("sum(n_tokens) div 2").as("budget"))
     val bucketed = scored.withColumn("bkt", expr("shiftright(score, 10)"))
     val bucketW = org.apache.spark.sql.expressions.Window

@@ -150,11 +150,10 @@ object TsQueries {
 
   /** Tiny shared sub-relations (1–2 rows each), memoized + cached per
     * session: ts9/ts10/ts11 all read the PCR span and the per-program
-    * bitrate tenths. Eviction (stopped sessions, clearAll hook) lives in
-    * [[graft.SessionMemo]]. */
-  private val memo = graft.SessionMemo.forCachedDataFrames()
+    * bitrate tenths. */
   private def memoized(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = memo(s, key)(build)
+      build: => DataFrame): DataFrame =
+    graft.SessionMemo.cached(s, s"TsQueries.$key")(build)
 
   /** Stream duration (one row: span_s) from the PCR timelines: sane
     * positive deltas (≤1 s; larger = discontinuity, skipped —
@@ -345,13 +344,10 @@ object TsQueries {
     * pinned here, shared by the PAT/PMT/SDT builders below (one
     * assembly, not one per builder). The fixture's packets are a local
     * relation, so the two passes of `psiSections` read no scan. */
-  private val secMemo =
-    new graft.SessionMemo[org.apache.spark.sql.Dataset[
-      graft.ts.PsiSection]](_.unpersist(blocking = false))
   private def mptsSections(s: SparkSession)
       : org.apache.spark.sql.Dataset[graft.ts.PsiSection] =
-    secMemo(s, "mpts_secs")(TsPipeline.psiSections(s,
-      graft.ts.Fixtures.mptsWithPcr(s)).cache())
+    graft.SessionMemo.cached(s, "TsQueries.mpts_secs")(
+      TsPipeline.psiSections(s, graft.ts.Fixtures.mptsWithPcr(s)))
 
   private[graft] def mptsPmt(s: SparkSession): DataFrame =
     memoized(s, "mpts_pmt") {

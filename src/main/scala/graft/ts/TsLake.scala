@@ -22,23 +22,14 @@ object TsLake {
     * runs can never race each other's dumps (the round-7 m12 hazard). */
   @volatile var DumpDir = "/root/repo/target/tsdump"
 
-  private val cache =
-    new graft.SessionMemo[(Dataset[TsPacket], Dataset[PsiSection])]({
-      case (pk, secs) =>
-        pk.unpersist(blocking = false); secs.unpersist(blocking = false)
-    })
+  def packets(s: SparkSession): Dataset[TsPacket] =
+    graft.SessionMemo.cached(s, "TsLake.packets")(TsPipeline.packets(s))
 
-  def packets(s: SparkSession): Dataset[TsPacket] = rel(s)._1
-  def sections(s: SparkSession): Dataset[PsiSection] = rel(s)._2
-
-  private def rel(s: SparkSession) =
-    cache(s, "lake") {
-      // psiSections reads pk twice (PAT discovery, then assembly) and
-      // caches nothing itself: pk is pinned here, once
-      val pk = TsPipeline.packets(s).cache()
-      val secs = TsPipeline.psiSections(s, pk).cache()
-      (pk, secs)
-    }
+  /** psiSections reads the packets twice (PAT discovery, then assembly)
+    * and pins nothing itself: it reads the pinned packet entry. */
+  def sections(s: SparkSession): Dataset[PsiSection] =
+    graft.SessionMemo.cached(s, "TsLake.sections")(
+      TsPipeline.psiSections(s, packets(s)))
 
   @volatile private var dumpedTo: String = null
 
