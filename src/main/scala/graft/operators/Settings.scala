@@ -163,28 +163,16 @@ object Settings {
           col("duration_offset_msec"), col("vpos_offset_pels")))
   }
 
-  /** §2.12 instance create — `POST /stream_procs.json?proc_name=...`
-    * (`stream_procs_api_http.c:125-141`): parse the query string with
-    * the P9 machinery, reject requests without `proc_name`
-    * (STAT_EINVAL → the 404 envelope branch,
-    * `stream_procs_api_http.c:270-274`), allocate monotonically
-    * increasing proc_ids to accepted requests (the reference's procs
-    * module hands out the next free slot), and render each response
-    * through the shared envelope constant. The proc_id allocation is a
-    * running count over arrival order — a single-partition window, safe
-    * here because the registry is bounded by operator count (hundreds),
-    * never by corpus size. */
-  /** The parsed-and-allocated registry relation, memoized per
-    * (session, dir) — k5 (create responses) and k6 (list projection)
-    * both read it; it is tiny (one row per user), so the cache is a few
-    * KB. */
-
   /** Warm the memoized registry (the daemon's in-memory instance array,
     * `stream_procs.c:53` — a GET/POST reads it, never re-parses request
     * history). Bench bills it at session start like the PSI state. */
   def warmRegistry(s: SparkSession, d: String): Unit =
     registry(s, d).count()
 
+  /** The parsed-and-allocated registry relation, memoized per
+    * (session, dir) — k5 (create responses) and k6 (list projection)
+    * both read it; it is tiny (one row per user), so the cache is a few
+    * KB. */
   private def registry(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo.cached(s, "Settings.registry", d) {
       val m = expr("str_to_map(qs, '&', '=')")
@@ -232,6 +220,17 @@ object Settings {
         .drop("pnum", "ok", "run", "off")
     }
 
+  /** §2.12 instance create — `POST /stream_procs.json?proc_name=...`
+    * (`stream_procs_api_http.c:125-141`): parse the query string with
+    * the P9 machinery, reject requests without `proc_name`
+    * (STAT_EINVAL → the 404 envelope branch,
+    * `stream_procs_api_http.c:270-274`), allocate monotonically
+    * increasing proc_ids to accepted requests (the reference's procs
+    * module hands out the next free slot), and render each response
+    * through the shared envelope constant. The proc_id allocation is a
+    * running count over arrival order — a single-partition window, safe
+    * here because the registry is bounded by operator count (hundreds),
+    * never by corpus size. */
   def k5InstanceCreate(s: SparkSession, d: String): DataFrame =
     registry(s, d)
       .select(

@@ -509,6 +509,11 @@ object Similarity {
     ivfPqOf(embeddings(s, d), assignedOpt = Some(assignedRel(s, d)),
       codesOpt = Some(pqCodesRel(s, d)))
 
+  /** The (m, ks, dim) of [[pqCodesRel]]'s code table: its memo key,
+    * its build and [[ivfPqOf]]'s check on a precomputed table read
+    * this one triple. */
+  private val pqCodesParams = (8, 16, 64)
+
   /** The STANDARD-PATH PQ code table (whole corpus encoded against the
     * fixed 16-entry-per-subspace codebooks), memoized per (session,
     * dir) like [[assignedRel]]: e8, e14's candidate stage and the
@@ -519,11 +524,12 @@ object Similarity {
     * the PQ index build: computed once, persisted, served many times.
     * Non-standard callers (the z9 20× probe, parameter sweeps) still
     * encode inline via `codesOpt = None`. */
-  private[graft] def pqCodesRel(s: SparkSession, d: String, m: Int = 8,
-      ks: Int = 16, dim: Int = 64): DataFrame =
+  private[graft] def pqCodesRel(s: SparkSession, d: String): DataFrame = {
+    val (m, ks, dim) = pqCodesParams
     graft.SessionMemo.cached(s, "Similarity.pqcodes", d, m, ks, dim)(
       pqCodesOf(assignedRel(s, d), pqCodebooksOf(embeddings(s, d), m, ks,
         dim), m, dim))
+  }
 
   /** The per-subspace codebook table (code, j, cb, n2cb). Self-dots
     * are precomputed per side (n2 columns) so the per-pair encode work
@@ -572,9 +578,9 @@ object Similarity {
       : DataFrame = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     // a precomputed code table carries no record of the (m, ks, dim)
-    // it was encoded with; its callers pass pqCodesRel's defaults
-    require(codesOpt.isEmpty || (m, ks, dim) == (8, 16, 64),
-      s"precomputed PQ codes are (m, ks, dim) = (8, 16, 64), " +
+    // it was encoded with; every caller passes pqCodesRel's
+    require(codesOpt.isEmpty || (m, ks, dim) == pqCodesParams,
+      s"precomputed PQ codes are (m, ks, dim) = $pqCodesParams, " +
         s"not ($m, $ks, $dim)")
     val sub = dim / m
     val centroids = centroidsOf(emb, k)

@@ -246,7 +246,8 @@ object TextOps {
     * estimate) into a corpus-scaled broadcast. The only consumer of
     * counts is t6, which derives them itself behind a real Exchange. */
   /** The stress probes' shingle relation over a replicated corpus,
-    * lineage-cut for the one call that reads it (like [[shRelation]]). */
+    * lineage-cut for the one call that reads it; that call does not
+    * release the blocks. */
   private[operators] def shRelationOf(docs: DataFrame): DataFrame =
     shingleExplodedOf(docs).localCheckpoint()
 

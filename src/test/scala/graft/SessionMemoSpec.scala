@@ -69,15 +69,16 @@ class SessionMemoSpec extends SparkSuite {
   }
 
   test("keys that differ only in a build parameter do not share an entry") {
-    val m8 = Similarity.pqCodesRel(spark, sf)
-    val m4 = Similarity.pqCodesRel(spark, sf, m = 4)
-    assert(m8.agg(max(col("j"))).head().getInt(0) == 7)
-    assert(m4.agg(max(col("j"))).head().getInt(0) == 3)
+    val k16 = Similarity.assignedRel(spark, sf)
+    val k8 = Similarity.assignedRel(spark, sf, k = 8)
+    def lists(df: DataFrame): Long =
+      df.agg(countDistinct(col("centroid_id"))).head().getLong(0)
+    assert(lists(k16) == 16 && lists(k8) == 8)
     val keys = SessionMemo.keys.collect {
-      case (s, k) if (s eq spark) && k.startsWith("Similarity.pqcodes") => k
-    }
-    assert(keys.toSet == Set(s"Similarity.pqcodes($sf, 8, 16, 64)",
-      s"Similarity.pqcodes($sf, 4, 16, 64)"))
+      case (s, k) if s eq spark => k
+    }.toSet
+    assert(Set(s"Similarity.assigned($sf, 16)",
+      s"Similarity.assigned($sf, 8)").subsetOf(keys), keys)
   }
 }
 
