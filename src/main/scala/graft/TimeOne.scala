@@ -10,7 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * build (the query function), plan (to the physical plan), exec (the
   * count), wall and process-CPU seconds, rows. For the last rep, one
   * line per completed stage. A one-row result (a z-probe payload) is
-  * printed once, untimed. Extra conf via SPARK_GRAFT_CONF="k=v;k=v". */
+  * printed once, untimed. Then one line gives the persisted RDDs before
+  * and after `SessionMemo.clearAll()`: a pin the memo does not own
+  * shows up as a nonzero "after". Extra conf via SPARK_GRAFT_CONF. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -64,8 +66,19 @@ object TimeOne {
           df.columns.zip(df.collect().head.toSeq)
             .map { case (c, v) => s"$c=$v" }.mkString(" "))
       } catch { case e: Throwable => println(s"[timeone] $name FAILED: $e") }
+      val before = persisted(spark)
+      SessionMemo.clearAll()
+      println(s"[timeone] $name persisted: $before, ${persisted(spark)} " +
+        "after clearAll")
     }
     spark.stop()
+  }
+
+  /** The persisted RDDs: count and storage MB (memory + disk). */
+  private def persisted(spark: SparkSession): String = {
+    val sc = spark.sparkContext
+    f"${sc.getPersistentRDDs.size} rdds ${sc.getRDDStorageInfo
+      .map(r => r.memSize + r.diskSize).sum / 1e6}%.1f MB"
   }
 
   /** Blocks until the listener bus has delivered every queued event, so

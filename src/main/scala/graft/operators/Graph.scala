@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Pregel-on-DataFrames shape t17 uses for label propagation.
   * Iteration count is fixed (k=5), so the plan is statically unrolled
   * and AQE sizes every stage; at cluster scale each iteration would
-  * `localCheckpoint` to cut lineage, which changes nothing semantic.
+  * cut lineage with a checkpoint pinned through the session memo's
+  * round loop (as g5 does), which changes nothing semantic.
   *
   * Determinism: ranks are FIXED-POINT integers (micro-units of 1e-12,
   * the a24 integer-exact discipline) — `rank div deg` and the
@@ -110,16 +111,6 @@ object Graph {
       .select(col("src").as("node"), col("dsts"),
         size(col("dsts")).cast("long").as("deg"))
 
-  /** Flat-edge entry point for the z23/z27 scale probes: `edges` must
-    * arrive pinned (cache or checkpoint) by the CALLER; the derived
-    * adjacency is pinned via `pin` — `.cache()` (default) or eager
-    * `.localCheckpoint(true)` (the cluster recipe: lineage-cut blocks
-    * that survive plan growth without the cache manager). The z27
-    * probe measures the second path. */
-  private[graft] def pageRankOf(edges: DataFrame, k: Int,
-      pin: DataFrame => DataFrame = _.cache()): DataFrame =
-    pageRankOfAdj(pin(adjOf(edges)), k)
-
   private[graft] def pageRankOfAdj(adj: DataFrame, k: Int): DataFrame = {
     // the fused loop seeds round 1 unconditionally, so there is no
     // zero-round (uniform base vector) result to return
@@ -200,7 +191,7 @@ object Graph {
         (col("l_suppkey") * 2 + 1).as("doc_b"))
     val nodes = strong.select(col("doc_a").as("doc_id"))
       .union(strong.select(col("doc_b").as("doc_id"))).distinct()
-    TextOps.componentsOf(nodes, strong)
+    TextOps.componentsOf(nodes, strong, Seq("g2", d))
       .groupBy(col("comp"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(when(col("doc_id") % 2 === 0, 1L).otherwise(0L))
@@ -356,28 +347,27 @@ object Graph {
     val adj = adjBySrc(s, d)
     // adjacency keys ARE the distinct node set — no extra dedup pass
     val nodes = adj.select(col("node"))
-    var dist = nodes
+    graft.SessionMemo.rounds(s, "Graph.g5", rounds, d)(_.checkpoint(nodes
       .filter(col("node") % 2 === 1 && expr("node div 2") < 5)
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+      .select(col("node"), lit(0L).as("dist")))) { (dist, round, pins) =>
       val next = adj.join(dist, Seq("node"))
         .select(explode(col("dsts")).as("node"),
           (col("dist") + 1L).as("dist"))
-      dist = dist.unionByName(next)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-        // UNLIKE g1, each round reads the previous distance vector
-        // TWICE (the frontier join + the min-union) — a lazy unroll
-        // re-executes the whole prefix 2^rounds times (measured 2.3×
-        // slower at sf0.1), so the per-round eager pin stays
-        .localCheckpoint()
+      // UNLIKE g1, each round reads the previous distance vector
+      // TWICE (the frontier join + the min-union) — a lazy unroll
+      // re-executes the whole prefix 2^rounds times (measured 2.3×
+      // slower at sf0.1), so the per-round eager pin stays
+      (pins.checkpoint(dist.unionByName(next)
+        .groupBy("node").agg(min(col("dist")).as("dist"))),
+        round == rounds)
+    } { dist =>
+      val reached = dist.groupBy("dist")
+        .agg(count(lit(1)).as("n_nodes"))
+      val unreached = nodes.join(dist, Seq("node"), "left_anti")
+        .agg(count(lit(1)).as("n_nodes"))
+        .select(lit(-1L).as("dist"), col("n_nodes"))
+      reached.unionByName(unreached).filter(col("n_nodes") > 0)
     }
-    val reached = dist.groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"))
-    val unreached = nodes.join(dist, Seq("node"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1L).as("dist"), col("n_nodes"))
-    reached.unionByName(unreached).filter(col("n_nodes") > 0)
   }
 
   /** g6 — LINK PREDICTION by the Resource-Allocation index: supplier
@@ -417,9 +407,10 @@ object Graph {
     * graph-curation primitive. Peeling is the canonical DISTRIBUTED
     * decomposition shape: each round is one degree aggregate + two
     * SHUFFLE_HASH anti-joins on the edge relation (pinned — the drop
-    * set is node-scaled, never broadcastable at 100 TB), with the
-    * componentsOf eager-localCheckpoint discipline so round-r plans
-    * don't nest round-r−1. Rounds are diameter-ish-bounded (degree
+    * set is node-scaled, never broadcastable at 100 TB), each round's
+    * survivors eagerly checkpointed through the memo's round loop so
+    * round-r plans don't nest round-r−1, and the superseded round's
+    * checkpoint freed. Rounds are diameter-ish-bounded (degree
     * peeling converges in a handful of rounds on co-occurrence
     * graphs); a silent cap would return a WRONG core, so the loop
     * throws loudly at maxIters. The oracle unrolls the same peel a
@@ -428,40 +419,31 @@ object Graph {
     * the results must match exactly. */
   def g7Kcore(s: SparkSession, d: String): DataFrame =
     kcoreOf(coPairs(s, d).filter(col("n_shared") >= 2)
-      .select(col("s_a"), col("s_b")), k = 3)
+      .select(col("s_a"), col("s_b")), k = 3, Seq("g7", d))
 
-  private[graft] def kcoreOf(pairs: DataFrame, k: Int,
-      maxIters: Int = 10): DataFrame = {
-    var alive = pairs
-      .unionByName(pairs.select(col("s_b").as("s_a"), col("s_a").as("s_b")))
-      .localCheckpoint(true)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val drop = alive.groupBy("s_a").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k).select(col("s_a").as("gone"))
-      if (drop.isEmpty) done = true
-      else {
-        alive = alive
+  /** The k-core of `pairs`, a loop entry keyed by `source` (the caller's
+    * name for `pairs`), `k` and `maxIters`. */
+  private[graft] def kcoreOf(pairs: DataFrame, k: Int, source: Seq[Any],
+      maxIters: Int = 10): DataFrame =
+    graft.SessionMemo.rounds(pairs.sparkSession, "Graph.kcore", maxIters,
+      source :+ k: _*)(_.checkpoint(pairs.unionByName(
+        pairs.select(col("s_b").as("s_a"), col("s_a").as("s_b"))))) {
+      (alive, _, pins) =>
+        val drop = alive.groupBy("s_a").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") < k).select(col("s_a").as("gone"))
+        // the fixpoint-confirming round peels nothing and ends the
+        // loop, so a core within the cap needs ≤ maxIters − 1 peels and
+        // the oracle's 10-round unroll covers it
+        if (drop.isEmpty) (alive, true)
+        else (pins.checkpoint(alive
           .join(drop.hint("SHUFFLE_HASH"),
             col("s_a") === col("gone"), "left_anti")
           .join(drop.hint("SHUFFLE_HASH"),
-            col("s_b") === col("gone"), "left_anti")
-          .localCheckpoint(true)
-        // only ACTUAL peels count toward the cap — the final
-        // fixpoint-confirming round is free, so maxIters=10 matches
-        // the oracle's 10-round unroll exactly (a graph converging in
-        // precisely 10 peels completes instead of aborting)
-        iter += 1
-      }
+            col("s_b") === col("gone"), "left_anti")), false)
+    } { alive =>
+      alive.groupBy("s_a").agg(count(lit(1)).as("core_deg"))
+        .select(col("s_a").as("supplier"), col("core_deg"))
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"g7 k-core: peeling not at fixpoint after $maxIters rounds — " +
-          "raise maxIters")
-    alive.groupBy("s_a").agg(count(lit(1)).as("core_deg"))
-      .select(col("s_a").as("supplier"), col("core_deg"))
-  }
 
   /** g8 — MAXIMUM-SIMILARITY SPANNING FOREST (Borůvka over the
     * co-supplier backbone): the classic "backbone extraction" of a
@@ -504,67 +486,59 @@ object Graph {
     // the identical plan (the last "already cached" warning standing)
     val edges =
       graft.SessionMemo.cached(s, "Graph.g8_edges", d)(g8Backbone(s, d))
-    var labels = edges.select(col("a").as("node"))
-      .union(edges.select(col("b").as("node"))).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
     // forest edges and the per-round component merges are both
     // COMPONENT-scaled (≤ suppliers, a dimension) — the same
     // bounded-driver-model class as the k-means centroids: the heavy
     // relation (edges × labels, the per-component min selection) stays
-    // distributed; only the ≤|V|-row round result lands on the driver
+    // distributed; only the ≤|V|-row round result lands on the driver.
+    // The forest is local rows, so the loop frees every label pin.
     val treeBuf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)]
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val la = labels.select(col("node").as("a"), col("comp").as("ca"))
-      val lb = labels.select(col("node").as("b"), col("comp").as("cb"))
-      val e = struct(col("k"), col("a"), col("b"), col("n_shared"),
-        col("ca"), col("cb"))
-      val chosen = edges.join(la, Seq("a")).join(lb, Seq("b"))
-        .filter(col("ca") =!= col("cb"))
-        .select(col("ca").as("c"), e.as("e"))
-        .union(edges.join(la, Seq("a")).join(lb, Seq("b"))
+    graft.SessionMemo.rounds(s, "Graph.g8", maxIters, d)(_.checkpoint(
+      edges.select(col("a").as("node"))
+        .union(edges.select(col("b").as("node"))).distinct()
+        .select(col("node"), col("node").as("comp")))) {
+      (labels, _, pins) =>
+        val la = labels.select(col("node").as("a"), col("comp").as("ca"))
+        val lb = labels.select(col("node").as("b"), col("comp").as("cb"))
+        val e = struct(col("k"), col("a"), col("b"), col("n_shared"),
+          col("ca"), col("cb"))
+        val chosen = edges.join(la, Seq("a")).join(lb, Seq("b"))
           .filter(col("ca") =!= col("cb"))
-          .select(col("cb").as("c"), e.as("e")))
-        .groupBy("c").agg(min(col("e")).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"),
-          col("e.n_shared").as("n_shared"),
-          col("e.ca").as("ca"), col("e.cb").as("cb"))
-        .distinct()
-        .collect()
-      if (chosen.isEmpty) done = true
-      else {
-        treeBuf ++= chosen.map(r => (r.getAs[Long]("a"),
-          r.getAs[Long]("b"), r.getAs[Long]("n_shared")))
-        // driver union-find over the round's component merges
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
+          .select(col("ca").as("c"), e.as("e"))
+          .union(edges.join(la, Seq("a")).join(lb, Seq("b"))
+            .filter(col("ca") =!= col("cb"))
+            .select(col("cb").as("c"), e.as("e")))
+          .groupBy("c").agg(min(col("e")).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"),
+            col("e.n_shared").as("n_shared"),
+            col("e.ca").as("ca"), col("e.cb").as("cb"))
+          .distinct()
+          .collect()
+        if (chosen.isEmpty) (labels, true)
+        else {
+          treeBuf ++= chosen.map(r => (r.getAs[Long]("a"),
+            r.getAs[Long]("b"), r.getAs[Long]("n_shared")))
+          // driver union-find over the round's component merges
+          val parent = scala.collection.mutable.Map.empty[Long, Long]
+          def find(x: Long): Long = {
+            val p = parent.getOrElse(x, x)
+            if (p == x) x else { val r = find(p); parent(x) = r; r }
+          }
+          chosen.foreach { r =>
+            val (ra, rb) =
+              (find(r.getAs[Long]("ca")), find(r.getAs[Long]("cb")))
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+          val mapping = parent.keys.map(c => (c, find(c))).toSeq
+            .filter { case (c, r) => c != r }
+          (pins.checkpoint(labels
+            .join(broadcast(mapping.toDF("comp", "newc")),
+              Seq("comp"), "left")
+            .select(col("node"),
+              coalesce(col("newc"), col("comp")).as("comp"))), false)
         }
-        chosen.foreach { r =>
-          val (ra, rb) =
-            (find(r.getAs[Long]("ca")), find(r.getAs[Long]("cb")))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val mapping = parent.keys.map(c => (c, find(c))).toSeq
-          .filter { case (c, r) => c != r }
-        labels = labels
-          .join(broadcast(mapping.toDF("comp", "newc")),
-            Seq("comp"), "left")
-          .select(col("node"),
-            coalesce(col("newc"), col("comp")).as("comp"))
-          .localCheckpoint(true)
-        iter += 1
-      }
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"g8 spanning forest: components not merged after $maxIters " +
-          "Borůvka rounds — raise maxIters")
-    treeBuf.toSeq.toDF("a", "b", "n_shared")
+    }(_ => treeBuf.toSeq.toDF("a", "b", "n_shared"))
   }
 
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -598,20 +572,27 @@ object Graph {
           (col("s_a") + lit(i * 1000000L)).as("s_a"),
           (col("s_b") + lit(i * 1000000L)).as("s_b")))
         .reduce(_ unionByName _)
-      kcoreOf(reps, k = 3)
+      kcoreOf(reps, k = 3, Seq("z24", d, TextOps.stressReps))
     }),
     "z23_g1_20x" -> ((s: SparkSession, d: String) => {
-      pageRankOf(stressEdges(s, d).repartition(col("src")).cache(), 5)
+      val reps = TextOps.stressReps
+      val edges = graft.SessionMemo.cached(s, "Graph.z23_edges", d, reps)(
+        stressEdges(s, d).repartition(col("src")))
+      pageRankOfAdj(graft.SessionMemo.cached(s, "Graph.z23_adj", d, reps)(
+        adjOf(edges)), 5)
     }),
     // the UNCACHED 100-TB-shape variant: identical 20× graph, but the
-    // stationary relations pin via eager localCheckpoint (lineage-cut
-    // blocks) instead of the cache manager — the per-iteration cluster
-    // recipe from the g1 header, measured instead of argued. Results
-    // must be bit-identical to z23 (same fixed-point arithmetic).
+    // stationary relations are checkpointed entries (eager
+    // localCheckpoint: lineage-cut blocks) instead of cached ones — the
+    // per-iteration cluster recipe from the g1 header, measured instead
+    // of argued. Results must be bit-identical to z23 (same fixed-point
+    // arithmetic).
     "z27_g1_20x_lineagecut" -> ((s: SparkSession, d: String) => {
-      pageRankOf(
-        stressEdges(s, d).repartition(col("src")).localCheckpoint(true),
-        5, pin = _.localCheckpoint(true))
+      val reps = TextOps.stressReps
+      val edges = graft.SessionMemo.checkpointed(s, "Graph.z27_edges", d,
+        reps)(stressEdges(s, d).repartition(col("src")))
+      pageRankOfAdj(graft.SessionMemo.checkpointed(s, "Graph.z27_adj", d,
+        reps)(adjOf(edges)), 5)
     }))
 
   private def stressEdges(s: SparkSession, d: String): DataFrame = {

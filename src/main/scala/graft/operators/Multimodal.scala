@@ -269,12 +269,12 @@ object Multimodal {
   def m8AssetClusters(s: SparkSession, d: String): DataFrame = {
     // the m6 pair-gen is the expensive part (signature scan + banded
     // self-join) and arrives session-pinned from m6MediaNearDup; the
-    // projection over the cached relation is free, and componentsOf
-    // pins its own edge relation for the iterations
+    // projection over the cached relation is free, and componentsOf's
+    // round loop pins the edges for the rounds and frees them on exit
     val pairs = m6MediaNearDup(s, d).select(col("doc_a"), col("doc_b"))
     val nodes = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    TextOps.componentsOf(nodes, pairs)
+    TextOps.componentsOf(nodes, pairs, Seq("m8", d))
       .groupBy("comp")
       .agg(count(lit(1)).as("n_assets"), min(col("doc_id")).as("keep_id"))
   }

@@ -1911,19 +1911,18 @@ object Relational {
         expr("unix_micros(ts) div 86400000000").as("day"),
         expr("cast(floor(value * 100 + 0.5) as bigint)").as("cents"))
     val anchor = p.agg(max(col("day")).as("anchor"))
-    val base = p.groupBy("user_id")
-      .agg(max(col("day")).as("last_day"),
-        count(lit(1)).as("frequency"), sum(col("cents")).as("monetary"))
-      .crossJoin(broadcast(anchor))
-      .select(col("user_id"),
-        (col("anchor") - col("last_day")).as("recency_days"),
-        col("frequency"), col("monetary"))
-      // 4 longs per user, consumed 4× (three quintile passes + join);
-      // localCheckpoint, not .cache(): the in-memory COLUMNAR cache
-      // cost ~0.6-2.3 cpu-s per warm re-scan of even this tiny
-      // relation (DiagStages, round 10), the checkpointed RDD re-read
-      // is flat
-      .localCheckpoint()
+    // 4 longs per user, consumed 4× (three quintile passes + join);
+    // checkpointed, not cached: the in-memory COLUMNAR cache cost
+    // ~0.6-2.3 cpu-s per warm re-scan of even this tiny relation
+    // (DiagStages, round 10), the checkpointed RDD re-read is flat
+    val base = graft.SessionMemo.checkpointed(s, "Relational.w24_base", d)(
+      p.groupBy("user_id")
+        .agg(max(col("day")).as("last_day"),
+          count(lit(1)).as("frequency"), sum(col("cents")).as("monetary"))
+        .crossJoin(broadcast(anchor))
+        .select(col("user_id"),
+          (col("anchor") - col("last_day")).as("recency_days"),
+          col("frequency"), col("monetary")))
     base
       .join(broadcast(quintile(base, "recency_days")
         .select(col("recency_days"), (lit(5) - col("q")).as("r_score"))),
@@ -3968,9 +3967,7 @@ object Relational {
     // (type, rep)-partitioned sorts — wall time must scale ~linearly
     // in R (the "no single-partition window" claim measured), while
     // n_we/n_wd stay the observed group sizes and n_reps = 1000
-    "z29_a50_10x" -> ((s: SparkSession, d: String) =>
-      a50Of(s, d,
-        sys.env.getOrElse("GRAFT_A50_REPS", "1000").toInt)),
+    "z29_a50_10x" -> ((s: SparkSession, d: String) => a50Of(s, d, 1000)),
     // a57 at 20× event replication (ids unused by the derivation, so
     // plain row copies): daily sums scale ×20, hence every cov_n2
     // must be EXACTLY 400× the base run — a closed-form check that

@@ -32,6 +32,15 @@ object Similarity {
   private def embeddings(s: SparkSession, d: String): DataFrame =
     graft.Tables.spreadCached(s, d, "embeddings", col("vec_id"))
 
+  /** The embedding corpus at `TextOps.stressReps`×: replica i offsets
+    * every vec_id by i·10⁶, so clones have distinct ids and identical
+    * vectors. */
+  private def stressEmbeddings(s: SparkSession, d: String): DataFrame =
+    (0 until TextOps.stressReps).map(i => embeddings(s, d)
+        .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
+          col("embedding")))
+      .reduce(_ unionByName _)
+
   private def cosine(a: Column, b: Column): Column =
     vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 
@@ -668,32 +677,19 @@ object Similarity {
     // pairs share buckets by construction, so all n·C(20,2) of them
     // MUST surface (recall floor), while pair generation stays bounded
     // to same-bucket work
-    "z7_e2_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until TextOps.stressReps).map(i => embeddings(s, d)
-          .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-            col("embedding")))
-        .reduce(_ unionByName _)
-      lshAnnOf(reps)
-    }),
+    "z7_e2_20x" -> ((s: SparkSession, d: String) =>
+      lshAnnOf(stressEmbeddings(s, d))),
     // IVF-PQ at 20×: scoring cost must track probed-list candidate
     // count (codes only — 8 ints/vector through the ADC join), never
     // the corpus×corpus product or the raw float payload
-    "z9_e8_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until TextOps.stressReps).map(i => embeddings(s, d)
-          .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-            col("embedding")))
-        .reduce(_ unionByName _)
-      ivfPqOf(reps)
-    }),
+    "z9_e8_20x" -> ((s: SparkSession, d: String) =>
+      ivfPqOf(stressEmbeddings(s, d))),
     // SemDeDup at 20×: every vector gains 19 exact clones (cosine 1.0,
     // same cluster by construction), so the kept set must collapse to
     // exactly the 1× kept set — and the pair space stays bounded per
     // inverted list while every list is 20× hotter
     "z12_e9_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until TextOps.stressReps).map(i => embeddings(s, d)
-          .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-            col("embedding")))
-        .reduce(_ unionByName _)
+      val reps = stressEmbeddings(s, d)
       semDedupOf(assignToCentroids(reps, centroidsOf(reps, 16)))
     }),
     // SemDeDup cluster-count scaling: in-cluster candidate-pair count
@@ -708,11 +704,7 @@ object Similarity {
     // is clone-clique-bounded, never bucket-quadratic (asserted in
     // IvfParamSpec at test SF).
     "z20_m6_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until TextOps.stressReps).map(i =>
-        graft.Tables.documents(s, d).select(
-          (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-        .reduce(_ unionByName _)
-      val mediaReps = reps.select(col("doc_id"),
+      val mediaReps = TextOps.stressDocuments(s, d).select(col("doc_id"),
         col("text").cast("binary").as("media"),
         length(col("text").cast("binary")).as("n_bytes"))
       TextOps.bandedHammingPairs(Multimodal.m6SigsOf(mediaReps))
@@ -721,10 +713,7 @@ object Similarity {
             .as("exact_pairs"))
     }),
     "z13_e9_k64" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until TextOps.stressReps).map(i => embeddings(s, d)
-          .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-            col("embedding")))
-        .reduce(_ unionByName _)
+      val reps = stressEmbeddings(s, d)
       def pairSpace(k: Int): DataFrame =
         assignToCentroids(reps, centroidsOf(reps, k))
           .groupBy("centroid_id").agg(count(lit(1)).as("n"))

@@ -245,11 +245,12 @@ object TextOps {
     * the static planner mis-sizes (the pre-materialization cache
     * estimate) into a corpus-scaled broadcast. The only consumer of
     * counts is t6, which derives them itself behind a real Exchange. */
-  /** The stress probes' shingle relation over a replicated corpus,
-    * lineage-cut for the one call that reads it; that call does not
-    * release the blocks. */
-  private[operators] def shRelationOf(docs: DataFrame): DataFrame =
-    shingleExplodedOf(docs).localCheckpoint()
+  /** The stress probes' shingle relation over [[stressDocuments]], a
+    * checkpointed entry per (dir, stressReps) that z6, z8, z10, z15 and
+    * z16 all read. */
+  private def stressShingles(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.checkpointed(s, "TextOps.stress_shingles", d,
+      stressReps)(shingleExplodedOf(stressDocuments(s, d)))
 
   // memoized per (session, dir): seven queries (t7/t8/t13/t25/t32/
   // t33 + the lsh pair build) read the same shingle relation.
@@ -603,6 +604,14 @@ object TextOps {
   private[graft] def stressReps: Int =
     sys.env.getOrElse("GRAFT_STRESS_REPS", "20").toInt
 
+  /** The sf corpus at [[stressReps]]×: replica i offsets every doc_id by
+    * i·10⁶, so clones have distinct ids and identical text. */
+  private[graft] def stressDocuments(s: SparkSession, d: String): DataFrame =
+    (0 until stressReps).map(i => documents(s, d)
+        .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
+          col("text")))
+      .reduce(_ unionByName _)
+
   /** Sub-plan probes for hotspot profiling (in `SparkEntry.diag`, run
     * with `graft.TimeOne` — not part of the driver-visible surface). */
   def diag: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -611,58 +620,42 @@ object TextOps {
     // final cum_tokens is exactly 20× the base corpus, and the final
     // cum_vocab EQUALS the base vocabulary (clones add tokens, never
     // types) — the Heaps-curve shape a dedup-starved corpus shows
-    "z30_t68_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      heapsOf(reps)
-    }),
+    "z30_t68_20x" -> ((s: SparkSession, d: String) =>
+      heapsOf(stressDocuments(s, d))),
     "z1_sh_relation" -> ((s: SparkSession, d: String) =>
       shingleExploded(s, d)),
     // LSH scale stress: the sf corpus replicated 20× (distinct doc_ids;
     // every doc gains 19 perfect clones) through the full MinHash+LSH
     // path — the run that would be quadratic corpus² on the exact path
     "z6_t7_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      minHashLshOf(shRelationOf(reps))
+      minHashLshOf(stressShingles(s, d))
     }),
     // connected components at 20×: every clone group is a complete
     // 20+-node subgraph (diameter 1), so the fixpoint must land in ~2
     // rounds while the label relation carries ~every doc — the loop's
     // state scales with the duplicate population, and this pins it
     "z10_t17_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      componentsOf(reps.select(col("doc_id")),
-        minHashLshOf(shRelationOf(reps))
-          .select(col("doc_a"), col("doc_b")))
+      componentsOf(stressDocuments(s, d).select(col("doc_id")),
+        minHashLshOf(stressShingles(s, d))
+          .select(col("doc_a"), col("doc_b")),
+        Seq("z10", d, stressReps))
     }),
     // composed-pipeline scale stress: the full t11 shape (quality filter
     // + LSH dup removal) on the corpus replicated 20× — the run the
     // round-1 t6-composed version could not survive
     "z8_t11_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
       // MATERIALIZE the pair set before composing (exactly what
       // production t11 gets from the session-memoized lshPairs): with
       // the raw plan inlined instead, the anti-join query re-references
       // the 20-way-union subtree and AQE re-materializes the per-branch
       // stages per consumer — measured 202 AQE jobs / 227 s / tens of
       // GB of duplicated shuffle at 20×, vs 11 jobs for the pair set
-      // alone. localCheckpoint truncates the composed plan to a leaf.
-      val losers = minHashLshOf(shRelationOf(reps))
+      // alone. A checkpointed entry cuts the composed plan to a leaf.
+      val losers = graft.SessionMemo.checkpointed(s, "TextOps.z8_losers",
+        d, stressReps)(minHashLshOf(stressShingles(s, d))
         .select(col("doc_b").as("doc_id"))
-        .distinct()
-        .localCheckpoint(true)
-      qualityScoreOf(reps)
+        .distinct())
+      qualityScoreOf(stressDocuments(s, d))
         .filter(
           col("stopword_ratio") <= 0.5 &&
             col("token_density") >= 0.05 && col("token_density") <= 0.5)
@@ -673,23 +666,14 @@ object TextOps {
     // clones, so EVERY segment becomes cross-doc duplicated) — pins that
     // both shuffles stay hash-only and the count join survives a corpus
     // where the frequency side is as large as the segment side
-    "z11_t18_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      segmentDedupOf(reps)
-    }),
+    "z11_t18_20x" -> ((s: SparkSession, d: String) =>
+      segmentDedupOf(stressDocuments(s, d))),
     // packing scale stress: 20× corpus over 64 shards — pins that the
     // prefix-sum window stays shard-local (shards are the scale-out
     // axis: per-shard chain length grows ~N/shards, not N) and that
     // the summary never materializes per-doc rows to the driver
     "z14_t26_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      packOf(reps, 2048, 64)
+      packOf(stressDocuments(s, d), 2048, 64)
         .groupBy("shard")
         .agg(count(lit(1)).as("docs"),
           max(col("tok_offset")).as("max_off"),
@@ -700,11 +684,7 @@ object TextOps {
     // pins that pair generation stays bounded by shared-shingle
     // buckets even without t6's size prefilter
     "z15_t32_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      containmentOf(shRelationOf(reps))
+      containmentOf(stressShingles(s, d))
         .agg(count(lit(1)).as("pairs"),
           sum(when(col("containment") === 1.0, 1L).otherwise(0L))
             .as("full_containment"))
@@ -714,11 +694,7 @@ object TextOps {
     // the z15-vs-z16 timing delta IS the measured value of prefix
     // filtering on a clique-heavy (worst-case) pair space
     "z16_t33_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      prefixContainmentOf(shRelationOf(reps))
+      prefixContainmentOf(stressShingles(s, d))
         .agg(count(lit(1)).as("pairs"),
           sum(when(col("containment") === 1.0, 1L).otherwise(0L))
             .as("full_containment"))
@@ -745,11 +721,7 @@ object TextOps {
     // fingerprint-pair join sees the clone cliques, and its input is
     // the 2/(w+1)-density fingerprint relation, not the shingles
     "z18_t34_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      t34WinnowingOf(shingledOf(reps))
+      t34WinnowingOf(shingledOf(stressDocuments(s, d)))
         .agg(count(lit(1)).as("pairs"),
           sum(col("n_shared")).as("total_shared"))
     }),
@@ -759,11 +731,7 @@ object TextOps {
     // on every ≥8-token doc); also pins the SHUFFLE_HASH freq join
     // when the dup-hash side is as large as the window side
     "z19_t36_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      dupSpansOf(reps)
+      dupSpansOf(stressDocuments(s, d))
         .agg(count(lit(1)).as("docs"),
           sum(col("covered_tokens")).as("covered"),
           sum(col("n_tokens")).as("tokens"),
@@ -781,19 +749,10 @@ object TextOps {
     // scoring + per-query top-k) over the replicated corpus — postings
     // scale 20×, but the query set stays 15 terms and the model stays
     // O(vocab), so wall time must track the postings scan, not pairs
-    "z24_t50_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      t50Of(bm25TokensOf(reps))
-    }),
+    "z24_t50_20x" -> ((s: SparkSession, d: String) =>
+      t50Of(bm25TokensOf(stressDocuments(s, d)))),
     "z21_t46_20x" -> ((s: SparkSession, d: String) => {
-      val reps = (0 until stressReps).map(i => documents(s, d)
-          .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      exactsubstrRewriteOf(reps)
+      exactsubstrRewriteOf(stressDocuments(s, d))
         .agg(count(lit(1)).as("docs"),
           sum(col("n_removed")).as("removed"),
           sum(when(col("n_removed") === col("n_tokens"), 1L)
@@ -938,52 +897,50 @@ object TextOps {
     * over rows; near-dup cluster diameters are tiny in practice). The
     * oracle re-derives the closure independently via recursive SQL. */
   def t17DupComponents(s: SparkSession, d: String): DataFrame =
-    // memoized: t57's survivorship census re-reads the same closure,
-    // and componentsOf pins its edge relation internally — one
-    // closure run + one cache lineage per (session, dir)
+    // memoized: t57's survivorship census re-reads the same closure —
+    // one closure run + one cache lineage per (session, dir)
     graft.SessionMemo.cached(s, "TextOps.t17components", d)(
       componentsOf(documents(s, d).select(col("doc_id")),
-        lshPairs(s, d).select(col("doc_a"), col("doc_b"))))
+        lshPairs(s, d).select(col("doc_a"), col("doc_b")), Seq("t17", d)))
 
+  /** The min-label closure of `pairs` over `docs`, a loop entry keyed
+    * by `source` (the caller's name for its inputs: query and build
+    * parameters) and `maxIters`. */
   private[graft] def componentsOf(docs: DataFrame, pairs: DataFrame,
-      maxIters: Int = 20): DataFrame = {
-    val edges = pairs.unionByName(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      // .cache(), deliberately NOT localCheckpoint: measured (round
-      // 10) — the eager checkpoint's extra materialization pass over
-      // the edge build costs more than the columnar cache's per-round
-      // re-scan here (g2 3.1-3.4 s ckpt vs 2.2-2.9 s cache warm)
-      .cache()
-    // iterate ONLY over edge-connected nodes — on a near-dup graph
-    // that is a small fraction of the corpus (most docs are unique);
-    // singletons rejoin as self-labeled roots afterwards, so the
-    // fixpoint loop never carries corpus-scale state
-    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("comp"))
-      .cache()
-    // one propagation hop per round, then a monotone checksum —
+      source: Seq[Any], maxIters: Int = 20): DataFrame = {
     // labels only ever decrease, so an unchanged sum(comp) IS the
     // fixpoint proof (no compare-join action needed)
-    var iter = 0
-    var done = false
     var prev = BigDecimal(-1)
-    while (!done && iter < maxIters) {
+    val edges = pairs.unionByName(
+      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    graft.SessionMemo.rounds(pairs.sparkSession, "TextOps.components",
+      maxIters, source: _*) { pins =>
+      // cached in place (`cache()` pins the plan itself), NOT
+      // checkpointed: the eager checkpoint's extra pass over the edge
+      // build cost more than the cache's per-round re-scan (round 10,
+      // g2 warm: 3.1-3.4 s ckpt vs 2.2-2.9 s cache)
+      pins.cache(edges, stationary = true)
+      // iterate ONLY over edge-connected nodes — on a near-dup graph
+      // that is a small fraction of the corpus (most docs are unique);
+      // singletons rejoin as self-labeled roots afterwards, so the
+      // fixpoint loop never carries corpus-scale state
+      pins.cache(edges.select(col("doc_a").as("doc_id")).distinct()
+        .select(col("doc_id"), col("doc_id").as("comp")))
+    } { (labels, _, pins) =>
+      // one propagation hop per round, then a monotone checksum
       val viaNb = edges
         .join(labels.withColumnRenamed("doc_id", "nb"),
           col("doc_b") === col("nb"))
         .select(col("doc_a").as("doc_id"), col("comp"))
       // checkpoint the hop BEFORE the halving self-join: the union-
       // rooted plan trips Catalyst's constraint rewrite under a
-      // self-join, and the truncation is the round's plan-flattening
-      // anyway (label-scaled relation — one cheap pass). LAZY
-      // checkpoint: the round's checksum action below materializes it
-      // (first job over the RDD writes the checkpoint blocks), so the
-      // round pays ONE action instead of an eager-materialize THEN the
-      // checksum — measured ~0.3 s/round of scheduling overhead on the
-      // m8 media graph
-      val hop = labels.unionByName(viaNb)
-        .groupBy("doc_id").agg(min(col("comp")).as("comp"))
-        .localCheckpoint(false)
+      // self-join, and without the cut each round's plan nests every
+      // prior one (m8: analyzer 0.4 s → 10.9 s by round 5, flat ~0.3 s
+      // with it). LAZY: the round's checksum action materializes it, one
+      // action instead of two (~0.3 s/round saved on m8)
+      val hop = pins.checkpoint(labels.unionByName(viaNb)
+        .groupBy("doc_id").agg(min(col("comp")).as("comp")),
+        eager = false)
       // path halving (pointer jumping): also point each node at its
       // parent's parent — comp(x) ≤ x is invariant, so comp(comp) only
       // tightens labels, and rounds drop from O(diameter) to
@@ -993,46 +950,25 @@ object TextOps {
       val parents = hop
         .select(col("doc_id").as("pc"), col("comp").as("pcomp"))
       // merged stays LAZY: it sits depth-1 on the checkpointed hop, so
-      // plan growth is bounded without a second eager materialization
-      // — the round pays exactly two actions (hop checkpoint +
-      // checksum) instead of three
+      // plan growth is bounded without a second materialization — the
+      // round pays exactly two actions (hop checkpoint + checksum)
       val merged = hop.join(parents, hop("comp") === parents("pc"),
           "left")
         .select(hop("doc_id").as("doc_id"),
           least(hop("comp"), coalesce(col("pcomp"), hop("comp")))
             .as("comp"))
-      // eager localCheckpoint EVERY round: measured on the m8 media
-      // graph (11-round fixpoint), cache()-per-round leaves each
-      // round's plan nesting every prior round, and the ANALYZER cost
-      // compounds ~1.6×/round (0.4 s → 10.9 s by round 5) even though
-      // the data is cached — truncating the logical plan to the
-      // materialized RDD holds every round at a flat ~0.3 s. The
-      // materialization itself is one pass over the label vector
-      // (edge-connected nodes only), which a cache would do anyway; on
-      // a cluster this would be a reliable checkpoint for executor-
-      // loss recovery too.
       val chk = BigDecimal(merged
         .agg(sum(col("comp").cast("decimal(38,0)")).as("s"))
         .first().getDecimal(0))
-      labels = merged
-      done = chk == prev
+      val done = chk == prev
       prev = chk
-      iter += 1
-      if (sys.env.contains("GRAFT_CLOSURE_DEBUG")) System.err.println(s"[closure] round $iter chk=$chk")
+      (merged, done)
+    } { labels =>
+      docs.select(col("doc_id"))
+        .join(labels.hint("SHUFFLE_HASH"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("comp"), col("doc_id")).as("comp"))
     }
-    edges.unpersist(blocking = false)
-    // a silent cap would return a WRONG closure (under-merged labels
-    // that the oracle would flag but a production caller would trust) —
-    // fail loudly instead, naming the knob
-    if (!done)
-      throw new IllegalStateException(
-        s"t17 components: min-label propagation not at fixpoint after " +
-          s"$maxIters rounds — clone-graph diameter exceeds the cap; " +
-          "raise maxIters")
-    docs.select(col("doc_id"))
-      .join(labels.hint("SHUFFLE_HASH"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("comp"), col("doc_id")).as("comp"))
   }
 
   /** t18: cross-document SEGMENT dedup (the line-level dedup pass of
@@ -1150,11 +1086,12 @@ object TextOps {
     // the scored relation feeds FOUR subtrees (histogram, total,
     // candidate-bucket rank, final tier assignment) — materialize the
     // one-pass doc-scale score vector instead of re-running the
-    // tokenize+join+aggregate t21 pass per subtree (guide §1.2)
-    val withB = t21UnigramLogprob(s, d)
-      .select(col("doc_id"), col("mean_logp"))
-      .withColumn("bkt", floor(col("mean_logp") * 100))
-      .localCheckpoint()
+    // tokenize+join+aggregate t21 pass per subtree (guide §1.2); the
+    // returned plan reads it, so it is a checkpointed entry
+    val withB = graft.SessionMemo.checkpointed(s, "TextOps.t35_scored", d)(
+      t21UnigramLogprob(s, d)
+        .select(col("doc_id"), col("mean_logp"))
+        .withColumn("bkt", floor(col("mean_logp") * 100)))
     val sc = withB
     val hist = withB.groupBy("bkt").agg(count(lit(1)).as("c"))
     // cum(bkt) = Σ c over buckets ≥ bkt: a desc-cumulative window over

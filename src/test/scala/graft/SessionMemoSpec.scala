@@ -9,11 +9,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Graph, Similarity, TextOps}
 
-/** The session memo's contract: it owns and frees every pin it makes,
-  * refuses a plan that is already pinned, forgets a stopped session,
-  * and keys entries by every build parameter. */
+/** The session memo's contract: it owns and frees every pin it makes
+  * (the round loop's too), refuses a plan that is already pinned,
+  * forgets a stopped session, and keys entries by every build
+  * parameter. */
 class SessionMemoSpec extends SparkSuite {
 
   private def persisted: Set[Int] =
@@ -66,6 +67,64 @@ class SessionMemoSpec extends SparkSuite {
       System.getProperty("java.class.path"),
       "graft.SessionMemoStopProbe")).!!
     assert(out.linesIterator.contains("keys: probe(second)"), out)
+  }
+
+  test("the iterative and lineage-cut queries leave no pin after " +
+    "clearAll") {
+    for (name <- Seq("w24_rfm", "t35_perplexity_tiers", "g5_bfs_hops",
+        "g7_kcore", "g8_spanning_forest", "t17_dup_components",
+        "g2_components", "m8_asset_clusters")) {
+      SessionMemo.clearAll()
+      val before = persisted
+      SparkEntry.queries(name)(spark, sf).collect()
+      SessionMemo.clearAll()
+      assert((persisted -- before).isEmpty, name)
+    }
+  }
+
+  /** The RDDs behind the checkpoints `df` reads. */
+  private def checkpointsRead(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+      .toSet
+
+  test("the round loop frees each superseded round's pins and hands " +
+    "the final value's to its entry") {
+    import spark.implicits._
+    SessionMemo.clearAll()
+    val before = persisted
+    // TextOpsSpec's 200-node path graph: several rounds, each with a
+    // hop checkpoint, over a cached edge and seed-label relation
+    val n = 200L
+    val docs = (0L until n).toDF("doc_id")
+    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val closure = TextOps.componentsOf(docs, pairs,
+      Seq("SessionMemoSpec.path"), maxIters = 40)
+    val left = persisted -- before
+    assert(left.size == 1 && left == checkpointsRead(closure), left)
+    assert(closure.filter(col("comp") =!= 0L).count() == 0)
+    assert(SessionMemo.keys.exists(_._2 ==
+      "TextOps.components(SessionMemoSpec.path, 40)"))
+    SessionMemo.clearAll()
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("k-core peeling past its cap fails loudly and frees its pins") {
+    import spark.implicits._
+    // a 30-node path peels two endpoints per round at k = 2: 15 peels
+    // to the empty core, plus the round that confirms it
+    val pairs = (0L until 29L).map(i => (i, i + 1)).toDF("s_a", "s_b")
+    SessionMemo.clearAll()
+    val before = persisted
+    val e = intercept[IllegalStateException] {
+      Graph.kcoreOf(pairs, k = 2, Seq("SessionMemoSpec.path"), maxIters = 5)
+    }
+    assert(e.getMessage.contains("Graph.kcore") &&
+      e.getMessage.contains("after 5 rounds"), e.getMessage)
+    assert(!e.getMessage.contains("\n"))
+    assert((persisted -- before).isEmpty)
+    assert(Graph.kcoreOf(pairs, k = 2, Seq("SessionMemoSpec.path"),
+      maxIters = 16).count() == 0)
+    SessionMemo.clearAll()
   }
 
   test("keys that differ only in a build parameter do not share an entry") {

@@ -115,7 +115,8 @@ class TextOpsSpec extends SparkSuite {
     // would leave 3 labeled 2; the closure must pull it to 1
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L))
       .toDF("doc_a", "doc_b")
-    val got = TextOps.componentsOf(docs, pairs).collect()
+    val got = TextOps.componentsOf(docs, pairs, Seq("TextOpsSpec.chain"))
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
@@ -144,12 +145,14 @@ class TextOpsSpec extends SparkSuite {
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1))
       .toDF("doc_a", "doc_b")
     val e = intercept[IllegalStateException] {
-      TextOps.componentsOf(docs, pairs, maxIters = 5).count()
+      TextOps.componentsOf(docs, pairs, Seq("TextOpsSpec.path"),
+        maxIters = 5).count()
     }
     assert(e.getMessage.contains("not at fixpoint"))
     // with the cap above the diameter the whole chain collapses to 0
     // (and the loop crosses the every-5-rounds localCheckpoint path)
-    val got = TextOps.componentsOf(docs, pairs, maxIters = 40)
+    val got = TextOps.componentsOf(docs, pairs, Seq("TextOpsSpec.path"),
+      maxIters = 40)
     assert(got.filter(col("comp") =!= 0L).count() == 0)
   }
 
