@@ -209,15 +209,19 @@ object DocServer {
     * [[TableState.composeToRegister]]) that publishes the programs
     * document with every landed batch, so a GET issued one trigger
     * after a PAT/PMT version bump returns the new document without any
-    * manual `refresh()` call. The other routes read `d`, as in
-    * [[start]]; nothing is written under it. Returns the server and the
-    * running compose query (caller stops both). */
+    * manual `refresh()` call. The compose query runs its state at one
+    * shuffle partition whatever `s`'s count, and leaves the conf of
+    * `tables`' session as found ([[TableState.composeToRegister]]). The
+    * other routes read `d`, as in [[start]]; nothing is written under
+    * it. Returns the server and the running compose query (caller stops
+    * both); if either fails to start, neither is left running. */
   def startLive(s: SparkSession,
       tables: org.apache.spark.sql.Dataset[TableState.CompleteTable],
       d: String, port: Int = 0)
       : (DocServer, org.apache.spark.sql.streaming.StreamingQuery) = {
     val register = new AtomicReference[TableState.Register]()
-    val srv = serve(new DocServer(s, d, bind(port), Some(register)))
-    (srv, TableState.composeToRegister(tables, register))
+    val q = TableState.composeToRegister(tables, register)
+    try (serve(new DocServer(s, d, bind(port), Some(register))), q)
+    catch { case e: Throwable => q.stop(); throw e }
   }
 }

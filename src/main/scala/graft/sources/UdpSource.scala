@@ -5,7 +5,7 @@ import java.util
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicBoolean
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.ArrayDeque
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -26,7 +26,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * buffers between offsets — fine for the reference's single-stream
   * regime (≤ a few Mbps); at 100 TB scale the ingest edge is a durable
   * log (Kafka/Kinesis) and this source's role is protocol parity +
-  * tests.
+  * tests. A record's offset (and seq) is its arrival index since the
+  * stream started; `commit` releases every record below the committed
+  * offset, so the buffer holds only the uncommitted backlog.
   *
   * Usage: spark.readStream.format("graft.sources.UdpSource")
   *   .option("port", n).option("recordLength", 188).load()
@@ -71,7 +73,10 @@ case class UdpOffset(count: Long) extends Offset {
 
 class UdpMicroBatchStream(port: Int, recordLength: Int)
     extends MicroBatchStream {
-  private val records = new ArrayBuffer[Array[Byte]]()
+  // the uncommitted records; records(i) has offset base + i. Both are
+  // guarded by records' monitor.
+  private val records = new ArrayDeque[Array[Byte]]()
+  private var base = 0L
   private val running = new AtomicBoolean(true)
   private val socket = new DatagramSocket(port)
   UdpSource.boundPorts.put(port, socket.getLocalPort)
@@ -106,18 +111,33 @@ class UdpMicroBatchStream(port: Int, recordLength: Int)
   receiver.start()
 
   override def latestOffset(): Offset =
-    UdpOffset(records.synchronized(records.length.toLong))
+    UdpOffset(records.synchronized(base + records.length))
   override def initialOffset(): Offset = UdpOffset(0L)
   override def deserializeOffset(json: String): Offset =
     UdpOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
+
+  /** Releases every record below `end` (all of them, if fewer have
+    * arrived, as after a restart from a checkpoint). */
+  override def commit(end: Offset): Unit = records.synchronized {
+    val n = math.min(end.asInstanceOf[UdpOffset].count - base,
+      records.length.toLong)
+    if (n > 0) {
+      records.remove(0, n.toInt)
+      base += n
+    }
+  }
+
+  /** Records held in the buffer, not yet released by `commit`. */
+  private[sources] def buffered: Int = records.synchronized(records.length)
 
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val s = start.asInstanceOf[UdpOffset].count
     val e = end.asInstanceOf[UdpOffset].count
     val slice = records.synchronized {
-      records.slice(s.toInt, e.toInt).toArray
+      if (s < base) throw new IllegalStateException(
+        s"UdpSource: offsets [$s, $base) were committed and released")
+      records.slice((s - base).toInt, (e - base).toInt).toArray
     }
     Array(UdpInputPartition(s, slice))
   }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
 
@@ -17,10 +18,39 @@ import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
   * the session's default state store (HDFS-backed locally, RocksDB at
   * cluster scale if configured), so the live chain needs no provider
   * switch. The replay-only machines of the parity rows live in
-  * [[TwsOps]] on `transformWithState`, the only place that switches the
-  * session to the RocksDB store.
+  * [[TwsOps]] on `transformWithState` and run on the RocksDB store.
+  *
+  * A stateful operator runs one task, with its own state store, per
+  * shuffle partition of its query, and that count is fixed when the
+  * query first starts (it is kept in the checkpoint). The operators here
+  * take it from whoever starts them. The two streaming starts in
+  * `src/main` choose it through [[startWithConfs]]: the live PSI query
+  * runs at one partition ([[TableState.composeToRegister]]), a replay at
+  * one per 64 rows ([[TwsOps.replay]]).
   */
 object StreamingOps {
+
+  private[streaming] val PartitionsKey = "spark.sql.shuffle.partitions"
+
+  /** Starts a streaming query with `confs` set in `s`: they are set, the
+    * plan is built and `start()` is called inside one `try`, and on every
+    * exit path each conf goes back to what it was, set or unset. The
+    * query keeps them all the same: Spark clones the session, conf
+    * included, when it constructs the query, and the stream runs on that
+    * clone. A failed start leaves none of `confs` in `s`. */
+  private[streaming] def startWithConfs(s: SparkSession,
+      confs: (String, String)*)(start: => StreamingQuery): StreamingQuery = {
+    val explicitConfs = s.conf.getAll
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      start
+    } finally confs.foreach { case (k, _) =>
+      explicitConfs.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
+  }
 
   /** R2 streaming: per-PID section reassembly. Packets must arrive
     * seq-ordered within a micro-batch per key (the source guarantees it;

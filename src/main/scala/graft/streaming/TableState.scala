@@ -15,7 +15,9 @@ import graft.ts.{PsiCodec, PsiSection, TsPipeline}
   * skipped (`psi_dec.c:180-185`); a complete table is emitted once per
   * distinct version. R5 keeps the latest complete table per key in an
   * in-memory register ([[composeToRegister]]), from which the live
-  * programs document is rendered once per micro-batch. */
+  * programs document is rendered once per micro-batch. The live query
+  * runs its state at one shuffle partition, like the reference's one
+  * register: its key space is the PSI PIDs and tables of one mux. */
 object TableState {
 
   case class TableKey(pid: Int, tableId: Int, tableIdExtension: Int)
@@ -72,25 +74,38 @@ object TableState {
     * document is rendered once, and map and document are published
     * together through `register`. The stream thread is the only writer,
     * so a reader always sees a whole snapshot; `register` stays null
-    * until the first table lands. */
+    * until the first table lands.
+    *
+    * The query starts at one shuffle partition, whatever the session's
+    * own count: every stateful operator upstream of `tables` (section
+    * and table assembly in the live chain) then runs one task and one
+    * state store per micro-batch, not one per session partition. The
+    * PSI key space is a few dozen (PID, table) keys, so more partitions
+    * only add per-task scheduling and per-store commits to every
+    * trigger. The session's conf is set only around `start()`
+    * ([[StreamingOps.startWithConfs]]) and goes back as found; the query
+    * keeps the count for its life and in its checkpoint. */
   def composeToRegister(tables: Dataset[CompleteTable],
       register: AtomicReference[Register])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    tables.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[CompleteTable], _: Long) =>
-        val landed = batch.collect()
-        if (landed.nonEmpty) {
-          val prev = Option(register.get).fold(
-            Map.empty[TableKey, CompleteTable])(_.tables)
-          val next = landed.foldLeft(prev) { (m, t) =>
-            m.updated(TableKey(t.pid, t.tableId, t.tableIdExtension), t)
+    StreamingOps.startWithConfs(tables.sparkSession,
+      StreamingOps.PartitionsKey -> "1") {
+      tables.writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: Dataset[CompleteTable], _: Long) =>
+          val landed = batch.collect()
+          if (landed.nonEmpty) {
+            val prev = Option(register.get).fold(
+              Map.empty[TableKey, CompleteTable])(_.tables)
+            val next = landed.foldLeft(prev) { (m, t) =>
+              m.updated(TableKey(t.pid, t.tableId, t.tableIdExtension), t)
+            }
+            register.set(Register(next, programsDoc(programs(next))))
           }
-          register.set(Register(next, programsDoc(programs(next))))
+          ()
         }
-        ()
-      }
-      .start()
+        .start()
+    }
 
   /** PAT entries ⋈ PMT programs over a register's tables, by program
     * number ([[graft.ts.TsPipeline.programsJoin]], a left join: a

@@ -20,29 +20,26 @@ import org.apache.spark.sql.streaming._
   * Page–Hinkley, median, CAS and chunk-store ingest) have no second
   * host; they use `transformWithState`'s typed `ValueState`/`MapState`/
   * `ListState`, which requires the RocksDB state store — [[replay]]
-  * switches it on for the life of one replay query. */
+  * starts each replay query on it. */
 object TwsOps {
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val PartitionsKey = "spark.sql.shuffle.partitions"
 
   /** The one MemoryStream replay behind every parity row: `rows`, already
     * in replay order, go through `op` as `batches` equal micro-batches
     * (the last one may be short), then `tail` as one more micro-batch
     * (interp's EOF flush); returns every row the memory sink received.
     *
-    * For the life of the query the session runs the RocksDB state store
-    * and `max(1, min(prior, rows/64))` shuffle partitions. Every
-    * micro-batch runs one stateful task per shuffle partition, each
-    * opening its own state store, so a 60-chunk replay at 32 partitions
-    * paid 32 store opens per micro-batch (m13b at sf0.1: ~8.7 s → ~2 s
-    * once sized to the data). Emissions are per key, so partitioning
-    * changes where rows are emitted, never which.
-    *
-    * Plan construction and `start()` sit inside the `try`: on every exit
-    * path the query stops, its sink view is dropped, and both confs go
-    * back to what they were, set or unset — a failed start never leaves
-    * the replay's provider or partitioning in the session.
+    * The query runs on the RocksDB state store and
+    * `max(1, min(prior, rows/64))` shuffle partitions, set in the session
+    * only around its start ([[StreamingOps.startWithConfs]], which puts
+    * both confs back as found on every exit path). Every micro-batch
+    * runs one stateful task per shuffle partition, each opening its own
+    * state store, so a 60-chunk replay at 32 partitions paid 32 store
+    * opens per micro-batch (m13b at sf0.1: ~8.7 s → ~2 s once sized to
+    * the data). Emissions are per key, so partitioning changes where
+    * rows are emitted, never which. On every exit path the query stops
+    * and its sink view is dropped.
     *
     * MemoryStream is driver-fed by design, so the input collect is
     * replay plumbing bounded to the Verify SF; the operator under test
@@ -54,16 +51,17 @@ object TwsOps {
     val mem = MemoryStream[I]
     val name = s"replay_${java.util.UUID.randomUUID()
       .toString.replace("-", "")}"
-    val explicitConfs = s.conf.getAll
-    val parts = math.max(1L,
-      math.min(s.conf.get(PartitionsKey).toLong, rows.length / 64L))
+    val parts = math.max(1L, math.min(
+      s.conf.get(StreamingOps.PartitionsKey).toLong, rows.length / 64L))
     var q: StreamingQuery = null
     try {
-      s.conf.set(ProviderKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      s.conf.set(PartitionsKey, parts)
-      q = op(mem.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
+      q = StreamingOps.startWithConfs(s,
+        ProviderKey -> ("org.apache.spark.sql.execution.streaming." +
+          "state.RocksDBStateStoreProvider"),
+        StreamingOps.PartitionsKey -> parts.toString) {
+        op(mem.toDS()).writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+      }
       (rows.grouped(math.max(1, rows.length / batches)) ++
           Iterator(tail).filter(_.nonEmpty))
         .foreach { g => mem.addData(g: _*); q.processAllAvailable() }
@@ -71,12 +69,6 @@ object TwsOps {
     } finally {
       if (q != null) q.stop()
       s.catalog.dropTempView(name)
-      Seq(ProviderKey, PartitionsKey).foreach { k =>
-        explicitConfs.get(k) match {
-          case Some(v) => s.conf.set(k, v)
-          case None => s.conf.unset(k)
-        }
-      }
     }
   }
 

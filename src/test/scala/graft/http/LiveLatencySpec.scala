@@ -81,10 +81,12 @@ class LiveLatencySpec extends SparkSuite {
           f"(min=${sorted.head}%.0f, mean=${lat.sum / lat.size}%.0f)")
       // the reference's contract is 1 s convergence. A landed batch is
       // one collect and a GET runs no Spark job, so the trigger itself
-      // dominates the number: planning plus the state-store commits of
-      // the two stateful operators. The gate is deliberately looser
-      // (2.5 s) so a CPU-contended test host reports, not flakes; the
-      // measured number is the record.
+      // dominates the number: planning, the offset and commit logs, and
+      // the state-store commit of table assembly, the one stateful
+      // operator here (the replay feeds sections), which runs one store
+      // because the live query starts at one shuffle partition. The gate
+      // is deliberately looser (2.5 s) so a CPU-contended test host
+      // reports, not flakes; the measured number is the record.
       assert(p50 < 2500.0, f"p50 $p50%.0f ms far outside the PSI SLO")
     } finally { q.stop(); srv.stop() }
   }

@@ -7,11 +7,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSuite
-import graft.streaming.TableState
-import graft.ts.{EsEntry, PatRow, PmtProgram, PsiCodec, PsiSection}
+import graft.streaming.{StreamingOps, TableState}
+import graft.ts.{EsEntry, Fixtures, PatRow, PmtProgram, PsiCodec, PsiSection,
+  TsPacket}
 
 /** The live program_processors path without a capture: PAT and PMT
   * sections built with the E6 encoders and re-parsed by the P4 decoder
@@ -51,6 +53,25 @@ class LiveRegisterSpec extends SparkSuite {
       HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), r.body())
   }
+
+  private val partitionsKey = "spark.sql.shuffle.partitions"
+
+  /** Runs `f` on a fresh session once with the shuffle partitions set to
+    * 7 and once with them unset, passing the explicit conf it was given
+    * (`conf.getOption` would report the default of an unset one). */
+  private def forEachPriorPartitions(
+      f: (SparkSession, Map[String, String]) => Unit): Unit = {
+    val s = spark.newSession()
+    Seq(Map(partitionsKey -> "7"), Map.empty[String, String]).foreach {
+      prior =>
+        s.conf.unset(partitionsKey)
+        prior.foreach { case (k, v) => s.conf.set(k, v) }
+        f(s, prior)
+    }
+  }
+
+  private def explicitPartitions(s: SparkSession): Map[String, String] =
+    s.conf.getAll.filter(_._1 == partitionsKey)
 
   /** program_number → pmt_version (-1 when the document has none). */
   private def versions(body: String): Map[Int, Int] =
@@ -145,6 +166,57 @@ class LiveRegisterSpec extends SparkSuite {
       }
       assert(versions(get(srv.port)._2) ==
         withPmt.map(_ -> 8).toMap.updated(5, -1))
+    }
+  }
+
+  test("the live chain runs one state store per operator whatever the " +
+    "session's partitions, and leaves that conf as found") {
+    forEachPriorPartitions { (s, prior) =>
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
+      // the live chain from packets: section assembly, then tables
+      val mem = MemoryStream[TsPacket]
+      val (srv, q) = DocServer.startLive(s,
+        TableState.latestTablesStream(
+          StreamingOps.sectionsStream(mem.toDS())), sf)
+      try {
+        assert(explicitPartitions(s) == prior)
+        var seq = 0L
+        val pkts = initial(pmtVersion = 0).flatMap { sec =>
+          val p = Fixtures.sectionToPackets(sec.pid, sec.bytes, seq, 0)
+          seq += p.length
+          p
+        }
+        mem.addData(pkts)
+        q.processAllAvailable()
+        val ops = q.lastProgress.stateOperators
+        assert(ops.length == 2)
+        assert(ops.map(_.numStateStoreInstances).toSeq == Seq(1L, 1L),
+          q.lastProgress.json)
+        val (code, body) = get(srv.port)
+        assert(code == 200)
+        assert(versions(body) == withPmt.map(_ -> 0).toMap.updated(5, -1))
+      } finally { q.stop(); srv.stop() }
+      assert(explicitPartitions(s) == prior)
+    }
+  }
+
+  test("a live start whose start() throws leaves the partitions conf as " +
+    "found and nothing running") {
+    forEachPriorPartitions { (s, prior) =>
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
+      // a streaming aggregation in append mode without a watermark builds
+      // a plan, then fails analysis inside start()
+      val mem = MemoryStream[TableState.CompleteTable]
+      val e = intercept[AnalysisException] {
+        DocServer.startLive(s, mem.toDS().groupByKey(_.pid)
+          .reduceGroups((a, _: TableState.CompleteTable) => a).map(_._2), sf)
+      }
+      assert(e.getMessage.contains(
+        "STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION"), e.getMessage)
+      assert(explicitPartitions(s) == prior)
+      assert(s.streams.active.isEmpty)
     }
   }
 }
