@@ -211,10 +211,15 @@ object DocServer {
     * after a PAT/PMT version bump returns the new document without any
     * manual `refresh()` call. The compose query runs its state at one
     * shuffle partition whatever `s`'s count, and leaves the conf of
-    * `tables`' session as found ([[TableState.composeToRegister]]). The
-    * other routes read `d`, as in [[start]]; nothing is written under
-    * it. Returns the server and the running compose query (caller stops
-    * both); if either fails to start, neither is left running. */
+    * `tables`' session as found ([[TableState.composeToRegister]]). Each
+    * trigger writes only under the query's temporary checkpoint: an
+    * offset-log and a commit-log entry and one `.delta` per state store,
+    * through [[graft.streaming.LocalCheckpointFileManager]], which starts
+    * no `chmod` or `readlink` process as Hadoop's local `FileContext`
+    * does. The other routes read `d`, as in [[start]]; nothing is
+    * written under it. Returns the server and the running compose query
+    * (caller stops both); if either fails to start, neither is left
+    * running. */
   def startLive(s: SparkSession,
       tables: org.apache.spark.sql.Dataset[TableState.CompleteTable],
       d: String, port: Int = 0)

@@ -27,19 +27,37 @@ import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
   * `src/main` choose it through [[startWithConfs]]: the live PSI query
   * runs at one partition ([[TableState.composeToRegister]]), a replay at
   * one per 64 rows ([[TwsOps.replay]]).
+  *
+  * Every trigger writes files under the query's checkpoint: one
+  * offset-log entry before the batch, one commit-log entry after it, and
+  * one new version per state store (a `.delta` file on the default
+  * store), each with its checksum sidecars. [[startWithConfs]] sets
+  * [[LocalCheckpointFileManager]] as the checkpoint file manager of both
+  * starts, in the same way as the partition count: Spark's default
+  * manager starts a `chmod` and a `readlink` process per file on the
+  * local file system, which cost the live query more per trigger than
+  * its data; this one writes through chmod(2) and `File.renameTo` and
+  * starts none.
   */
 object StreamingOps {
 
   private[streaming] val PartitionsKey = "spark.sql.shuffle.partitions"
 
-  /** Starts a streaming query with `confs` set in `s`: they are set, the
-    * plan is built and `start()` is called inside one `try`, and on every
-    * exit path each conf goes back to what it was, set or unset. The
-    * query keeps them all the same: Spark clones the session, conf
-    * included, when it constructs the query, and the stream runs on that
-    * clone. A failed start leaves none of `confs` in `s`. */
+  private[streaming] val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Starts a streaming query with `confs` and the checkpoint file manager
+    * ([[LocalCheckpointFileManager]]) set in `s`: they are set, the plan
+    * is built and `start()` is called inside one `try`, and on every exit
+    * path each conf goes back to what it was, set or unset. The query
+    * keeps them all the same: Spark clones the session, conf included,
+    * when it constructs the query, and the stream runs on that clone. A
+    * failed start leaves none of them in `s`. */
   private[streaming] def startWithConfs(s: SparkSession,
-      confs: (String, String)*)(start: => StreamingQuery): StreamingQuery = {
+      extraConfs: (String, String)*)(start: => StreamingQuery)
+      : StreamingQuery = {
+    val confs = (CheckpointManagerKey ->
+      classOf[LocalCheckpointFileManager].getName) +: extraConfs
     val explicitConfs = s.conf.getAll
     try {
       confs.foreach { case (k, v) => s.conf.set(k, v) }

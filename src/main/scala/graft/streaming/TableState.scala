@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 import graft.ts.{PsiCodec, PsiSection, TsPipeline}
 
@@ -17,7 +19,19 @@ import graft.ts.{PsiCodec, PsiSection, TsPipeline}
   * in-memory register ([[composeToRegister]]), from which the live
   * programs document is rendered once per micro-batch. The live query
   * runs its state at one shuffle partition, like the reference's one
-  * register: its key space is the PSI PIDs and tables of one mux. */
+  * register: its key space is the PSI PIDs and tables of one mux.
+  *
+  * A live trigger compiles no code once warm, and starts no process.
+  * Spark resolves an encoder afresh wherever it deserializes outside the
+  * optimized plan, and a product encoder over a Scala collection then
+  * generates different Java source each time (its lambda variables get
+  * fresh ids), so it would be compiled again on every micro-batch. Hence
+  * the table state ([[Buf]]) is Kryo-encoded, and [[composeToRegister]]
+  * reads each batch with one deserializer bound when the query starts.
+  * Each trigger writes its offset- and commit-log entries and one
+  * `.delta` per state store through [[LocalCheckpointFileManager]]
+  * ([[StreamingOps.startWithConfs]]), which forks no `chmod` or
+  * `readlink`. */
 object TableState {
 
   case class TableKey(pid: Int, tableId: Int, tableIdExtension: Int)
@@ -68,11 +82,12 @@ object TableState {
   /** R5 streaming — the reference's 1 Hz `compose_pat_and_pmt`
     * (`mpeg2_sp.c:1484-1558`) as a snapshot composer: the register lives
     * in driver memory, like the `psi_thr` register swap. Each micro-batch
-    * runs its plan once, as one `collect()` of the newly completed
-    * tables; they fold in arrival order into the previous snapshot's map
-    * (so a 31→0 version wrap inside one batch serves 0), the programs
-    * document is rendered once, and map and document are published
-    * together through `register`. The stream thread is the only writer,
+    * runs its plan once, as one collect of the newly completed tables,
+    * read with the one deserializer bound when the query starts; they
+    * fold in arrival order into the previous snapshot's map (so a 31→0
+    * version wrap inside one batch serves 0), the programs document is
+    * rendered once, and map and document are published together
+    * through `register`. The stream thread is the only writer,
     * so a reader always sees a whole snapshot; `register` stays null
     * until the first table lands.
     *
@@ -86,14 +101,17 @@ object TableState {
     * ([[StreamingOps.startWithConfs]]) and goes back as found; the query
     * keeps the count for its life and in its checkpoint. */
   def composeToRegister(tables: Dataset[CompleteTable],
-      register: AtomicReference[Register])
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      register: AtomicReference[Register]): StreamingQuery = {
+    // bound once: `batch.collect()` would compile one per micro-batch
+    val fromRow = ExpressionEncoder[CompleteTable]().resolveAndBind()
+      .createDeserializer()
     StreamingOps.startWithConfs(tables.sparkSession,
       StreamingOps.PartitionsKey -> "1") {
       tables.writeStream
         .outputMode("append")
         .foreachBatch { (batch: Dataset[CompleteTable], _: Long) =>
-          val landed = batch.collect()
+          val landed = batch.queryExecution.executedPlan.executeCollect()
+            .map(fromRow)
           if (landed.nonEmpty) {
             val prev = Option(register.get).fold(
               Map.empty[TableKey, CompleteTable])(_.tables)
@@ -106,6 +124,7 @@ object TableState {
         }
         .start()
     }
+  }
 
   /** PAT entries ⋈ PMT programs over a register's tables, by program
     * number ([[graft.ts.TsPipeline.programsJoin]], a left join: a
@@ -148,7 +167,7 @@ object TableState {
     import secs.sparkSession.implicits._
     secs
       .groupByKey(s => TableKey(s.pid, s.tableId, s.tableIdExtension))
-      .flatMapGroupsWithState[Buf, CompleteTable](
+      .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: TableKey, it: Iterator[PsiSection], state: GroupState[Buf]) =>
           var buf = state.getOption
@@ -169,6 +188,6 @@ object TableState {
           }
           buf.foreach(state.update)
           out.result().iterator
-      }
+      }(Encoders.kryo[Buf], implicitly[Encoder[CompleteTable]])
   }
 }

@@ -7,10 +7,11 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
 import graft.streaming.{StreamingOps, TableState}
 import graft.ts.{EsEntry, Fixtures, PatRow, PmtProgram, PsiCodec, PsiSection,
   TsPacket}
@@ -199,6 +200,53 @@ class LiveRegisterSpec extends SparkSuite {
       } finally { q.stop(); srv.stop() }
       assert(explicitPartitions(s) == prior)
     }
+  }
+
+  test("after two warm-up batches, five live triggers compile no code " +
+    "and start no process") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the live chain from packets, as perfbench composes it
+    val mem = MemoryStream[TsPacket]
+    val (srv, q) = DocServer.startLive(spark,
+      TableState.latestTablesStream(
+        StreamingOps.sectionsStream(mem.toDS())), sf)
+    try {
+      var pktSeq = 0L
+      val cc = scala.collection.mutable.Map.empty[Int, Int]
+        .withDefaultValue(0)
+      def land(secs: Seq[PsiSection]): Unit = {
+        mem.addData(secs.flatMap { sec =>
+          val p = Fixtures.sectionToPackets(sec.pid, sec.bytes, pktSeq,
+            cc(sec.pid))
+          pktSeq += p.length
+          cc(sec.pid) += p.length
+          p
+        })
+        q.processAllAvailable()
+      }
+      land(initial(pmtVersion = 0))
+      land(Seq(pmt(1, version = 1)))
+      def batches = q.recentProgress.count(_.numInputRows > 0)
+      val batches0 = batches
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      // Spark deletes the artifact directory of every session the GC
+      // collects (say, one an earlier test dropped) with `rm -rf`, on the
+      // JDK Cleaner thread of its ArtifactManager: not this query's work
+      val starts = ProcessStarts.during(
+        Seq(2 -> 1, 3 -> 1, 4 -> 1, 1 -> 2, 2 -> 2).foreach { case (i, v) =>
+          land(Seq(pmt(i, version = v)))
+        })._2.filterNot(s => s.thread.startsWith("Cleaner-") &&
+        s.command.startsWith("rm -rf ") && s.command.contains("/artifacts-"))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount -
+        compiles0
+      assert(batches - batches0 == 5)
+      assert(versions(get(srv.port)._2) ==
+        Map(1 -> 2, 2 -> 2, 3 -> 1, 4 -> 1, 5 -> -1))
+      assert(compiles == 0, s"$compiles Janino compiles in 5 triggers")
+      assert(starts.isEmpty, s"${starts.length} process starts in 5 " +
+        s"triggers: ${starts.distinct}")
+    } finally { q.stop(); srv.stop() }
   }
 
   test("a live start whose start() throws leaves the partitions conf as " +
