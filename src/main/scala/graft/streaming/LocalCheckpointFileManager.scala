@@ -22,8 +22,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * state-store delta. Here a create is open(2) plus chmod(2), a rename is
   * `File.renameTo`, and no call starts a process. The Hadoop `.crc`
   * sidecar of every file stays, and a read verifies it, as with the
-  * default manager. A rename within one local file system is atomic,
-  * which is what `createAtomic` relies on.
+  * default manager. `createAtomic` relies on the rename of the data file
+  * within one local file system being atomic; the `.crc` sidecar follows
+  * it in a second rename, as with the default manager, so a crash between
+  * the two on an overwrite leaves the new data beside the old checksum
+  * and the next read of that file fails its check.
   *
   * Only local paths are accepted (`file:`, or no scheme while the default
   * file system is local); any other path fails at construction with one

@@ -83,11 +83,11 @@ object TableState {
     * (`mpeg2_sp.c:1484-1558`) as a snapshot composer: the register lives
     * in driver memory, like the `psi_thr` register swap. Each micro-batch
     * runs its plan once, as one collect of the newly completed tables,
-    * read with the one deserializer bound when the query starts; they
-    * fold in arrival order into the previous snapshot's map (so a 31→0
-    * version wrap inside one batch serves 0), the programs document is
-    * rendered once, and map and document are published together
-    * through `register`. The stream thread is the only writer,
+    * read with the one deserializer bound by column name when the query
+    * starts; they fold in arrival order into the previous snapshot's map
+    * (so a 31→0 version wrap inside one batch serves 0), the programs
+    * document is rendered once, and map and document are published
+    * together through `register`. The stream thread is the only writer,
     * so a reader always sees a whole snapshot; `register` stays null
     * until the first table lands.
     *
@@ -102,8 +102,11 @@ object TableState {
     * keeps the count for its life and in its checkpoint. */
   def composeToRegister(tables: Dataset[CompleteTable],
       register: AtomicReference[Register]): StreamingQuery = {
-    // bound once: `batch.collect()` would compile one per micro-batch
-    val fromRow = ExpressionEncoder[CompleteTable]().resolveAndBind()
+    // bound once, by column name against the query's output (`as` adds
+    // no projection, so the columns may come in any order, with extras):
+    // `batch.collect()` would compile one per micro-batch
+    val fromRow = ExpressionEncoder[CompleteTable]()
+      .resolveAndBind(tables.queryExecution.analyzed.output)
       .createDeserializer()
     StreamingOps.startWithConfs(tables.sparkSession,
       StreamingOps.PartitionsKey -> "1") {

@@ -249,6 +249,26 @@ class LiveRegisterSpec extends SparkSuite {
     } finally { q.stop(); srv.stop() }
   }
 
+  test("tables whose columns come reordered and with an extra one are " +
+    "read by name") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // `as` adds no projection: the batch rows keep this column order
+    val mem = MemoryStream[LiveRegisterSpec.Reordered]
+    val (srv, q) = DocServer.startLive(spark,
+      mem.toDS().as[TableState.CompleteTable], sf)
+    try {
+      mem.addData(initial(pmtVersion = 3).map(sec =>
+        LiveRegisterSpec.Reordered(sec.versionNumber, sec.tableId,
+          "extra", Seq(sec.bytes), sec.tableIdExtension, sec.pid)))
+      q.processAllAvailable()
+      val (code, body) = get(srv.port)
+      assert(code == 200)
+      assert(versions(body) == withPmt.map(_ -> 3).toMap.updated(5, -1),
+        body)
+    } finally { q.stop(); srv.stop() }
+  }
+
   test("a live start whose start() throws leaves the partitions conf as " +
     "found and nothing running") {
     forEachPriorPartitions { (s, prior) =>
@@ -267,4 +287,11 @@ class LiveRegisterSpec extends SparkSuite {
       assert(s.streams.active.isEmpty)
     }
   }
+}
+
+object LiveRegisterSpec {
+  /** [[TableState.CompleteTable]]'s columns in another order, plus one. */
+  final case class Reordered(versionNumber: Int, tableId: Int,
+      extra: String, sectionBytes: Seq[Array[Byte]], tableIdExtension: Int,
+      pid: Int)
 }

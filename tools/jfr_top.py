@@ -2,7 +2,7 @@
 """Where a Flight Recorder recording's CPU samples went, by thread and by
 frame.
 
-    python3 tools/jfr_top.py <file.jfr> [thread-substring] [--top N]
+    python3 tools/jfr_top.py <file.jfr> [thread-substring]
 
 Reads the recording's `jdk.ExecutionSample` events through the JDK's
 `jfr print --json --stack-depth 512` (without `--stack-depth`, `jfr print`
@@ -45,6 +45,8 @@ def samples(path):
         yield name, frames, bool(stack.get("truncated"))
 
 
+TOP = 25  # rows per table
+
 UUID = re.compile(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}")
 
 
@@ -57,8 +59,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("jfr")
     ap.add_argument("thread", nargs="?", default="")
-    ap.add_argument("--top", type=int, default=25,
-                    help="rows per table (default 25)")
     a = ap.parse_args()
 
     all_samples = list(samples(a.jfr))
@@ -68,7 +68,7 @@ def main():
     n = len(all_samples)
     print(f"{n} samples, {len(by_thread)} kinds of thread")
     print("share   samples  thread")
-    for t, c in by_thread.most_common(a.top):
+    for t, c in by_thread.most_common(TOP):
         print(f"{100 * c / n:5.1f}%  {c:7d}  {t}")
 
     picked = [(f, tr) for t, f, tr in all_samples if a.thread in t]
@@ -82,7 +82,7 @@ def main():
     label = f"threads containing {a.thread!r}" if a.thread else "all threads"
     print(f"\n{m} samples on {label}; {truncated} with a truncated stack")
     print("inclusive  samples  frame")
-    for f, c in inclusive.most_common(a.top):
+    for f, c in inclusive.most_common(TOP):
         print(f"{100 * c / m:8.1f}%  {c:7d}  {f}")
 
 
