@@ -9,8 +9,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * nothing below ever collects to the driver or assumes a row count.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's scan. Its schema is read once per session and parquet
+    * timestamp mode (`events` reads nanos as longs): inferring it runs
+    * a one-task job, which every query build would otherwise pay. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val nanosAsLong =
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val schema = SessionMemo.local(spark, "Tables.schema", path,
+      nanosAsLong)(spark.read.parquet(path)).schema
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Scale-adaptive scan spread (optimization guide §2.5, "input skew:
     * one huge unsplittable file"). The bench SF directories ship each

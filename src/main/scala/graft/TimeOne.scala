@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The timing tool, for queries and diag probes alike (names resolve in
   * `SparkEntry.queries ++ SparkEntry.diag`), after Bench's warm-up.
   * Usage: runMain graft.TimeOne <sfDir> [name[,name...]] [reps]
   * (default: every query, sorted; 2 reps, cold then warm). Per rep:
   * build (the query function), plan (to the physical plan), exec (the
-  * count), wall and process-CPU seconds, rows. For the last rep, one
+  * count), wall and process-CPU seconds, rows, and the generated classes
+  * compiled (count and Janino ms; a warm rep whose code stayed in the
+  * codegen cache compiles nothing). For the last rep, one
   * line per completed stage. A one-row result (a z-probe payload) is
   * printed once, untimed. Then one line gives the persisted RDDs before
   * and after `SessionMemo.clearAll()`: a pin the memo does not own
@@ -40,6 +44,8 @@ object TimeOne {
       }
     })
     def rep(name: String, i: Int): (DataFrame, Long) = {
+      val k0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val kNs0 = CodeGenerator.compileTime
       val c0 = Bench.osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val df = catalog(name)(spark, sfDir)
@@ -51,7 +57,10 @@ object TimeOne {
       println(f"[timeone] $name rep $i: build ${(t1 - t0) / 1e9}%.2f " +
         f"plan ${(t2 - t1) / 1e9}%.2f exec ${(t3 - t2) / 1e9}%.2f  " +
         f"wall ${(t3 - t0) / 1e9}%.3f s  " +
-        f"cpu ${(Bench.osBean.getProcessCpuTime - c0) / 1e9}%.2f s  rows $n")
+        f"cpu ${(Bench.osBean.getProcessCpuTime - c0) / 1e9}%.2f s  " +
+        f"rows $n  compiles " +
+        f"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k0} " +
+        f"${(CodeGenerator.compileTime - kNs0) / 1e6}%.0f ms")
       (df, n)
     }
     names.foreach { name =>

@@ -234,7 +234,7 @@ object TsPipeline {
       .flatMap(PsiCodec.decodePat _)
       .filter(_.programNumber != 0) // F9: network PID is not a PMT
       .map(_.referencePid)
-      .distinct()
+      .mapPartitions(_.distinct) // no shuffle for a handful of PIDs
       .collect()
       .toSet
     val psiPids = pmtPids + 0 + 0x11 // PAT + DVB-SDT + discovered PMTs
@@ -370,19 +370,59 @@ object TsPipeline {
     StructField("pcr_pid", IntegerType, nullable = true),
     StructField("n_es", LongType, nullable = false)))
 
+  /** [[latestTables]]' rows, picked on the driver from one `collect()`
+    * with no shuffle: each partition keeps, per (pid, tableId,
+    * extension, version, lastSectionNumber, sectionNumber), the section
+    * that arrived last ([[lastArrivals]]), so the driver receives at most
+    * one section per such cell and partition, however long the capture.
+    * That reduction loses nothing [[latestTables]]' rule reads: a group's
+    * distinct section count, its last arrival and each section's latest
+    * copy all survive it. The driver then applies the same rule. */
+  def latestSections(secs: Dataset[PsiSection]): Seq[PsiSection] = {
+    val cells = lastArrivals(secs.rdd.mapPartitions(lastArrivals).collect()
+      .iterator).toSeq
+    // complete groups: every section number 0..last present; per table
+    // the winner is the latest last arrival, then the higher version
+    val winners = cells
+      .groupBy(s => (s.pid, s.tableId, s.tableIdExtension, s.versionNumber,
+        s.lastSectionNumber))
+      .toSeq.collect { case (g, ss) if ss.length == g._5 + 1 =>
+        (g._1, g._2, g._3) -> (ss.map(_.firstSeq).max, g._4)
+      }
+      .groupMapReduce(_._1)(_._2)(Ordering[(Long, Int)].max)
+      .map { case ((pid, tid, ext), (_, version)) => (pid, tid, ext, version) }
+      .toSet
+    cells.filter(s => winners((s.pid, s.tableId, s.tableIdExtension,
+        s.versionNumber)))
+      .groupMapReduce(s => (s.pid, s.tableId, s.tableIdExtension,
+        s.versionNumber, s.sectionNumber))(identity)(
+        (a, b) => if (b.firstSeq > a.firstSeq) b else a)
+      .values.toSeq
+  }
+
+  /** The current, CRC-valid sections, one per (pid, tableId, extension,
+    * version, lastSectionNumber, sectionNumber): the one with the largest
+    * `firstSeq`. */
+  private def lastArrivals(it: Iterator[PsiSection]): Iterator[PsiSection] =
+    it.filter(s => s.crcOk && s.currentNext)
+      .foldLeft(Map.empty[(Int, Int, Int, Int, Int, Int), PsiSection]) {
+        (m, s) =>
+          val k = (s.pid, s.tableId, s.tableIdExtension, s.versionNumber,
+            s.lastSectionNumber, s.sectionNumber)
+          if (m.get(k).exists(_.firstSeq >= s.firstSeq)) m else m.updated(k, s)
+      }.valuesIterator
+
   /** Same projection over an already-assembled sections relation, run
-    * at call time: [[latestTables]] runs once, as one `collect()` of the
-    * winner-version sections (a few per table, however long the
-    * capture); PAT, PMT and SDT are decoded on the driver and joined by
-    * [[programsJoin]]. Returns a local DataFrame with the same rows and
-    * schema as [[programsSummaryFromTables]], ordered by program number;
-    * sections are read in (pid, tableId, extension, section) order, so a
-    * program's PCR PID is picked deterministically. */
+    * at call time: [[latestSections]] collects the winner-version
+    * sections once; PAT, PMT and SDT are decoded on the driver and joined
+    * by [[programsJoin]]. Returns a local DataFrame with the same rows
+    * and schema as [[programsSummaryFromTables]], ordered by program
+    * number; sections are read in (pid, tableId, extension, section)
+    * order, so a program's PCR PID is picked deterministically. */
   def programsSummaryFrom(spark: SparkSession, secs: Dataset[PsiSection])
       : DataFrame = {
     import scala.jdk.CollectionConverters._
-    val latest = latestTables(secs)
-      .as[PsiSection](Encoders.product[PsiSection]).collect().toSeq
+    val latest = latestSections(secs)
       .sortBy(s => (s.pid, s.tableId, s.tableIdExtension, s.sectionNumber))
     val names = latest.filter(_.tableId == 0x42).flatMap(PsiCodec.decodeSdt)
       .groupMap(_.serviceId)(_.serviceName).withDefaultValue(Seq(None))

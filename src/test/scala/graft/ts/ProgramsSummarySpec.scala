@@ -77,6 +77,80 @@ class ProgramsSummarySpec extends SparkSuite {
       (4, 0x400, "Four", None, 0L)))
   }
 
+  private def sec(pid: Int, version: Int, sn: Int, last: Int, seq: Long,
+      crcOk: Boolean = true, currentNext: Boolean = true): PsiSection =
+    PsiSection(pid, seq, tableId = 0x02, syntaxIndicator = true,
+      sectionLength = 13, tableIdExtension = 1, versionNumber = version,
+      currentNext = currentNext, sectionNumber = sn, lastSectionNumber = last,
+      crcOk = crcOk, bytes = Array(seq.toByte, pid.toByte))
+
+  /** `latestSections` against the `latestTables` join over `secs` in
+    * `partitions` slices, in input order; returns the picked sections as
+    * (pid, version, section, lastSection, firstSeq). */
+  private def assertSameLatest(secs: Seq[PsiSection], partitions: Int)
+      : Set[(Int, Int, Int, Int, Long)] = {
+    import spark.implicits._
+    def key(s: PsiSection) = (s.pid, s.firstSeq, s.tableId,
+      s.tableIdExtension, s.versionNumber, s.sectionNumber,
+      s.lastSectionNumber, s.crcOk, s.currentNext, s.bytes.toSeq)
+    val ds = spark.sparkContext.parallelize(secs, partitions).toDS()
+    assert(ds.rdd.glom().collect().count(_.nonEmpty) >= 3)
+    val viaJoin = TsPipeline.latestTables(ds).as[PsiSection].collect()
+    val onDriver = TsPipeline.latestSections(ds)
+    assert(onDriver.map(key).sortBy(_.toString) ==
+      viaJoin.toSeq.map(key).sortBy(_.toString))
+    onDriver.map(s => (s.pid, s.versionNumber, s.sectionNumber,
+      s.lastSectionNumber, s.firstSeq)).toSet
+  }
+
+  test("driver-side latest sections == the latestTables join: " +
+    "versions, re-broadcasts and split section counts") {
+    val secs = Seq(
+      // 0x100: v1 complete; a newer v2 lacks section 1, v3's section 1
+      // fails its CRC: v1 is served
+      sec(0x100, 1, 0, 1, 10), sec(0x100, 1, 1, 1, 11),
+      sec(0x100, 2, 0, 1, 20),
+      sec(0x100, 3, 0, 1, 30), sec(0x100, 3, 1, 1, 31, crcOk = false),
+      // 0x200: v1, then v2, then v1 again: the re-broadcast v1 arrived
+      // last and wins, with its latest copy
+      sec(0x200, 1, 0, 0, 40), sec(0x200, 2, 0, 0, 50),
+      sec(0x200, 1, 0, 0, 60),
+      // 0x300: v4 as one section, then as two; both complete, so each
+      // section number's latest copy of v4 is served
+      sec(0x300, 4, 0, 0, 70), sec(0x300, 4, 0, 1, 80),
+      sec(0x300, 4, 1, 1, 81),
+      // 0x301: v6 complete as one section; a later v6 announcing three
+      // sections lacks section 1, yet its copies of v6 are the latest
+      sec(0x301, 6, 0, 0, 100), sec(0x301, 6, 0, 2, 110),
+      sec(0x301, 6, 2, 2, 111),
+      // 0x302: a next (not current) v8 is never served
+      sec(0x302, 7, 0, 0, 120), sec(0x302, 8, 0, 0, 130,
+        currentNext = false),
+      // 0x100 again, late: a repeat of v1's section 0 in another slice
+      sec(0x100, 1, 0, 1, 140))
+    assert(assertSameLatest(secs, partitions = 4) == Set(
+      (0x100, 1, 0, 1, 140L), (0x100, 1, 1, 1, 11L),
+      (0x200, 1, 0, 0, 60L),
+      (0x300, 4, 0, 1, 80L), (0x300, 4, 1, 1, 81L),
+      (0x301, 6, 0, 2, 110L), (0x301, 6, 2, 2, 111L),
+      (0x302, 7, 0, 0, 120L)))
+  }
+
+  test("driver-side latest sections == the latestTables join: " +
+    "seeded sections over 5 partitions") {
+    val rnd = new scala.util.Random(11)
+    // now and then a section number past the last one, which the
+    // distinct-count rule reads as well
+    val secs = rnd.shuffle((0 until 300).map { i =>
+      val last = rnd.nextInt(3)
+      val sn = if (rnd.nextInt(40) == 0) last + 1 else rnd.nextInt(last + 1)
+      sec(Seq(0x100, 0x101, 0x102)(rnd.nextInt(3)), rnd.nextInt(4), sn,
+        last, seq = i.toLong, crcOk = rnd.nextInt(10) > 0,
+        currentNext = rnd.nextInt(10) > 0)
+    })
+    assert(assertSameLatest(secs, partitions = 5).map(_._1).size == 3)
+  }
+
   test("a missing capture fails in one line, in every reader") {
     val missing = java.nio.file.Files.createTempDirectory("capture")
       .resolve("absent.ts").toString

@@ -27,8 +27,10 @@ perfbench/ is changed.
 After the end-to-end table it prints, per named operation of the
 workload (batch_sweep's 14 calls), each side's median wall and CPU over
 the measured passes (pass >= warmup_passes) of its finished runs, read
-from those run records; that shows which call moved. A workload whose
-records carry no timed named operations prints no such table.
+from those run records; that shows which call moved. Below it, each
+side's median JIT compile milliseconds per measured pass, which shows
+whether generated classes were reloaded and recompiled. A workload whose
+records carry no timed named operations prints neither.
 """
 import argparse
 import json
@@ -148,13 +150,18 @@ def record(side, workload, seed):
 
 def report_calls(workload, pairs):
     """Per named operation, each side's median wall and CPU seconds over
-    the measured passes of its finished runs."""
+    the measured passes of its finished runs; then each side's median
+    JIT compile milliseconds per measured pass."""
     calls = {}  # name -> side -> ([wall_s], [cpu_s])
+    jit = {"base": [], "change": []}  # side -> [jit_ms per pass]
     for p in pairs:
         for side in ("base", "change"):
             if not p[side]:
                 continue
             run = record(side, workload, p["seed"])
+            jit[side] += [q["jit_ms"] for q in run["passes"]
+                          if q["pass"] >= run["warmup_passes"]
+                          and "jit_ms" in q]
             for o in run["ops"]:
                 if ("name" not in o or "wall_s" not in o
                         or o["pass"] < run["warmup_passes"]):
@@ -187,6 +194,10 @@ def report_calls(workload, pairs):
     print("per call, medians over the measured passes:")
     for r in rows:
         print("  ".join(s.ljust(w) for s, w in zip(r, widths)).rstrip())
+    bj, cj = (statistics.median(jit[s]) if jit[s] else None
+              for s in ("base", "change"))
+    print(f"JIT ms per measured pass, median: base {fmt(bj)}, "
+          f"change {fmt(cj)} ({change(bj, cj)})")
 
 
 def main():
