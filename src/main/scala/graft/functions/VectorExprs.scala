@@ -29,10 +29,6 @@ object VectorExprs {
   def vec_norm(a: Column): Column =
     ColumnBridge.column(VecNormExpr(ColumnBridge.expression(a)))
 
-  /** Cosine similarity built from the two kernels. */
-  def vec_cosine(a: Column, b: Column): Column =
-    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-
   /** SimHash of a pre-hashed feature array: bit b of the result is set
     * iff more elements have bit b set than clear. `bits` ≤ 63. */
   def simhash(hashes: Column, bits: Int): Column =

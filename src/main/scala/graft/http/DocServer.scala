@@ -2,6 +2,7 @@ package graft.http
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.sql.DriverManager
 import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -26,6 +27,7 @@ import graft.streaming.TableState
   *  - `GET  /api/1.0/stream_procs/<id>/program_processors` → ts9 docs
   *  - `GET  /api/1.0/stream_procs/<id>/es_processors`      → ts11 docs
   *  - `GET  /api/1.0/stats/cpu_stats.json`                 → ts12 flot doc
+  *  - `PUT /db/<coll>`, `GET|DELETE /db/<coll>/<sys_id>`   → doc store
   *  - anything else                                        → 404 envelope
   *
   * Documents are computed lazily once per server instance and memoized:
@@ -38,10 +40,21 @@ import graft.streaming.TableState
   * from `live`, the streaming PSI register: the document is rendered
   * once per micro-batch by the compose query, so a GET returns the
   * latest published string and runs no Spark job.
+  *
+  * Started with a JDBC `store` URL, the server also serves under `/db`
+  * the reference's dbdriver document lifecycle
+  * (`dbdriver/apps/dbdriver_apps_procs_docs.c:186-350`): PUT extracts
+  * `sys_id` (`:181-185`; missing → 400, the CHECK_DO reject), deletes
+  * and inserts in one transaction (`:208-300`), then re-reads by key and
+  * compares, the `bson_compare` gate (`:303-336`): 201 when equal, 500
+  * when not. GET returns the stored document with the key projected
+  * away, as the reference excludes `_id` (`:316-319`); DELETE removes at
+  * most one. A deployer swaps the Derby URL for a server-mode store.
   */
 final class DocServer private (
     s: SparkSession, d: String, val server: HttpServer,
-    live: Option[AtomicReference[TableState.Register]] = None) {
+    live: Option[AtomicReference[TableState.Register]] = None,
+    store: Option[String] = None) {
 
   import DocServer._
 
@@ -81,23 +94,80 @@ final class DocServer private (
   private def envelope(code: Int, status: String, message: String): String =
     graft.operators.Relational.envelopeFmt.format(code, status, message)
 
+  private def url: String = store.get // /db routes match only with one
+
+  /** The reference's full upsert cycle for one document. */
+  private def putDoc(coll: String, rawJson: String): (Int, String) = {
+    val canonical =
+      try canonicalJson(rawJson)
+      catch { case _: Throwable =>
+        return (400, envelope(400, "Bad Request", "malformed document"))
+      }
+    val sysId = sysIdOf(canonical).getOrElse(
+      return (400, envelope(400, "Bad Request", "missing sys_id")))
+    import s.implicits._
+    val df = Seq((sysId, canonical)).toDF("sys_id", "doc")
+    graft.sinks.JdbcSink.ensureTable(url, coll, df.schema)
+    // delete-then-insert in one transaction (the reference's
+    // mongoc_coll_delete_doc + mongoc_coll_insert_doc pair)
+    graft.sinks.JdbcSink.upsertByKey(df, "sys_id", url, coll)
+    // readback-verify: re-query by key, compare canonical forms (the
+    // bson_compare gate — a store that mangled the document fails LOUD)
+    if (graft.sinks.JdbcSink.verifyUpsert(df, "sys_id", url, coll) == 0L)
+      (201, envelope(201, "Created", "created"))
+    else (500, envelope(500, "Internal Server Error", "readback verify failed"))
+  }
+
+  private def getDoc(coll: String, sysId: String): (Int, String) = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.prepareStatement(
+        s"SELECT doc FROM $coll WHERE sys_id = ?")
+      st.setString(1, sysId)
+      val rs = st.executeQuery()
+      val out = if (rs.next()) (200, rs.getString(1))
+        else (404, envelope(404, "Not Found", "not found"))
+      st.close()
+      out
+    } catch {
+      // Derby 42X05 = table never created: no document was ever PUT
+      case e: java.sql.SQLException if e.getSQLState == "42X05" =>
+        (404, envelope(404, "Not Found", "not found"))
+    } finally conn.close()
+  }
+
+  private def deleteDoc(coll: String, sysId: String): (Int, String) = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.prepareStatement(
+        s"DELETE FROM $coll WHERE sys_id = ?")
+      st.setString(1, sysId)
+      val n = st.executeUpdate()
+      st.close()
+      if (n > 0) (204, "") else (404, envelope(404, "Not Found", "not found"))
+    } catch {
+      case e: java.sql.SQLException if e.getSQLState == "42X05" =>
+        (404, envelope(404, "Not Found", "not found"))
+    } finally conn.close()
+  }
+
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
     val query = Option(ex.getRequestURI.getQuery).getOrElse("")
     val method = ex.getRequestMethod
     try {
-      (method, route(path)) match {
+      val (code, json) = (method, route(path)) match {
         case ("GET", ProcsList) =>
-          body(ex, 200, doc("k6")(
+          (200, doc("k6")(
             graft.operators.Settings.k6InstanceList(s, d).select("doc")))
         case ("POST", ProcsList) =>
           // create: settings arrive as the query string (`:125-141`);
           // proc_name mandatory → einval/404 without it, 201 with it
           if (query.split('&').exists(_.startsWith("proc_name=")))
-            body(ex, 201, envelope(201, "Created", "success"))
-          else body(ex, 404, envelope(404, "Not Found", "einval"))
+            (201, envelope(201, "Created", "success"))
+          else (404, envelope(404, "Not Found", "einval"))
         case ("GET", Instance(id)) if id == instanceId || id == "0" =>
-          body(ex, 200, doc("ts10")(
+          (200, doc("ts10")(
             graft.operators.TsQueries.ts10InstanceDoc(s, d).select("doc")))
         case ("GET", ProgramProcs(id)) if id == instanceId || id == "0" =>
           // live mode serves the document the compose query published
@@ -106,24 +176,24 @@ final class DocServer private (
           // contract); nothing is published before the first table
           live match {
             case Some(reg) => Option(reg.get) match {
-              case Some(r) => body(ex, 200, r.programsDoc)
-              case None => body(ex, 404, envelope(404, "Not Found", "error"))
+              case Some(r) => (200, r.programsDoc)
+              case None => (404, envelope(404, "Not Found", "error"))
             }
-            case None => body(ex, 200, doc("ts9[]")(
+            case None => (200, doc("ts9[]")(
               graft.operators.TsQueries.ts9ProgramProcDoc(s, d).select("doc")))
           }
         case ("GET", EsProcs(id)) if id == instanceId || id == "0" =>
-          body(ex, 200, doc("ts11[]")(
+          (200, doc("ts11[]")(
             graft.operators.TsQueries.ts11EsProcDoc(s, d).select("doc")))
         case ("GET", Stats) =>
-          body(ex, 200, doc("ts12")(
+          (200, doc("ts12")(
             graft.operators.Relational.ts12StatsDoc(s, d).select("doc")))
         case ("PUT", Instance(id)) if id == instanceId || id == "0" =>
           // reconfigure: body is JSON ∨ query-string (`mpeg2_sp.c:
           // 715-717`), parsed by the SAME dual-format column expression
           // the P9 gate checks; the parsed settings echo back as `data`
           // and the document memo drops (state refresh on reconfigure)
-          val raw = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+          val raw = requestBody(ex)
           val payload = if (raw.nonEmpty) raw else query
           import org.apache.spark.sql.functions.{col, to_json}
           import s.implicits._
@@ -132,20 +202,30 @@ final class DocServer private (
               graft.operators.Settings.parseSettings(col("b"))).as("j"))
             .collect().head.getString(0)
           refresh()
-          body(ex, 200,
-            "{\"code\":200,\"status\":\"OK\",\"message\":\"success\"," +
-              s""""data":$parsed}""")
+          (200, "{\"code\":200,\"status\":\"OK\",\"message\":\"success\"," +
+            s""""data":$parsed}""")
+        case ("PUT" | "POST", DbDoc(c, None)) if store.isDefined =>
+          putDoc(c, requestBody(ex))
+        case ("GET", DbDoc(c, Some(id))) if store.isDefined => getDoc(c, id)
+        case ("DELETE", DbDoc(c, Some(id))) if store.isDefined =>
+          deleteDoc(c, id)
         case ("GET", _) =>
-          body(ex, 404, envelope(404, "Not Found", "enotfound"))
-        case ("PUT", _) =>
-          // reference PUT on missing resource → 204 (f11 mapping row)
-          body(ex, 204, "")
+          (404, envelope(404, "Not Found", "enotfound"))
+        case ("PUT", _) if !path.startsWith(Db) =>
+          // reference PUT on missing resource → 204 (f11 row); not /db's
+          (204, "")
         case _ =>
-          body(ex, 404, envelope(404, "Not Found", "error"))
+          (404, envelope(404, "Not Found", "error"))
       }
+      body(ex, code, json)
     } catch {
+      case _: BodyTooLarge =>
+        body(ex, 413, envelope(413, "Payload Too Large", "body too large"))
       case e: Throwable =>
-        body(ex, 404, envelope(404, "Not Found", "error"))
+        // a store failure is a server fault; the reference answers 404
+        if (path.startsWith(Db)) body(ex, 500,
+          envelope(500, "Internal Server Error", "internal error"))
+        else body(ex, 404, envelope(404, "Not Found", "error"))
         System.err.println(s"[docserver] $method $path failed: $e")
     }
   }
@@ -161,6 +241,7 @@ object DocServer {
   private final case class ProgramProcs(id: String) extends Route
   private final case class EsProcs(id: String) extends Route
   private case object Stats extends Route
+  private final case class DbDoc(coll: String, id: Option[String]) extends Route
   private case object Unknown extends Route
 
   private val Base = "/api/1.0"
@@ -171,6 +252,11 @@ object DocServer {
   private val EsProcsRe =
     s"^$Base/stream_procs/([^/]+)/es_processors(?:\\.json)?$$".r
 
+  // collection names are whitelisted to identifier characters — they
+  // become SQL table names, never raw caller text
+  private val Db = "/db/"
+  private val DbRe = s"^$Db([A-Za-z][A-Za-z0-9_]{0,63})(?:/([^/]+))?$$".r
+
   /** The same routing predicates f10 models as data
     * (`stream_procs_api_http.c:113-173`; id extraction `:153-155`). */
   private def route(path: String): Route = path match {
@@ -180,7 +266,40 @@ object DocServer {
     case ProgProcsRe(id) => ProgramProcs(id)
     case EsProcsRe(id) => EsProcs(id)
     case InstanceRe(id) => Instance(id)
+    case DbRe(coll, id) => DbDoc(coll, Option(id))
     case _ => Unknown
+  }
+
+  private val MaxBody = 1 << 20 // settings documents are under 1 KiB
+  private final class BodyTooLarge extends RuntimeException
+
+  /** The body as UTF-8; past [[MaxBody]] bytes, [[BodyTooLarge]] (413). */
+  private def requestBody(ex: HttpExchange): String = {
+    val bytes = ex.getRequestBody.readNBytes(MaxBody + 1)
+    if (bytes.length > MaxBody) throw new BodyTooLarge
+    new String(bytes, UTF_8)
+  }
+
+  // built on the first store request: a live-only server never needs it
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .configure(com.fasterxml.jackson.databind.SerializationFeature
+      .ORDER_MAP_ENTRIES_BY_KEYS, true)
+
+  /** Canonical form: parse + re-serialize with sorted keys — the
+    * document-order-insensitive equality BSON comparison gives the
+    * reference. Throws on malformed input. */
+  private[http] def canonicalJson(raw: String): String = {
+    val node = mapper.readTree(raw)
+    require(node != null && node.isObject, "document must be an object")
+    mapper.writeValueAsString(mapper.treeToValue(node, classOf[Object]))
+  }
+
+  /** `sys_id` extraction (`dbdriver_apps_procs_docs.c:181-185`):
+    * present, a string, non-empty. */
+  private[http] def sysIdOf(json: String): Option[String] = {
+    val n = mapper.readTree(json).get("sys_id")
+    if (n != null && n.isTextual && n.asText.nonEmpty) Some(n.asText)
+    else None
   }
 
   /** A loopback JDK server on `port` (0 = ephemeral, for tests) with
@@ -188,7 +307,7 @@ object DocServer {
     * body of a response as separate segments; with Nagle on, the body
     * waits for the client's delayed ACK, about 40 ms per response. The
     * JDK reads the property once, when its first server is created. */
-  private[http] def bind(port: Int): HttpServer = {
+  private def bind(port: Int): HttpServer = {
     System.setProperty("sun.net.httpserver.nodelay", "true")
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   }
@@ -200,9 +319,11 @@ object DocServer {
     srv
   }
 
-  /** Bind and start on `port` (0 = ephemeral, for tests). */
-  def start(s: SparkSession, d: String, port: Int = 0): DocServer =
-    serve(new DocServer(s, d, bind(port)))
+  /** Bind and start on `port` (0 = ephemeral, for tests); a JDBC
+    * `store` URL adds the `/db` routes, else they answer 404. */
+  def start(s: SparkSession, d: String, port: Int = 0,
+      store: Option[String] = None): DocServer =
+    serve(new DocServer(s, d, bind(port), store = store))
 
   /** Live mode: serve against STREAMING state. The completed-table
     * stream composes into an in-memory register (R4/R5,

@@ -179,16 +179,6 @@ object StreamingOps {
         col("pid"),
         col("bits"))
 
-  /** A3/A4 — 60 s sliding window (1 s slide) rate stats, the stats-module
-    * ring buffer semantics (`stats/src/stats.c:418-461`). */
-  def slidingRate(pktsWithTs: DataFrame): DataFrame =
-    pktsWithTs
-      .withWatermark("ts", "2 minutes")
-      .groupBy(window(col("ts"), "60 seconds", "1 second"), col("pid"))
-      .agg((count(lit(1)) * TsCodec.PacketSize * 8 / 60).as("bps_avg"))
-      .select(col("window.start").as("window_start"), col("pid"),
-        col("bps_avg"))
-
   /** W8 streaming: NATIVE session-window aggregation — the engine-merged
     * analog of [[sessionize]] (hand-rolled timer state) and of the batch
     * gaps-and-islands query (`Relational.w8SessionAgg`): events within a

@@ -3,6 +3,8 @@ package graft.http
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.scalatest.BeforeAndAfterAll
+
 import graft.SparkSuite
 
 /** End-to-end drive of the §2.12 REST surface: a live DocServer on an
@@ -10,10 +12,18 @@ import graft.SparkSuite
   * against the SAME DataFrames the correctness gate hash-checks —
   * proving the reference's mongoose API (`stream_procs_api_http.c`)
   * is reachable end-to-end, not just shape-matched in parquet. */
-class DocServerSpec extends SparkSuite {
+class DocServerSpec extends SparkSuite with BeforeAndAfterAll {
 
-  private lazy val srv = DocServer.start(spark, sf)
+  private var started: Option[DocServer] = None
+  private lazy val srv = {
+    val s = DocServer.start(spark, sf)
+    started = Some(s)
+    s
+  }
   private lazy val client = HttpClient.newHttpClient()
+
+  override def afterAll(): Unit =
+    try started.foreach(_.stop()) finally super.afterAll()
 
   private def get(path: String): HttpResponse[String] =
     client.send(

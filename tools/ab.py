@@ -18,6 +18,13 @@ base's interquartile range, and no larger share of failed operations
 than the base. A pair counts as a win only when both runs finished
 correct and the working tree's value is better.
 
+The last column is the no-regression check against the metric's
+`bound` in BENCHMARK.json, a fraction of the base median: `unresolved`
+when the base's interquartile range is wider than the bound, unless
+every working-tree run is better than every base run; else `ok` when the
+working tree's median is no worse than the base median by more than the
+bound; else `worse`. A change that claims no gain is judged by it.
+
 Every run is kept: the working tree's run records stay in its own
 .bench_build/runs/, the base's are copied to .bench_build/ab/base-runs/
 before the temporary checkout is removed, and every pair's result lines
@@ -107,13 +114,22 @@ def report(metrics, pairs):
 
     no_more_failures = (failed_share([p["change"] for p in pairs]) <=
                         failed_share([p["base"] for p in pairs]))
+    def within(bound, lower, b, c, bm, cm, spread):
+        """The no-regression verdict for one metric."""
+        def rel(x):
+            return x / abs(bm) if bm else x
+        better = all(y < x if lower else y > x for x in b for y in c)
+        if rel(spread) > bound and not better:
+            return "unresolved"
+        return "ok" if rel(cm - bm if lower else bm - cm) <= bound else "worse"
+
     rows = [("metric", "base median [q1, q3]", "change median [q1, q3]",
-             "change", "wins", "clear gain")]
+             "change", "wins", "clear gain", "within bound")]
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         b, c = values("base", name), values("change", name)
         if not b or not c:
-            rows.append((name, "-", "-", "-", "-", "-"))
+            rows.append((name, "-", "-", "-", "-", "-", "-"))
             continue
         bm, cm = statistics.median(b), statistics.median(c)
         (b1, b3), (c1, c3) = quartiles(b), quartiles(c)
@@ -127,7 +143,9 @@ def report(metrics, pairs):
         rows.append((name, f"{fmt(bm)} [{fmt(b1)}, {fmt(b3)}]",
                      f"{fmt(cm)} [{fmt(c1)}, {fmt(c3)}]",
                      f"{(cm - bm) / bm:+.1%}" if bm else "-",
-                     f"{wins}/{len(pairs)}", "yes" if clear else "no"))
+                     f"{wins}/{len(pairs)}", "yes" if clear else "no",
+                     within(m["bound"], lower, b, c, bm, cm, b3 - b1)
+                     if "bound" in m else "-"))
     widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
     for r in rows:
         print("  ".join(s.ljust(w) for s, w in zip(r, widths)).rstrip())
