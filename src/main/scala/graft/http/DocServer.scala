@@ -332,7 +332,11 @@ object DocServer {
     * after a PAT/PMT version bump returns the new document without any
     * manual `refresh()` call. The compose query runs its state at one
     * shuffle partition whatever `s`'s count, and leaves the conf of
-    * `tables`' session as found ([[TableState.composeToRegister]]). Each
+    * `tables`' session as found ([[TableState.composeToRegister]]).
+    * Over the live chain (`sectionsStream` then `latestTablesStream`,
+    * each of which coalesces its input to that partition) a trigger is
+    * then one stage with no shuffle; without its coalesce, each stateful
+    * operator would get a hash exchange in front of it. Each
     * trigger writes only under the query's temporary checkpoint: an
     * offset-log and a commit-log entry and one `.delta` per state store,
     * through [[graft.streaming.LocalCheckpointFileManager]], which starts

@@ -28,6 +28,13 @@ import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
   * runs at one partition ([[TableState.composeToRegister]]), a replay at
   * one per 64 rows ([[TwsOps.replay]]).
   *
+  * [[sectionsStream]] and [[TableState.latestTablesStream]] coalesce
+  * their input to one partition, which meets a one-partition query's
+  * stateful clustering: a live trigger plans no exchange, so it is one
+  * stage and one task with no shuffle. Both need it, as a
+  * `flatMapGroupsWithState` reports no output partitioning. At more
+  * partitions Spark plans a 1→N exchange, with the same results.
+  *
   * Every trigger writes files under the query's checkpoint: one
   * offset-log entry before the batch, one commit-log entry after it, and
   * one new version per state store (a `.delta` file on the default
@@ -76,6 +83,7 @@ object StreamingOps {
   def sectionsStream(pkts: Dataset[TsPacket]): Dataset[PsiSection] = {
     import pkts.sparkSession.implicits._
     pkts
+      .coalesce(1)
       .groupByKey(_.pid)
       .flatMapGroupsWithState[SectionAssembler.State, PsiSection](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {

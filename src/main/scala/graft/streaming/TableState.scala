@@ -37,13 +37,19 @@ object TableState {
   case class TableKey(pid: Int, tableId: Int, tableIdExtension: Int)
 
   case class Buf(version: Int, last: Int,
-      sections: Map[Int, Array[Byte]])
+      sections: Map[Int, Array[Byte]]) {
+    /** Every section `0..last` is present (`psi_table_dec.c:183-205`). */
+    def complete: Boolean =
+      sections.size == last + 1 && (0 to last).forall(sections.contains)
+  }
 
   case class CompleteTable(
       pid: Int, tableId: Int, tableIdExtension: Int, versionNumber: Int,
       sectionBytes: Seq[Array[Byte]])
 
-  /** Pure fold, shared by batch and streaming hosts. */
+  /** Pure fold, shared by batch and streaming hosts: a table is emitted
+    * on the section that completes its version, and not again for a
+    * repeat of a section of that version while it stays complete. */
   def step(buf: Option[Buf], sec: PsiSection)
       : (Option[Buf], Option[CompleteTable]) = {
     if (!sec.crcOk || !sec.currentNext) return (buf, None)
@@ -53,15 +59,10 @@ object TableState {
     }
     val b1 = b0.copy(sections =
       b0.sections.updated(sec.sectionNumber, sec.bytes))
-    if (b1.sections.size == b1.last + 1 &&
-      (0 to b1.last).forall(b1.sections.contains)) {
-      val table = CompleteTable(sec.pid, sec.tableId,
-        sec.tableIdExtension, b1.version,
-        (0 to b1.last).map(b1.sections))
-      // keep the buffer: duplicates of the same version won't re-emit
-      // because we only emit on the transition to complete
-      (Some(b1.copy(sections = b1.sections)), Some(table))
-    } else (Some(b1), None)
+    val table = Option.when(b1.complete && !b0.complete)(
+      CompleteTable(sec.pid, sec.tableId, sec.tableIdExtension, b1.version,
+        (0 to b1.last).map(b1.sections)))
+    (Some(b1), table)
   }
 
   /** One published snapshot of the live register: the latest complete
@@ -97,7 +98,12 @@ object TableState {
     * state store per micro-batch, not one per session partition. The
     * PSI key space is a few dozen (PID, table) keys, so more partitions
     * only add per-task scheduling and per-store commits to every
-    * trigger. The session's conf is set only around `start()`
+    * trigger. [[latestTablesStream]] and [[StreamingOps.sectionsStream]]
+    * each coalesce their input to that one partition, so Spark plans no
+    * exchange and a trigger is one stage and one task, with no shuffle.
+    * Each needs its own coalesce: a `flatMapGroupsWithState` reports no
+    * output partitioning, so without the second one Spark would shuffle
+    * between the two operators. The session's conf is set only around `start()`
     * ([[StreamingOps.startWithConfs]]) and goes back as found; the query
     * keeps the count for its life and in its checkpoint. */
   def composeToRegister(tables: Dataset[CompleteTable],
@@ -169,25 +175,17 @@ object TableState {
       : Dataset[CompleteTable] = {
     import secs.sparkSession.implicits._
     secs
+      .coalesce(1)
       .groupByKey(s => TableKey(s.pid, s.tableId, s.tableIdExtension))
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: TableKey, it: Iterator[PsiSection], state: GroupState[Buf]) =>
           var buf = state.getOption
-          var emittedVersions = Set.empty[Int]
           val out = Vector.newBuilder[CompleteTable]
           it.toArray.sortBy(_.firstSeq).foreach { sec =>
-            val wasComplete = buf.exists(b =>
-              b.version == sec.versionNumber &&
-                b.sections.size == b.last + 1)
             val (next, emitted) = step(buf, sec)
             buf = next
-            emitted.foreach { t =>
-              if (!wasComplete && !emittedVersions.contains(t.versionNumber)) {
-                out += t
-                emittedVersions += t.versionNumber
-              }
-            }
+            out ++= emitted
           }
           buf.foreach(state.update)
           out.result().iterator

@@ -2,14 +2,20 @@ package graft.http
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+  TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+  StreamingQueryWrapper}
 
 import graft.{ProcessStarts, SparkSuite}
 import graft.streaming.{StreamingOps, TableState}
@@ -180,15 +186,18 @@ class LiveRegisterSpec extends SparkSuite {
       val (srv, q) = DocServer.startLive(s,
         TableState.latestTablesStream(
           StreamingOps.sectionsStream(mem.toDS())), sf)
+      val stages = new LiveRegisterSpec.BatchStages
+      s.sparkContext.addSparkListener(stages)
       try {
         assert(explicitPartitions(s) == prior)
         var seq = 0L
-        val pkts = initial(pmtVersion = 0).flatMap { sec =>
-          val p = Fixtures.sectionToPackets(sec.pid, sec.bytes, seq, 0)
-          seq += p.length
-          p
-        }
-        mem.addData(pkts)
+        def packets(secs: Seq[PsiSection]): Seq[TsPacket] =
+          secs.flatMap { sec =>
+            val p = Fixtures.sectionToPackets(sec.pid, sec.bytes, seq, 0)
+            seq += p.length
+            p
+          }
+        mem.addData(packets(initial(pmtVersion = 0)))
         q.processAllAvailable()
         val ops = q.lastProgress.stateOperators
         assert(ops.length == 2)
@@ -197,7 +206,22 @@ class LiveRegisterSpec extends SparkSuite {
         val (code, body) = get(srv.port)
         assert(code == 200)
         assert(versions(body) == withPmt.map(_ -> 0).toMap.updated(5, -1))
-      } finally { q.stop(); srv.stop() }
+        // a warm trigger: both operators read one partition, so the
+        // plan has no exchange and the trigger runs one stage
+        mem.addData(packets(Seq(pmt(2, version = 1))))
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+        assert(exchanges.isEmpty, plan.treeString)
+        assert(stages.submitted(s.sparkContext, q.lastProgress.batchId) == 1,
+          plan.treeString)
+        assert(versions(get(srv.port)._2)(2) == 1)
+      } finally {
+        s.sparkContext.removeSparkListener(stages)
+        q.stop()
+        srv.stop()
+      }
       assert(explicitPartitions(s) == prior)
     }
   }
@@ -290,6 +314,33 @@ class LiveRegisterSpec extends SparkSuite {
 }
 
 object LiveRegisterSpec {
+  /** Records the micro-batch (`streaming.sql.batchId`) of every stage
+    * submitted for a streaming query. */
+  final class BatchStages extends SparkListener {
+    private val MarkerKey = "graft.test.marker"
+    private val batches = new ConcurrentLinkedQueue[Long]()
+    private val marker = new CountDownLatch(1)
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      Option(e.properties).foreach { p =>
+        Option(p.getProperty("streaming.sql.batchId"))
+          .foreach(b => batches.add(b.toLong))
+        if (p.getProperty(MarkerKey) != null) marker.countDown()
+      }
+
+    /** The stages submitted for micro-batch `batchId`. It first runs a
+      * one-task job of its own, whose stage is posted after the batch's:
+      * once the listener has seen it (waiting up to 30 s), it has seen
+      * theirs. */
+    def submitted(sc: SparkContext, batchId: Long): Int = {
+      sc.setLocalProperty(MarkerKey, "1")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+      require(marker.await(30, TimeUnit.SECONDS), "no marker stage in 30 s")
+      batches.asScala.count(_ == batchId)
+    }
+  }
+
   /** [[TableState.CompleteTable]]'s columns in another order, plus one. */
   final case class Reordered(versionNumber: Int, tableId: Int,
       extra: String, sectionBytes: Seq[Array[Byte]], tableIdExtension: Int,

@@ -3,6 +3,7 @@
 tree, one workload, N pairs of runs at perfbench/run.py's default length.
 
     python3 tools/ab.py --workload live_psi --pairs 10 --seed 9101
+    python3 tools/ab.py --workload live_psi --pairs 3 --seed 9201 --trace 1
 
 HEAD is exported with `git archive` into a temporary directory, so it
 builds and runs from its own committed files, as the working tree does
@@ -38,6 +39,17 @@ from those run records; that shows which call moved. Below it, each
 side's median JIT compile milliseconds per measured pass, which shows
 whether generated classes were reloaded and recompiled. A workload whose
 records carry no timed named operations prints neither.
+
+With `--trace 1` both sides run traced (perfbench/run.py --trace 1),
+whose result lines carry the per-layer metrics instead of the end-to-end
+ones. The end-to-end table is then replaced by each side's medians and
+quartiles of the per-layer metrics that split a live trigger:
+stream.trigger_ms_p50, stream.add_batch_ms_p50, stream.batches,
+exec.stages, exec.tasks, driver.jobs, exec.shuffle_write_mb and
+engine.cpu_cores (the counters are per traced round), and the process
+CPU per micro-batch: the CPU of the traced rounds over the micro-batches
+they ran. Judge a gain on an untraced A/B; a traced one says which layer
+moved. Traced runs' records are named `...-trace1.json`.
 """
 import argparse
 import json
@@ -70,10 +82,15 @@ def export(dest):
         raise SystemExit("HEAD has no perfbench/run.py")
 
 
-def run(side, checkout, workload, seed):
+LAYERS = ("stream.trigger_ms_p50", "stream.add_batch_ms_p50",
+          "stream.batches", "exec.stages", "exec.tasks", "driver.jobs",
+          "exec.shuffle_write_mb", "engine.cpu_cores")
+
+
+def run(side, checkout, workload, seed, trace):
     """One benchmark run; its result line, or None when it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--trace", "0"]
+           "--seed", str(seed), "--trace", str(trace)]
     t0 = time.time()
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True,
                        stdin=subprocess.DEVNULL)
@@ -146,9 +163,16 @@ def report(metrics, pairs):
                      f"{wins}/{len(pairs)}", "yes" if clear else "no",
                      within(m["bound"], lower, b, c, bm, cm, b3 - b1)
                      if "bound" in m else "-"))
+    table(rows)
+
+
+def table(rows):
     widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
     for r in rows:
         print("  ".join(s.ljust(w) for s, w in zip(r, widths)).rstrip())
+
+
+def report_runs(pairs):
     for side in ("base", "change"):
         rs = [p[side] for p in pairs]
         ok = [r for r in rs if r]
@@ -158,12 +182,49 @@ def report(metrics, pairs):
               f"{sum(r['attempted'] for r in ok)} operations failed")
 
 
-def record(side, workload, seed):
+def record(side, workload, seed, trace=0):
     """A finished run's record, as perfbench/run.py wrote it."""
     runs = (os.path.join(OUT, "base-runs") if side == "base" else
             os.path.join(ROOT, ".bench_build", "runs"))
-    with open(os.path.join(runs, f"{workload}-seed{seed}-trace0.json")) as f:
+    name = f"{workload}-seed{seed}-trace{trace}.json"
+    with open(os.path.join(runs, name)) as f:
         return json.load(f)["run"]
+
+
+def report_layers(workload, pairs):
+    """Per side, the medians and quartiles of LAYERS over the correct
+    traced runs, and of the process CPU per micro-batch in the traced
+    rounds."""
+    def cpu_per_batch(side, p):
+        r = p[side]
+        if not r or not r["correct"]:
+            return None
+        n = value(r, "stream.batches")
+        cpu = sum(q["cpu_s"] for q in record(side, workload, p["seed"], 1)
+                  ["passes"] if q.get("traced"))
+        return cpu / n if n else None
+
+    def fmt(x):
+        return "-" if x is None else f"{x:.4g}"
+
+    def values(side, name):
+        xs = (value(p[side], name) if name in LAYERS
+              else cpu_per_batch(side, p) for p in pairs)
+        return [x for x in xs if x is not None]
+
+    rows = [("per-layer metric", "base median [q1, q3]",
+             "change median [q1, q3]", "change")]
+    for name in LAYERS + ("cpu_s per micro-batch",):
+        b, c = values("base", name), values("change", name)
+        if not b or not c:
+            rows.append((name, "-", "-", "-"))
+            continue
+        bm, cm = statistics.median(b), statistics.median(c)
+        (b1, b3), (c1, c3) = quartiles(b), quartiles(c)
+        rows.append((name, f"{fmt(bm)} [{fmt(b1)}, {fmt(b3)}]",
+                     f"{fmt(cm)} [{fmt(c1)}, {fmt(c3)}]",
+                     f"{(cm - bm) / bm:+.1%}" if bm else "-"))
+    table(rows)
 
 
 def report_calls(workload, pairs):
@@ -208,10 +269,8 @@ def report_calls(workload, pairs):
         bc, cc = med(name, "base", 1), med(name, "change", 1)
         rows.append((name, fmt(bw), fmt(cw), change(bw, cw), fmt(bc),
                      fmt(cc), change(bc, cc)))
-    widths = [max(len(r[i]) for r in rows) for i in range(len(rows[0]))]
     print("per call, medians over the measured passes:")
-    for r in rows:
-        print("  ".join(s.ljust(w) for s, w in zip(r, widths)).rstrip())
+    table(rows)
     bj, cj = (statistics.median(jit[s]) if jit[s] else None
               for s in ("base", "change"))
     print(f"JIT ms per measured pass, median: base {fmt(bj)}, "
@@ -224,6 +283,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True,
                     help="seed of the first pair; pair i uses seed + i")
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0,
+                    help="1: run both sides traced and report per layer")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
@@ -231,7 +292,8 @@ def main():
                           capture_output=True, text=True,
                           check=True).stdout.strip()
     os.makedirs(OUT, exist_ok=True)
-    record = os.path.join(OUT, f"{a.workload}-seed{a.seed}.json")
+    suffix = "-trace1" if a.trace else ""
+    record = os.path.join(OUT, f"{a.workload}-seed{a.seed}{suffix}.json")
     base = tempfile.mkdtemp(prefix="ab-base-")
     try:
         export(base)
@@ -242,11 +304,11 @@ def main():
             sides = [("base", base), ("change", ROOT)]
             pair = {"seed": seed}
             for side, checkout in (sides if i % 2 == 0 else sides[::-1]):
-                pair[side] = run(side, checkout, a.workload, seed)
+                pair[side] = run(side, checkout, a.workload, seed, a.trace)
             pairs.append(pair)
             with open(record, "w") as f:
                 json.dump({"workload": a.workload, "base": head,
-                           "pairs": pairs}, f)
+                           "trace": a.trace, "pairs": pairs}, f)
     finally:
         runs = os.path.join(base, ".bench_build", "runs")
         if os.path.isdir(runs):
@@ -255,9 +317,15 @@ def main():
         shutil.rmtree(base, ignore_errors=True)
     log(f"pairs written to {record}")
     print(f"{a.workload}: HEAD {head} (base) vs working tree (change), "
-          f"{a.pairs} interleaved pairs, seeds {a.seed}-{a.seed + a.pairs - 1}")
-    report(metrics, pairs)
-    report_calls(a.workload, pairs)
+          f"{a.pairs} interleaved pairs, seeds {a.seed}-{a.seed + a.pairs - 1}"
+          + (", traced" if a.trace else ""))
+    if a.trace:
+        report_layers(a.workload, pairs)
+        report_runs(pairs)
+    else:
+        report(metrics, pairs)
+        report_runs(pairs)
+        report_calls(a.workload, pairs)
     return 0
 
 
