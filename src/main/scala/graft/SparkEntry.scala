@@ -3601,7 +3601,7 @@ object SparkEntry {
         |    AS hash
         |FROM chunks""",
     // m13b: the STREAMING split audit — the engine side is the real
-    // RocksDB-backed chunk store replayed over the m12b prefix sample;
+    // streaming chunk store replayed over the m12b prefix sample;
     // this oracle reads NO engine dump: it re-splits the raw bytes with
     // the same recursive gear-hash CTE as m12b, then recomputes the
     // first-instance store decision per (format, hash, len) in
@@ -4080,7 +4080,7 @@ object SparkEntry {
         |SELECT event_type, CAST(day AS BIGINT) AS day,
         |  CAST(x AS BIGINT) AS cents, CAST(ewma AS BIGINT) AS ewma_cents
         |FROM r""",
-    // a35: oracle = the transformWithState replay's emissions read
+    // a35: oracle = the streaming replay's emissions read
     // verbatim; Spark side recomputes batch a34 — hash match proves
     // stream ≡ batch across micro-batch seams
     "a35_stream_ewma" ->
@@ -4088,7 +4088,7 @@ object SparkEntry {
          |  CAST(cents AS BIGINT) AS cents,
          |  CAST(ewma_cents AS BIGINT) AS ewma_cents
          |FROM ${oprel("stream_ewma")}""",
-    // a53: oracle = the transformWithState Page–Hinkley replay's
+    // a53: oracle = the streaming Page–Hinkley replay's
     // emissions read verbatim; Spark side recomputes the batch δ=0
     // prefix-window series — hash match proves stream ≡ batch drift
     // detection across micro-batch seams

@@ -419,7 +419,7 @@ object Multimodal {
     * and parity stays green; m12b catches that drift for the BATCH
     * path only. Here the engine side is the real streaming store's
     * emissions — [[graft.streaming.TwsOps.chunkPrefixReplay]], the
-    * RocksDB-backed transformWithState replay over the m12b 20-doc
+    * streaming keyed-fold replay over the m12b 20-doc
     * first-KiB sample — and the ORACLE re-derives everything from RAW
     * parquet bytes: the gear-hash recursion re-splits the prefix in a
     * recursive CTE (no engine dump read anywhere), then a window

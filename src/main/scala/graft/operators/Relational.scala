@@ -1715,7 +1715,7 @@ object Relational {
 
   /** w23 batch side — w22's attribution BEFORE rollup: one row per
     * conversion with its channel/lag. This is what the streaming
-    * last-touch state machine (TwsOps.AttributionProcessor) emits
+    * last-touch state machine (TwsOps.attributionStreamTws) emits
     * online; the oracle reads the replay dump, so the w23 hash match
     * IS stream≡batch attribution parity. lag_us = -1 encodes
     * unattributed (the stream emits concrete longs, not nulls). */
@@ -3104,7 +3104,7 @@ object Relational {
 
   /** a53 — the ONLINE Page–Hinkley series (δ = 0, the bare running-
     * mean deviation detector): batch recompute of the exact per-day
-    * (m, ph) emissions the transformWithState replay dumps to OpLake —
+    * (m, ph) emissions the streaming replay dumps to OpLake —
     * the a53 oracle reads that dump verbatim, so the hash gate IS the
     * 13th stream ≡ batch parity row (24 bytes of per-key state across
     * micro-batch seams vs two partitioned prefix windows here). */
@@ -4087,7 +4087,7 @@ object Relational {
     "s13_snapshot_diff" -> s13SnapshotDiff _,
     "a41_exact_percentiles" -> a41ExactPercentiles _,
     // w33: the SPARK side is batch w25; the oracle reads the
-    // transformWithState replay's emissions — hash match = the
+    // streaming replay's emissions — hash match = the
     // bounded-frame rolling median survives micro-batch seams
     "w33_stream_median" -> w25SlidingMedian _,
     "a40_autocorr" -> a40Autocorr _,
@@ -4121,7 +4121,7 @@ object Relational {
     "z38_j20_20x" ->
       ((s: SparkSession, d: String) => Linkage.z38J20_20x(s, d)),
     // a53: the SPARK side is the batch δ=0 PH series; the oracle reads
-    // the transformWithState replay's OpLake dump verbatim — hash
+    // the streaming replay's OpLake dump verbatim — hash
     // match = stream ≡ batch Page–Hinkley across micro-batch seams
     "a53_stream_ph" -> a53PhSeries _,
     "a54_seasonal_mk" -> a54SeasonalMk _,
@@ -4136,7 +4136,7 @@ object Relational {
     "s11_skyline" -> s11Skyline _,
     "a34_ewma" -> a34Ewma _,
     // a35: the SPARK side is batch a34; the oracle replays the same
-    // recurrence online through transformWithState (OpLake dump) —
+    // recurrence online as a streaming keyed fold (OpLake dump) —
     // hash match = stream ≡ batch EWMA, including across batch seams
     "a35_stream_ewma" -> a34Ewma _,
     "a31_gini" -> a31Gini _,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
@@ -12,13 +12,13 @@ import graft.ts.{PsiSection, SectionAssembler, TsCodec, TsPacket}
   * topology (`mpeg2_sp.c:1303-1482`) collapses into these keyed stateful
   * maps — Spark owns scheduling, backpressure and state storage.
   *
-  * This is the one streaming host of section assembly (R2), CC audit
-  * (R1) and sessionization (R6), as [[TableState.latestTablesStream]] is
-  * of table versioning (R3+R4): `flatMapGroupsWithState`, which runs on
-  * the session's default state store (HDFS-backed locally, RocksDB at
-  * cluster scale if configured), so the live chain needs no provider
-  * switch. The replay-only machines of the parity rows live in
-  * [[TwsOps]] on `transformWithState` and run on the RocksDB store.
+  * Every keyed state machine of the engine has one host,
+  * `flatMapGroupsWithState`, on the session's default state store. All
+  * but one go through [[keyedFold]]: section assembly (R2) and CC audit
+  * (R1) here, table versioning (R3+R4) in [[TableState]], and the
+  * replay-only machines of the parity rows in [[TwsOps]].
+  * Sessionization (R6, [[sessionize]]) calls `flatMapGroupsWithState`
+  * itself, because it closes sessions on event-time timeouts.
   *
   * A stateful operator runs one task, with its own state store, per
   * shuffle partition of its query, and that count is fixed when the
@@ -77,28 +77,53 @@ object StreamingOps {
     }
   }
 
+  /** The one host of a keyed state machine: `in` grouped by `key`, each
+    * group's rows of a micro-batch sorted by `order` (the machine's
+    * arrival order) and folded through the pure `step` from the key's
+    * state (`init` for a key not seen before); `end` then runs once on
+    * the folded state, for a machine that emits per micro-batch rather
+    * than per row. The state is written once per group, and the outputs
+    * of all steps are the operator's output, in append mode.
+    *
+    * The state goes through the implicit `Encoder[S]`. A state that holds
+    * a Scala collection must be given a Kryo encoder (`Encoders.kryo`):
+    * Spark resolves the state encoder again for every micro-batch, and a
+    * product encoder over a collection then generates different Java
+    * source each time (fresh lambda-variable ids), so it would compile on
+    * every trigger.
+    *
+    * No group times out here, so a key's function runs only in a
+    * micro-batch that has rows for it. [[sessionize]] needs event-time
+    * timeouts (its function runs for a key with no rows, to close the
+    * session), so it calls `flatMapGroupsWithState` itself. */
+  def keyedFold[I, K: Encoder, T: Ordering, S: Encoder, O: Encoder](
+      in: Dataset[I])(key: I => K, order: I => T, init: S)(
+      step: (K, S, I) => (S, IterableOnce[O]),
+      end: (K, S) => (S, IterableOnce[O]) = (_: K, s: S) => (s, Nil))
+      : Dataset[O] =
+    in.groupByKey(key).flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+      (k: K, rows: Iterator[I], state: GroupState[S]) =>
+        val out = Vector.newBuilder[O]
+        val folded = rows.toVector.sortBy(order)
+          .foldLeft(state.getOption.getOrElse(init)) { (st, r) =>
+            val (next, emitted) = step(k, st, r)
+            out ++= emitted
+            next
+          }
+        val (last, tail) = end(k, folded)
+        out ++= tail
+        state.update(last)
+        out.result().iterator
+    }
+
   /** R2 streaming: per-PID section reassembly. Packets must arrive
     * seq-ordered within a micro-batch per key (the source guarantees it;
     * across batches the carried state preserves continuity). */
   def sectionsStream(pkts: Dataset[TsPacket]): Dataset[PsiSection] = {
     import pkts.sparkSession.implicits._
-    pkts
-      .coalesce(1)
-      .groupByKey(_.pid)
-      .flatMapGroupsWithState[SectionAssembler.State, PsiSection](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (pid: Int, it: Iterator[TsPacket],
-         state: GroupState[SectionAssembler.State]) =>
-          var st = state.getOption.getOrElse(SectionAssembler.initialState)
-          val out = Vector.newBuilder[PsiSection]
-          it.toArray.sortBy(_.seq).foreach { p =>
-            val (next, emitted) = SectionAssembler.step(st, p)
-            st = next
-            out ++= emitted
-          }
-          state.update(st) // must happen before the iterator is consumed
-          out.result().iterator
-      }
+    keyedFold(pkts.coalesce(1))(_.pid, _.seq, SectionAssembler.initialState)(
+      (_, st, p) => SectionAssembler.step(st, p))
   }
 
   /** R1 streaming: per-PID continuity audit carrying the last CC across
@@ -108,23 +133,13 @@ object StreamingOps {
 
   def ccAuditStream(pkts: Dataset[TsPacket]): Dataset[CcError] = {
     import pkts.sparkSession.implicits._
-    pkts
-      .filter(p => p.hasPayload && p.pid != TsCodec.NullPid)
-      .groupByKey(_.pid)
-      .flatMapGroupsWithState[CcState, CcError](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (pid: Int, it: Iterator[TsPacket], state: GroupState[CcState]) =>
-          var last = state.getOption.map(_.lastCc).getOrElse(-1)
-          val out = Vector.newBuilder[CcError]
-          it.toArray.sortBy(_.seq).foreach { p =>
-            val disc = p.af.exists(_.discontinuity)
-            if (last >= 0 && !disc && ((last + 1) % 16) != p.cc)
-              out += CcError(pid, p.seq, (last + 1) % 16, p.cc)
-            last = p.cc
-          }
-          state.update(CcState(last))
-          out.result().iterator
-      }
+    keyedFold(pkts.filter(p => p.hasPayload && p.pid != TsCodec.NullPid))(
+        _.pid, _.seq, CcState(-1)) { (pid, st, p) =>
+      val want = (st.lastCc + 1) % 16
+      (CcState(p.cc), Option.when(st.lastCc >= 0 &&
+        !p.af.exists(_.discontinuity) && want != p.cc)(
+        CcError(pid, p.seq, want, p.cc)))
+    }
   }
 
   /** R6 — keyed state with TTL (the reference's

@@ -4,8 +4,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ts.{PsiCodec, PsiSection, TsPipeline}
 
@@ -171,24 +170,19 @@ object TableState {
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
 
+  /** The table state of a key that has no version yet: version -1
+    * matches no section, so [[step]] starts a fresh [[Buf]] from it. */
+  private val NoVersion = Buf(-1, -1, Map.empty)
+
   def latestTablesStream(secs: Dataset[PsiSection])
       : Dataset[CompleteTable] = {
     import secs.sparkSession.implicits._
-    secs
-      .coalesce(1)
-      .groupByKey(s => TableKey(s.pid, s.tableId, s.tableIdExtension))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: TableKey, it: Iterator[PsiSection], state: GroupState[Buf]) =>
-          var buf = state.getOption
-          val out = Vector.newBuilder[CompleteTable]
-          it.toArray.sortBy(_.firstSeq).foreach { sec =>
-            val (next, emitted) = step(buf, sec)
-            buf = next
-            out ++= emitted
-          }
-          buf.foreach(state.update)
-          out.result().iterator
-      }(Encoders.kryo[Buf], implicitly[Encoder[CompleteTable]])
+    implicit val bufEncoder: Encoder[Buf] = Encoders.kryo[Buf]
+    StreamingOps.keyedFold(secs.coalesce(1))(
+        s => TableKey(s.pid, s.tableId, s.tableIdExtension), _.firstSeq,
+        NoVersion) { (_, buf, sec) =>
+      val (next, table) = step(Some(buf), sec)
+      (next.get, table)
+    }
   }
 }

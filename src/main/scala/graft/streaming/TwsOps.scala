@@ -3,43 +3,36 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
   SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** The replay-only keyed state machines, hosted on `transformWithState`
-  * (Spark 4's typed-state successor to `flatMapGroupsWithState`), and
-  * the one harness that replays a lake through them for the
-  * stream ≡ batch parity rows.
+import StreamingOps.keyedFold
+
+/** The replay-only keyed state machines of the stream ≡ batch parity
+  * rows, and the one harness that replays a lake through them.
   *
-  * Which host serves which machine: the live TS chain's machines —
-  * section assembly (R2), CC audit (R1), table versioning (R3+R4) — and
-  * event-time sessionization (R6) have exactly one host,
-  * `flatMapGroupsWithState` in [[StreamingOps]] and [[TableState]]. That
-  * host runs on the session's default state store, so the live chain
-  * needs no provider switch. The machines here (near-dup buckets, packing, funnel,
-  * retention, interpolation, CDC, SCD2, attribution, intervals, EWMA,
-  * Page–Hinkley, median, CAS and chunk-store ingest) have no second
-  * host; they use `transformWithState`'s typed `ValueState`/`MapState`/
-  * `ListState`, which requires the RocksDB state store — [[replay]]
-  * starts each replay query on it. */
+  * Each machine (near-dup buckets, packing, funnel, retention,
+  * interpolation, CDC, SCD2, attribution, intervals, EWMA, Page–Hinkley,
+  * median, CAS and chunk-store ingest) is a pure step folded by
+  * [[StreamingOps.keyedFold]], the host of the live chain's machines
+  * too, and runs on the session's default state store. A machine's
+  * state is one value per key; one that holds a Scala collection is
+  * Kryo-encoded, as the helper requires. */
 object TwsOps {
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** The one MemoryStream replay behind every parity row: `rows`, already
     * in replay order, go through `op` as `batches` equal micro-batches
     * (the last one may be short), then `tail` as one more micro-batch
     * (interp's EOF flush); returns every row the memory sink received.
     *
-    * The query runs on the RocksDB state store and
-    * `max(1, min(prior, rows/64))` shuffle partitions, set in the session
-    * only around its start ([[StreamingOps.startWithConfs]], which puts
-    * both confs back as found on every exit path). Every micro-batch
-    * runs one stateful task per shuffle partition, each opening its own
-    * state store, so a 60-chunk replay at 32 partitions paid 32 store
-    * opens per micro-batch (m13b at sf0.1: ~8.7 s → ~2 s once sized to
-    * the data). Emissions are per key, so partitioning changes where
-    * rows are emitted, never which. On every exit path the query stops
-    * and its sink view is dropped.
+    * The query runs at `max(1, min(prior, rows/64))` shuffle partitions,
+    * set in the session only around its start
+    * ([[StreamingOps.startWithConfs]], which puts the conf back as found
+    * on every exit path). Every micro-batch runs one stateful task per
+    * shuffle partition, each opening its own state store, so a 60-chunk
+    * replay at 32 partitions paid 32 store opens per micro-batch (m13b at
+    * sf0.1: ~8.7 s → ~2 s once sized to the data). Emissions are per key,
+    * so partitioning changes where rows are emitted, never which. On
+    * every exit path the query stops and its sink view is dropped.
     *
     * MemoryStream is driver-fed by design, so the input collect is
     * replay plumbing bounded to the Verify SF; the operator under test
@@ -56,8 +49,6 @@ object TwsOps {
     var q: StreamingQuery = null
     try {
       q = StreamingOps.startWithConfs(s,
-        ProviderKey -> ("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"),
         StreamingOps.PartitionsKey -> parts.toString) {
         op(mem.toDS()).writeStream.format("memory").queryName(name)
           .outputMode("append").start()
@@ -71,6 +62,8 @@ object TwsOps {
       s.catalog.dropTempView(name)
     }
   }
+
+  private val DayUs = 86400000000L
 
   /** A documents dir as doc_id-ordered (doc_id, text). */
   private def docsOf(s: SparkSession, d: String): Seq[(Long, String)] = {
@@ -103,52 +96,16 @@ object TwsOps {
   /** Streaming NEAR-dup (the continuous-ingest analog of t7): each
     * incoming document is signature'd per row with the SAME banded
     * MinHash scheme as the batch path (24 double-hashes over token
-    * 3-gram xxhash shingles, 12 bands of 2), then each LSH bucket's
-    * processor holds the doc-ids seen in that bucket (`MapState`, TTL-
-    * bounded so buckets forget docs outside the ingest horizon) and
-    * emits a candidate pair for every new arrival vs the bucket's
-    * members (bound membership with processing-time TTL in production —
-    * see the init note). The same pair can surface from several bands —
-    * the caller
-    * collapses with the watermark-dedup pattern (`dedupSections`).
-    * Candidate semantics match the batch path PRE-verification; exact
-    * jaccard confirmation joins the stored corpus out-of-band.
-    * Input columns: (doc_id, text, ts). Output: (doc_a, doc_b, ts). */
-  class BucketProcessor extends StatefulProcessor[
-      String, (String, Long, java.sql.Timestamp),
-      (Long, Long, java.sql.Timestamp)] {
-    @transient private var members: MapState[Long, Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // TTLConfig(10 minutes) + TimeMode.ProcessingTime is the
-      // production bounding knob for bucket membership; the test
-      // harness runs TimeMode.None because processing-time TTL
-      // maintenance keeps scheduling batches, which never quiesces
-      // under MemoryStream's processAllAvailable drain
-      members = getHandle.getMapState[Long, Boolean](
-        "members", Encoders.scalaLong, Encoders.scalaBoolean,
-        TTLConfig.NONE)
-
-    override def handleInputRows(bucket: String,
-        rows: Iterator[(String, Long, java.sql.Timestamp)],
-        timerValues: TimerValues)
-        : Iterator[(Long, Long, java.sql.Timestamp)] = {
-      val out = Vector.newBuilder[(Long, Long, java.sql.Timestamp)]
-      rows.toArray.sortBy(_._3.getTime).foreach { case (_, docId, ts) =>
-        if (!members.containsKey(docId)) {
-          val it = members.keys()
-          while (it.hasNext) {
-            val other = it.next()
-            if (other != docId)
-              out += ((math.min(other, docId), math.max(other, docId), ts))
-          }
-          members.updateValue(docId, true)
-        }
-      }
-      out.result().iterator
-    }
-  }
-
+    * 3-gram xxhash shingles, 12 bands of 2), then each LSH bucket's state
+    * holds the doc-ids seen in that bucket and emits a candidate pair for
+    * every new arrival vs the bucket's members. In production the
+    * membership would be bounded to the ingest horizon (a timeout on the
+    * bucket); the replay keeps every member. The same pair can surface
+    * from several bands — the caller collapses with the watermark-dedup
+    * pattern (`dedupSections`). Candidate semantics match the batch path
+    * PRE-verification; exact jaccard confirmation joins the stored corpus
+    * out-of-band. Input columns: (doc_id, text, ts). Output: (doc_a,
+    * doc_b, ts). */
   def nearDupDocsStream(docsWithTs: DataFrame)
       : Dataset[(Long, Long, java.sql.Timestamp)] = {
     import docsWithTs.sparkSession.implicits._
@@ -158,15 +115,17 @@ object TwsOps {
     val numBands = numHashes / bandSize
     // per-row signatures — identical hash scheme to the batch
     // minHashLshOf, but computed with array HOFs inside the row (a
-    // stream has no cached shingle relation to aggregate over)
+    // stream has no cached shingle relation to aggregate over). The
+    // filter reads `toks`, not `hs`: pushed below the projections, a
+    // filter on `hs` would carry `hs` with the split inlined for each
+    // `toks[i]` of its lambda, splitting every text three times per
+    // shingle; 3 or more tokens is exactly "at least one shingle"
     val sh = docsWithTs
       .withColumn("toks", split(trim(col("text")), "\\s+"))
+      .filter(size(col("toks")) >= 3)
       .withColumn("hs", expr(
-        """CASE WHEN size(toks) >= 3 THEN
-          |  array_distinct(transform(sequence(0, size(toks) - 3),
-          |    i -> xxhash64(toks[i], toks[i + 1], toks[i + 2])))
-          |ELSE array() END""".stripMargin))
-      .filter(size(col("hs")) > 0)
+        """array_distinct(transform(sequence(0, size(toks) - 3),
+          |  i -> xxhash64(toks[i], toks[i + 1], toks[i + 2])))""".stripMargin))
       .withColumn("h1", expr(
         "transform(hs, h -> shiftrightunsigned(h, 16))"))
       .withColumn("h2", expr(
@@ -180,7 +139,7 @@ object TwsOps {
     // batch side's collapsed-permutation defect (see lshBandsOf), and
     // the t25 parity gate caught the divergence the moment the batch
     // side was fixed
-    sh.withColumn("sigs", expr(
+    val bands = sh.withColumn("sigs", expr(
         s"""transform(sequence(0, ${numHashes - 1}),
            |  i -> array_min(zip_with(h1, h2,
            |    (a, b) -> xxhash64(a, b, i))))""".stripMargin))
@@ -191,9 +150,13 @@ object TwsOps {
           (s"$b:${sigs(b * bandSize)}:${sigs(b * bandSize + 1)}", d, ts)
         }
       }
-      .groupByKey(_._1)
-      .transformWithState(new BucketProcessor,
-        TimeMode.None(), OutputMode.Append())
+    implicit val membersEncoder: Encoder[Set[Long]] = Encoders.kryo[Set[Long]]
+    keyedFold(bands)(_._1, _._3.getTime, Set.empty[Long]) {
+      case (_, members, (_, doc, ts)) =>
+        if (members(doc)) (members, Nil)
+        else (members + doc, members.toSeq.map(other =>
+          (math.min(other, doc), math.max(other, doc), ts)))
+    }
   }
 
   /** Deterministic multi-batch replay of a documents dir through
@@ -233,48 +196,25 @@ object TwsOps {
   case class PackIn(shard: Int, doc_id: Long, n_tokens: Int)
   case class PackOut(doc_id: Long, shard: Int, n_tokens: Int,
     tok_offset: Long, bin: Int, crosses_bin: Boolean)
-  case class PackState(off: Long)
 
-  /** t26's concat-and-chunk packing hosted on `transformWithState`: the
-    * per-shard state is ONE long (the running token offset), so a
-    * 100 TB packing run carries state proportional to shard count, not
-    * corpus. Docs are assigned offsets in doc_id order — batch order is
-    * the replay contract (AvailableNow over an ordered lake gives it;
-    * the in-batch sort handles intra-batch arrival shuffle). */
-  class PackProcessor(budget: Long)
-      extends StatefulProcessor[Int, PackIn, PackOut] {
-    @transient private var state: ValueState[PackState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PackState](
-        "off", Encoders.product[PackState], TTLConfig.NONE)
-
-    override def handleInputRows(shard: Int, rows: Iterator[PackIn],
-        timerValues: TimerValues): Iterator[PackOut] = {
-      var off = Option(state.get()).map(_.off).getOrElse(0L)
-      val out = Vector.newBuilder[PackOut]
-      rows.toArray.sortBy(_.doc_id).foreach { r =>
-        val bin = off / budget
-        val lastBin = (off + r.n_tokens - 1) / budget
-        out += PackOut(r.doc_id, shard, r.n_tokens, off, bin.toInt,
-          lastBin > bin)
-        off += r.n_tokens
-      }
-      state.update(PackState(off))
-      out.result().iterator
-    }
-  }
-
+  /** t26's concat-and-chunk packing as a keyed fold: the per-shard state
+    * is ONE long (the running token offset), so a 100 TB packing run
+    * carries state proportional to shard count, not corpus. Docs are
+    * assigned offsets in doc_id order — batch order is the replay
+    * contract (AvailableNow over an ordered lake gives it; the in-batch
+    * sort handles intra-batch arrival shuffle). */
   def packStreamTws(docs: DataFrame,
       budget: Long = 2048L, nShards: Int = 8): Dataset[PackOut] = {
     import docs.sparkSession.implicits._
-    docs
-      .selectExpr(s"cast(doc_id % $nShards as int) as shard", "doc_id",
-        "size(split(trim(text), '\\\\s+')) as n_tokens")
-      .as[PackIn]
-      .groupByKey(_.shard)
-      .transformWithState(new PackProcessor(budget),
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(docs
+        .selectExpr(s"cast(doc_id % $nShards as int) as shard", "doc_id",
+          "size(split(trim(text), '\\\\s+')) as n_tokens")
+        .as[PackIn])(_.shard, _.doc_id, 0L) { (shard, off, r) =>
+      val bin = off / budget
+      val lastBin = (off + r.n_tokens - 1) / budget
+      (off + r.n_tokens, Some(PackOut(r.doc_id, shard, r.n_tokens, off,
+        bin.toInt, lastBin > bin)))
+    }
   }
 
   /** Deterministic multi-batch replay of a documents dir through
@@ -303,46 +243,26 @@ object TwsOps {
     * min(click > t_view), and so on. Emits exactly once, when the
     * purchase stage completes. Strict `>` guards make equal-ts arrival
     * order irrelevant. At scale the state is 24 bytes per LIVE user
-    * (completed users could drop their state via a TTL). */
-  class FunnelProcessor
-      extends StatefulProcessor[Long, FunnelIn, FunnelHit] {
-    @transient private var state: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FunnelState](
-        "funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[FunnelIn],
-        timerValues: TimerValues): Iterator[FunnelHit] = {
-      var st = Option(state.get()).getOrElse(FunnelState(-1L, -1L, -1L))
-      val out = Vector.newBuilder[FunnelHit]
-      rows.toArray.sortBy(r => (r.tsus, r.event_type)).foreach { r =>
-        r.event_type match {
-          case "view" if st.tView < 0 =>
-            st = st.copy(tView = r.tsus)
-          case "click" if st.tView >= 0 && st.tClick < 0 &&
-              r.tsus > st.tView =>
-            st = st.copy(tClick = r.tsus)
-          case "purchase" if st.tClick >= 0 && st.tPurchase < 0 &&
-              r.tsus > st.tClick =>
-            st = st.copy(tPurchase = r.tsus)
-            out += FunnelHit(user, st.tView, st.tClick, st.tPurchase)
-          case _ => // stage already filled, or out of order: no-op
-        }
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
+    * (completed users could drop their state via a timeout). */
   def funnelStreamTws(events: DataFrame)
       : Dataset[FunnelHit] = {
     import events.sparkSession.implicits._
-    events.selectExpr("user_id", "event_type", "tsus")
-      .as[FunnelIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(events.selectExpr("user_id", "event_type", "tsus")
+        .as[FunnelIn])(_.user_id, r => (r.tsus, r.event_type),
+        FunnelState(-1L, -1L, -1L)) { (user, st, r) =>
+      r.event_type match {
+        case "view" if st.tView < 0 =>
+          (st.copy(tView = r.tsus), None)
+        case "click" if st.tView >= 0 && st.tClick < 0 &&
+            r.tsus > st.tView =>
+          (st.copy(tClick = r.tsus), None)
+        case "purchase" if st.tClick >= 0 && st.tPurchase < 0 &&
+            r.tsus > st.tClick =>
+          (st.copy(tPurchase = r.tsus),
+            Some(FunnelHit(user, st.tView, st.tClick, r.tsus)))
+        case _ => (st, None) // stage already filled, or out of order
+      }
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay of the events dir
@@ -370,7 +290,7 @@ object TwsOps {
   // ---- streaming retention (w16 = streaming w15) --------------------
 
   case class RetIn(user_id: Long, tsus: Long)
-  case class RetCohort(cohortDay: Long)
+  case class RetState(cohortDay: Long, seen: Set[Long])
   case class RetHit(user_id: Long, cohort_day: Long, day_offset: Long)
 
   /** w15's retention matrix as an online per-user state machine: the
@@ -378,50 +298,21 @@ object TwsOps {
     * (first ts = min ts = batch min-day cohort); each first-seen
     * activity day emits exactly one (user, cohort, offset) row — the
     * stream-side rows the batch (user, day) dedup produces. State per
-    * live user: one cohort long + the seen-day list, which grows with
+    * live user: the cohort day and the set of seen days (empty until
+    * the first event, which fixes the cohort), which grows with
     * observed DAYS (bounded by the observation window), not events. */
-  class RetentionProcessor
-      extends StatefulProcessor[Long, RetIn, RetHit] {
-    @transient private var cohort: ValueState[RetCohort] = _
-    @transient private var seen: ListState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      cohort = getHandle.getValueState[RetCohort](
-        "cohort", Encoders.product[RetCohort], TTLConfig.NONE)
-      seen = getHandle.getListState[Long](
-        "seen", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[RetIn],
-        timerValues: TimerValues): Iterator[RetHit] = {
-      val seenDays = scala.collection.mutable.Set[Long]()
-      seen.get().foreach(seenDays += _)
-      var c = Option(cohort.get())
-      val out = Vector.newBuilder[RetHit]
-      rows.toArray.sortBy(_.tsus).foreach { r =>
-        val day = Math.floorDiv(r.tsus, 86400000000L)
-        if (c.isEmpty) {
-          c = Some(RetCohort(day))
-          cohort.update(RetCohort(day))
-        }
-        if (!seenDays.contains(day)) {
-          seenDays += day
-          seen.appendValue(day)
-          out += RetHit(user, c.get.cohortDay, day - c.get.cohortDay)
-        }
-      }
-      out.result().iterator
-    }
-  }
-
   def retentionStreamTws(events: DataFrame)
       : Dataset[RetHit] = {
     import events.sparkSession.implicits._
-    events.selectExpr("user_id", "tsus")
-      .as[RetIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new RetentionProcessor,
-        TimeMode.None(), OutputMode.Append())
+    implicit val stateEncoder: Encoder[RetState] = Encoders.kryo[RetState]
+    keyedFold(events.selectExpr("user_id", "tsus").as[RetIn])(
+        _.user_id, _.tsus, RetState(0L, Set.empty)) { (user, st, r) =>
+      val day = Math.floorDiv(r.tsus, DayUs)
+      val cohort = if (st.seen.isEmpty) day else st.cohortDay
+      if (st.seen(day)) (st, None)
+      else (RetState(cohort, st.seen + day),
+        Some(RetHit(user, cohort, day - cohort)))
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay of the events dir
@@ -446,14 +337,16 @@ object TwsOps {
       cents: Long)
   case class InterpSample(day: Long, cents: Long)
   case class InterpOpen(day: Long, cents: Long, tsus: Long, eid: Long)
+  case class InterpState(prev: Option[InterpSample],
+      open: Option[InterpOpen])
   case class InterpOut(user_id: Long, day: Long, cents: Long,
       is_interp: Boolean)
 
   /** w42's gap-fill + linear interpolation as an online per-user state
     * machine. A day's sample is only FINAL once a later day's event
-    * arrives (the last event of the day wins), so the processor keeps
-    * two tiny values per user — the last CLOSED sample and the open
-    * day's running winner — and, each time a day closes, emits the
+    * arrives (the last event of the day wins), so the state is two tiny
+    * values per user — the last CLOSED sample and the open day's
+    * running winner — and, each time a day closes, the step emits the
     * interpolated rows for the gap back to the previous closed sample
     * plus the observed row itself. Interpolation math is the batch
     * side's exact integer floor line (`Math.floorDiv` ≡ the
@@ -463,71 +356,39 @@ object TwsOps {
     * can produce them. An `event_id == -1` row is the replay's EOF
     * flush: it closes the open day (the spine's right endpoint)
     * without opening a new one. */
-  class InterpProcessor extends StatefulProcessor[Long, InterpIn,
-      InterpOut] {
-    @transient private var prev: ValueState[InterpSample] = _
-    @transient private var open: ValueState[InterpOpen] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode)
-        : Unit = {
-      prev = getHandle.getValueState[InterpSample](
-        "prev", Encoders.product[InterpSample], TTLConfig.NONE)
-      open = getHandle.getValueState[InterpOpen](
-        "open", Encoders.product[InterpOpen], TTLConfig.NONE)
-    }
-
-    private def close(user: Long, o: InterpOpen,
-        out: scala.collection.mutable.Builder[InterpOut,
-          Vector[InterpOut]]): Unit = {
-      Option(prev.get()).foreach { p =>
-        var dd = p.day + 1
-        while (dd < o.day) {
-          out += InterpOut(user, dd, p.cents +
-            Math.floorDiv((o.cents - p.cents) * (dd - p.day),
-              o.day - p.day), is_interp = true)
-          dd += 1
-        }
-      }
-      out += InterpOut(user, o.day, o.cents, is_interp = false)
-      prev.update(InterpSample(o.day, o.cents))
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[InterpIn],
-        timerValues: TimerValues): Iterator[InterpOut] = {
-      val out = Vector.newBuilder[InterpOut]
-      rows.toArray.sortBy(r => (r.tsus, r.event_id)).foreach { r =>
-        if (r.event_id == -1L) {
-          Option(open.get()).foreach { o =>
-            close(user, o, out); open.clear()
-          }
-        } else {
-          val day = Math.floorDiv(r.tsus, 86400000000L)
-          Option(open.get()) match {
-            case None =>
-              open.update(InterpOpen(day, r.cents, r.tsus, r.event_id))
-            case Some(o) if day == o.day =>
-              if (r.tsus > o.tsus ||
-                (r.tsus == o.tsus && r.event_id > o.eid))
-                open.update(InterpOpen(day, r.cents, r.tsus, r.event_id))
-            case Some(o) if day > o.day =>
-              close(user, o, out)
-              open.update(InterpOpen(day, r.cents, r.tsus, r.event_id))
-            case Some(_) => // late older-day event: already closed, drop
-          }
-        }
-      }
-      out.result().iterator
-    }
-  }
-
   def interpStreamTws(events: DataFrame)
       : Dataset[InterpOut] = {
     import events.sparkSession.implicits._
-    events.selectExpr("user_id", "tsus", "event_id", "cents")
-      .as[InterpIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new InterpProcessor,
-        TimeMode.None(), OutputMode.Append())
+    // closes `o` into the new last sample, opening `next`
+    def close(user: Long, st: InterpState, o: InterpOpen,
+        next: Option[InterpOpen]): (InterpState, Seq[InterpOut]) = {
+      val gap = st.prev.toSeq.flatMap { p =>
+        (p.day + 1 until o.day).map { dd =>
+          InterpOut(user, dd, p.cents + Math.floorDiv(
+            (o.cents - p.cents) * (dd - p.day), o.day - p.day),
+            is_interp = true)
+        }
+      }
+      (InterpState(Some(InterpSample(o.day, o.cents)), next),
+        gap :+ InterpOut(user, o.day, o.cents, is_interp = false))
+    }
+    keyedFold(events.selectExpr("user_id", "tsus", "event_id", "cents")
+        .as[InterpIn])(_.user_id, r => (r.tsus, r.event_id),
+        InterpState(None, None)) { (user, st, r) =>
+      val day = Math.floorDiv(r.tsus, DayUs)
+      val now = Some(InterpOpen(day, r.cents, r.tsus, r.event_id))
+      (st.open, r.event_id) match {
+        case (None, -1L) => (st, Nil)
+        case (Some(o), -1L) => close(user, st, o, None)
+        case (None, _) => (st.copy(open = now), Nil)
+        case (Some(o), _) if day == o.day =>
+          val later = r.tsus > o.tsus ||
+            (r.tsus == o.tsus && r.event_id > o.eid)
+          (if (later) st.copy(open = now) else st, Nil)
+        case (Some(o), _) if day > o.day => close(user, st, o, now)
+        case _ => (st, Nil) // late older-day event: already closed
+      }
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay of the events dir
@@ -564,51 +425,36 @@ object TwsOps {
   /** j11's changelog MERGE as an online keyed state machine: per-user
     * state tracks the winning (ts, event_id) record plus op counters;
     * each micro-batch that touches a user emits ONE post-batch
-    * snapshot row stamped with a monotone per-user `seq`, so the
-    * latest emission per user IS the current table state (delete
-    * state included — the dump consumer drops final-op-D keys exactly
-    * like batch j11's filter). State per live key is O(1); last-
-    * writer-wins means late re-deliveries of older (ts, event_id)
+    * snapshot row (the fold's `end`) stamped with a monotone per-user
+    * `seq`, so the latest emission per user IS the current table state
+    * (delete state included — the dump consumer drops final-op-D keys
+    * exactly like batch j11's filter). State per live key is O(1);
+    * last-writer-wins means late re-deliveries of older (ts, event_id)
     * records are no-ops, the idempotence a CDC consumer needs. */
-  class CdcProcessor extends StatefulProcessor[Long, CdcIn, CdcOut] {
-    @transient private var state: ValueState[CdcState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[CdcState](
-        "cdc", Encoders.product[CdcState], TTLConfig.NONE)
-
-    private def opOf(eventId: Long): String =
-      if (eventId % 7 == 0) "D" else if (eventId % 7 < 3) "I" else "U"
-
-    override def handleInputRows(user: Long, rows: Iterator[CdcIn],
-        timerValues: TimerValues): Iterator[CdcOut] = {
-      var st = Option(state.get())
-        .getOrElse(CdcState(-1L, -1L, "", "", 0L, 0L, 0L, 0L))
-      rows.toArray.sortBy(r => (r.tsus, r.event_id)).foreach { r =>
-        val op = opOf(r.event_id)
-        st = st.copy(nOps = st.nOps + 1,
-          nDel = st.nDel + (if (op == "D") 1L else 0L))
-        if (r.tsus > st.ts || (r.tsus == st.ts && r.event_id > st.eid))
-          st = st.copy(ts = r.tsus, eid = r.event_id, op = op,
-            etype = r.event_type, cents = r.value_cents)
-      }
-      st = st.copy(seq = st.seq + 1)
-      state.update(st)
-      Iterator.single(CdcOut(user, st.op, st.etype, st.cents, st.ts,
-        st.nOps, st.nDel, st.seq))
-    }
-  }
-
   def cdcStreamTws(events: DataFrame)
       : Dataset[CdcOut] = {
     import events.sparkSession.implicits._
-    events
-      .selectExpr("user_id", "tsus", "event_id", "event_type",
-        "value_cents")
-      .as[CdcIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new CdcProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(events
+        .selectExpr("user_id", "tsus", "event_id", "event_type",
+          "value_cents")
+        .as[CdcIn])(_.user_id, r => (r.tsus, r.event_id),
+        CdcState(-1L, -1L, "", "", 0L, 0L, 0L, 0L))(
+      { (_, st0, r) =>
+        val op =
+          if (r.event_id % 7 == 0) "D" else if (r.event_id % 7 < 3) "I"
+          else "U"
+        val st = st0.copy(nOps = st0.nOps + 1,
+          nDel = st0.nDel + (if (op == "D") 1L else 0L))
+        (if (r.tsus > st.ts || (r.tsus == st.ts && r.event_id > st.eid))
+          st.copy(ts = r.tsus, eid = r.event_id, op = op,
+            etype = r.event_type, cents = r.value_cents)
+        else st, Nil)
+      },
+      { (user, st0) =>
+        val st = st0.copy(seq = st0.seq + 1)
+        (st, Some(CdcOut(user, st.op, st.etype, st.cents, st.ts, st.nOps,
+          st.nDel, st.seq)))
+      })
   }
 
   /** Deterministic ts-ordered multi-batch replay through
@@ -641,48 +487,26 @@ object TwsOps {
 
   /** j10's SCD Type-2 build as an online dimension maintainer: per-user
     * state holds only the OPEN version (value, version, valid_from,
-    * run length); a value change CLOSES the open interval — emitting
-    * the finished dimension row exactly once — and opens the next.
-    * Append-mode emissions are therefore precisely the closed rows of
-    * batch j10 (`is_current = false`), which is what the j13 parity
-    * row asserts; the open tail lives in state, O(1) per live key. */
-  class ScdProcessor extends StatefulProcessor[Long, ScdIn, ScdClosed] {
-    @transient private var state: ValueState[ScdState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ScdState](
-        "scd", Encoders.product[ScdState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[ScdIn],
-        timerValues: TimerValues): Iterator[ScdClosed] = {
-      var st = Option(state.get())
-      val out = Vector.newBuilder[ScdClosed]
-      rows.toArray.sortBy(r => (r.tsus, r.event_id)).foreach { r =>
-        st match {
-          case None =>
-            st = Some(ScdState(r.event_type, 1L, r.tsus, 1L))
-          case Some(cur) if cur.value == r.event_type =>
-            st = Some(cur.copy(nEvents = cur.nEvents + 1))
-          case Some(cur) =>
-            out += ScdClosed(user, cur.value, cur.version.toInt,
-              cur.validFrom, r.tsus, cur.nEvents)
-            st = Some(ScdState(r.event_type, cur.version + 1, r.tsus, 1L))
-        }
-      }
-      st.foreach(state.update)
-      out.result().iterator
-    }
-  }
-
+    * run length; version 0 before the first event); a value change
+    * CLOSES the open interval — emitting the finished dimension row
+    * exactly once — and opens the next. Append-mode emissions are
+    * therefore precisely the closed rows of batch j10
+    * (`is_current = false`), which is what the j13 parity row asserts;
+    * the open tail lives in state, O(1) per live key. */
   def scd2StreamTws(events: DataFrame)
       : Dataset[ScdClosed] = {
     import events.sparkSession.implicits._
-    events
-      .selectExpr("user_id", "tsus", "event_id", "event_type")
-      .as[ScdIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new ScdProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(events
+        .selectExpr("user_id", "tsus", "event_id", "event_type")
+        .as[ScdIn])(_.user_id, r => (r.tsus, r.event_id),
+        ScdState(null, 0L, 0L, 0L)) { (user, cur, r) =>
+      if (cur.version == 0L) (ScdState(r.event_type, 1L, r.tsus, 1L), None)
+      else if (cur.value == r.event_type)
+        (cur.copy(nEvents = cur.nEvents + 1), None)
+      else (ScdState(r.event_type, cur.version + 1, r.tsus, 1L),
+        Some(ScdClosed(user, cur.value, cur.version.toInt, cur.validFrom,
+          r.tsus, cur.nEvents)))
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay through
@@ -715,50 +539,29 @@ object TwsOps {
     * it falls outside the 7-day lookback, so does every earlier one.
     * Purchases emit immediately (lag_us = -1 when unattributed) and
     * are touch-transparent, exactly the batch window-max semantics
-    * (touch at the same microsecond as the conversion excluded). */
-  class AttributionProcessor
-      extends StatefulProcessor[Long, AttrIn, AttrHit] {
-    @transient private var last: ValueState[LastTouch] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[LastTouch](
-        "touch", Encoders.product[LastTouch], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[AttrIn],
-        timerValues: TimerValues): Iterator[AttrHit] = {
-      val week = 7L * 86400000000L
-      var t = Option(last.get())
-      val out = Vector.newBuilder[AttrHit]
-      rows.toArray.sortBy(r => (r.tsus, r.event_id)).foreach { r =>
-        r.event_type match {
-          case "click" | "view" =>
-            t = Some(LastTouch(r.tsus, r.event_id, r.event_type))
-            last.update(t.get)
-          case "purchase" =>
-            t match {
-              case Some(tc)
-                  if tc.tsus >= r.tsus - week && tc.tsus <= r.tsus - 1 =>
-                out += AttrHit(r.event_id, user, tc.event_type, r.cents,
-                  r.tsus - tc.tsus)
-              case _ =>
-                out += AttrHit(r.event_id, user, "unattributed", r.cents,
-                  -1L)
-            }
-          case _ => ()
-        }
-      }
-      out.result().iterator
-    }
-  }
-
+    * (touch at the same microsecond as the conversion excluded). A
+    * user with no touch yet holds one at `Long.MinValue`, outside every
+    * lookback. */
   def attributionStreamTws(events: DataFrame)
       : Dataset[AttrHit] = {
     import events.sparkSession.implicits._
-    events.selectExpr("user_id", "event_type", "tsus", "event_id", "cents")
-      .as[AttrIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessor,
-        TimeMode.None(), OutputMode.Append())
+    val week = 7L * DayUs
+    keyedFold(events
+        .selectExpr("user_id", "event_type", "tsus", "event_id", "cents")
+        .as[AttrIn])(_.user_id, r => (r.tsus, r.event_id),
+        LastTouch(Long.MinValue, -1L, null)) { (user, t, r) =>
+      r.event_type match {
+        case "click" | "view" =>
+          (LastTouch(r.tsus, r.event_id, r.event_type), None)
+        case "purchase" =>
+          (t, Some(
+            if (t.tsus >= r.tsus - week && t.tsus <= r.tsus - 1)
+              AttrHit(r.event_id, user, t.event_type, r.cents,
+                r.tsus - t.tsus)
+            else AttrHit(r.event_id, user, "unattributed", r.cents, -1L)))
+        case _ => (t, None)
+      }
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay through
@@ -797,41 +600,19 @@ object TwsOps {
     * aggregates the emissions into the island census that batch j16
     * must hash-match — stream ≡ batch island assignment, including
     * islands that SPAN batch boundaries. */
-  class IntervalProcessor(intervalUs: Long)
-      extends StatefulProcessor[Long, IntIn, IntHit] {
-    @transient private var state: ValueState[IntState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[IntState](
-        "island", Encoders.product[IntState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[IntIn],
-        timerValues: TimerValues): Iterator[IntHit] = {
-      var st = Option(state.get()).getOrElse(IntState(-1L, 0L))
-      val out = Vector.newBuilder[IntHit]
-      rows.toArray.sortBy(_.tsus).foreach { r =>
-        if (st.lastT < 0 || r.tsus != st.lastT) {
-          val island =
-            if (st.lastT < 0 || r.tsus - st.lastT > intervalUs)
-              st.island + 1
-            else st.island
-          out += IntHit(user, island, r.tsus)
-          st = IntState(r.tsus, island)
-        }
-      }
-      state.update(st)
-      out.result().iterator
-    }
-  }
-
   def intervalStreamTws(events: DataFrame,
       intervalUs: Long = 1800L * 1000000L): Dataset[IntHit] = {
     import events.sparkSession.implicits._
-    events.selectExpr("user_id", "tsus")
-      .as[IntIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new IntervalProcessor(intervalUs),
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(events.selectExpr("user_id", "tsus").as[IntIn])(
+        _.user_id, _.tsus, IntState(-1L, 0L)) { (user, st, r) =>
+      if (st.lastT >= 0 && r.tsus == st.lastT) (st, None)
+      else {
+        val island =
+          if (st.lastT < 0 || r.tsus - st.lastT > intervalUs) st.island + 1
+          else st.island
+        (IntState(r.tsus, island), Some(IntHit(user, island, r.tsus)))
+      }
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay of the events dir
@@ -853,7 +634,7 @@ object TwsOps {
   // ---- streaming EWMA (a35 = streaming a34) -------------------------
 
   case class EwmaIn(event_type: String, day: Long, x: Long)
-  case class EwmaState(ewma: Long)
+  case class EwmaState(ewma: Option[Long])
   case class EwmaHit(event_type: String, day: Long, cents: Long,
     ewma_cents: Long)
 
@@ -865,38 +646,14 @@ object TwsOps {
     * across batch seams, since the state persists. Rows within a
     * micro-batch are day-sorted per key (a day-ordered feed delivers
     * them adjacent anyway). */
-  class EwmaProcessor extends StatefulProcessor[String, EwmaIn, EwmaHit] {
-    @transient private var state: ValueState[EwmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[EwmaState](
-        "ewma", Encoders.product[EwmaState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[EwmaIn],
-        timerValues: TimerValues): Iterator[EwmaHit] = {
-      var st = Option(state.get())
-      val out = Vector.newBuilder[EwmaHit]
-      rows.toArray.sortBy(_.day).foreach { r =>
-        val e = st match {
-          case Some(p) => (r.x + 3 * p.ewma) / 4
-          case None => r.x
-        }
-        out += EwmaHit(key, r.day, r.x, e)
-        st = Some(EwmaState(e))
-      }
-      st.foreach(state.update)
-      out.result().iterator
-    }
-  }
-
   def ewmaStreamTws(daily: DataFrame)
       : Dataset[EwmaHit] = {
     import daily.sparkSession.implicits._
-    daily.selectExpr("event_type", "day", "x")
-      .as[EwmaIn]
-      .groupByKey(_.event_type)
-      .transformWithState(new EwmaProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(daily.selectExpr("event_type", "day", "x").as[EwmaIn])(
+        _.event_type, _.day, EwmaState(None)) { (key, st, r) =>
+      val e = st.ewma.fold(r.x)(p => (r.x + 3 * p) / 4)
+      (EwmaState(Some(e)), Some(EwmaHit(key, r.day, r.x, e)))
+    }
   }
 
   /** Deterministic day-ordered multi-batch replay of the per-type
@@ -925,39 +682,18 @@ object TwsOps {
     * emitted (m, ph) series is bit-identical to the batch prefix-window
     * fold — including across micro-batch seams, since the state
     * persists. Rows within a batch are day-sorted per key. */
-  class PhProcessor extends StatefulProcessor[String, PhIn, PhHit] {
-    @transient private var state: ValueState[PhState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PhState](
-        "ph", Encoders.product[PhState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[PhIn],
-        timerValues: TimerValues): Iterator[PhHit] = {
-      var st = Option(state.get())
-        .getOrElse(PhState(0L, 0L, 0L, Long.MaxValue))
-      val out = Vector.newBuilder[PhHit]
-      rows.toArray.sortBy(_.day).foreach { r =>
+  def phStreamTws(daily: DataFrame)
+      : Dataset[PhHit] = {
+    import daily.sparkSession.implicits._
+    keyedFold(daily.selectExpr("event_type", "day", "x").as[PhIn])(
+        _.event_type, _.day, PhState(0L, 0L, 0L, Long.MaxValue)) {
+      (key, st, r) =>
         val t = st.t + 1
         val sSum = st.s + r.x
         val m = st.m + (r.x * 1000000L - sSum * 1000000L / t)
         val minm = math.min(st.minm, m)
-        out += PhHit(key, r.day, r.x, m, m - minm)
-        st = PhState(t, sSum, m, minm)
-      }
-      state.update(st)
-      out.result().iterator
+        (PhState(t, sSum, m, minm), Some(PhHit(key, r.day, r.x, m, m - minm)))
     }
-  }
-
-  def phStreamTws(daily: DataFrame)
-      : Dataset[PhHit] = {
-    import daily.sparkSession.implicits._
-    daily.selectExpr("event_type", "day", "x")
-      .as[PhIn]
-      .groupByKey(_.event_type)
-      .transformWithState(new PhProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   /** Deterministic day-ordered multi-batch replay of the per-type
@@ -977,7 +713,6 @@ object TwsOps {
 
   case class MedIn(user_id: Long, tsus: Long, event_id: Long,
     cents: Long)
-  case class MedState(win: Seq[Long])
   case class MedHit(event_id: Long, user_id: Long, n_win: Int,
     med_cents: Long)
 
@@ -988,36 +723,18 @@ object TwsOps {
     * batch fold; a (t, event_id)-ordered feed keeps per-user rows
     * adjacent, and rows within a micro-batch sort on the same total
     * key, so emissions are bit-identical to batch w25 across seams. */
-  class MedianProcessor extends StatefulProcessor[Long, MedIn, MedHit] {
-    @transient private var state: ValueState[MedState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[MedState](
-        "win", Encoders.product[MedState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[MedIn],
-        timerValues: TimerValues): Iterator[MedHit] = {
-      var win = Option(state.get()).map(_.win).getOrElse(Seq.empty)
-      val out = Vector.newBuilder[MedHit]
-      rows.toArray.sortBy(r => (r.tsus, r.event_id)).foreach { r =>
-        win = (win :+ r.cents).takeRight(5)
-        val sortedW = win.sorted
-        out += MedHit(r.event_id, user, win.length,
-          sortedW((win.length + 1) / 2 - 1))
-      }
-      state.update(MedState(win))
-      out.result().iterator
-    }
-  }
-
   def medianStreamTws(rows: DataFrame)
       : Dataset[MedHit] = {
     import rows.sparkSession.implicits._
-    rows.selectExpr("user_id", "tsus", "event_id", "cents")
-      .as[MedIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new MedianProcessor,
-        TimeMode.None(), OutputMode.Append())
+    implicit val winEncoder: Encoder[Vector[Long]] =
+      Encoders.kryo[Vector[Long]]
+    keyedFold(rows.selectExpr("user_id", "tsus", "event_id", "cents")
+        .as[MedIn])(_.user_id, r => (r.tsus, r.event_id),
+        Vector.empty[Long]) { (user, win0, r) =>
+      val win = (win0 :+ r.cents).takeRight(5)
+      (win, Some(MedHit(r.event_id, user, win.length,
+        win.sorted.apply((win.length + 1) / 2 - 1))))
+    }
   }
 
   /** Deterministic ts-ordered multi-batch replay of the purchase feed
@@ -1054,34 +771,14 @@ object TwsOps {
     * contract every parity replay uses). The m11 parity row proves
     * these streaming decisions equal batch m10's min-doc-per-hash
     * derivation exactly. */
-  class CasProcessor extends StatefulProcessor[String, CasIn, CasOut] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(h: String, rows: Iterator[CasIn],
-        timerValues: TimerValues): Iterator[CasOut] = {
-      val out = Vector.newBuilder[CasOut]
-      rows.toArray.sortBy(_.seq).foreach { r =>
-        val first = !seen.exists()
-        if (first) seen.update(true)
-        out += CasOut(r.doc_id, r.format, first,
-          if (first) r.n_bytes else 0L)
-      }
-      out.result().iterator
-    }
-  }
-
   def casStream(assets: DataFrame)
       : Dataset[CasOut] = {
     import assets.sparkSession.implicits._
-    assets.selectExpr("h", "doc_id", "format", "n_bytes", "seq")
-      .as[CasIn]
-      .groupByKey(_.h)
-      .transformWithState(new CasProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(assets.selectExpr("h", "doc_id", "format", "n_bytes", "seq")
+        .as[CasIn])(_.h, _.seq, false) { (_, seen, r) =>
+      (true, Some(CasOut(r.doc_id, r.format, !seen,
+        if (seen) 0L else r.n_bytes)))
+    }
   }
 
   /** Deterministic doc_id-ordered multi-batch replay of the media lake
@@ -1110,7 +807,7 @@ object TwsOps {
     len: Long, hash: Long, stored: Boolean, bytes_written: Long)
 
   /** CHUNK-store ingest decision as keyed state — the chunk-level
-    * refinement of [[CasProcessor]]: one boolean per distinct
+    * refinement of [[casStream]]: one boolean per distinct
     * (format, chunk-hash); the first arrival (in (seq, off) replay
     * order) writes its bytes, every later instance — same doc, same
     * batch or any later batch — is a dedup hit. This is what an
@@ -1126,36 +823,15 @@ object TwsOps {
     * true, not collision-probabilistic). The m13 parity row proves
     * the cross-batch chunk state equals batch first-instance
     * accounting exactly. */
-  class ChunkStoreProcessor
-      extends StatefulProcessor[(String, Long, Long), ChunkIn, ChunkOut] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(h: (String, Long, Long),
-        rows: Iterator[ChunkIn],
-        timerValues: TimerValues): Iterator[ChunkOut] = {
-      val out = Vector.newBuilder[ChunkOut]
-      rows.toArray.sortBy(r => (r.seq, r.off)).foreach { r =>
-        val first = !seen.exists()
-        if (first) seen.update(true)
-        out += ChunkOut(r.doc_id, r.format, r.off, r.len, r.h, first,
-          if (first) r.len else 0L)
-      }
-      out.result().iterator
-    }
-  }
-
   def chunkStream(chunks: DataFrame)
       : Dataset[ChunkOut] = {
     import chunks.sparkSession.implicits._
-    chunks.selectExpr("h", "doc_id", "format", "len", "off", "seq")
-      .as[ChunkIn]
-      .groupByKey(r => (r.format, r.h, r.len))
-      .transformWithState(new ChunkStoreProcessor,
-        TimeMode.None(), OutputMode.Append())
+    keyedFold(chunks.selectExpr("h", "doc_id", "format", "len", "off", "seq")
+        .as[ChunkIn])(r => (r.format, r.h, r.len), r => (r.seq, r.off),
+        false) { (_, seen, r) =>
+      (true, Some(ChunkOut(r.doc_id, r.format, r.off, r.len, r.h, !seen,
+        if (seen) 0L else r.len)))
+    }
   }
 
   /** Deterministic (doc_id, off)-ordered multi-batch replay of the CDC

@@ -102,11 +102,6 @@ class AdviceR9Spec extends SparkSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
     val mem = MemoryStream[(Long, Long, String, Long, Long, Long)]
     val name = "advice_r9_chunks"
     val q = TwsOps.chunkStream(
@@ -123,13 +118,7 @@ class AdviceR9Spec extends SparkSuite {
         q.processAllAvailable()
         spark.table(name).as[TwsOps.ChunkOut].collect()
           .map(c => c.doc_id -> c).toMap
-      } finally {
-        q.stop()
-        prior match {
-          case Some(v) => spark.conf.set(provKey, v)
-          case None => spark.conf.unset(provKey)
-        }
-      }
+      } finally q.stop()
     assert(out(1L).stored && out(1L).bytes_written == 100L)
     assert(out(2L).stored && out(2L).bytes_written == 200L)
     assert(!out(3L).stored && out(3L).bytes_written == 0L)

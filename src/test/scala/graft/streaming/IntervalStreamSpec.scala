@@ -41,10 +41,6 @@ class IntervalStreamSpec extends SparkSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.sqlContext
     val L = 1800L * 1000000L
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
     val mem = MemoryStream[(Long, Long)]
     val q = TwsOps.intervalStreamTws(
         mem.toDS().toDF("user_id", "tsus"))
@@ -57,12 +53,6 @@ class IntervalStreamSpec extends SparkSuite {
       val rows = spark.table("isl_span")
         .select("island").distinct().count()
       assert(rows == 1L, s"island split across batches: $rows ids")
-    } finally {
-      q.stop()
-      prior match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    } finally q.stop()
   }
 }
